@@ -135,27 +135,134 @@ object Dedup extends DedupPassages with DedupLines {
       seed: Long = 42L): DataFrame = {
     val docs = df.select(col(idCol), col(textCol))
     val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val banded =
-      minhashBandKeys(docs, textCol, idCol, nh, nb, seed)
-    ngramJaccard(docs, bandedCandidates(banded, idCol),
+    val banded = minhashBandKeys(docs, textCol, idCol, nh, nb, seed)
+    ngramJaccard(docs, bandedSelfJoin(banded, idCol).distinct(),
       textCol = textCol, idCol = idCol)
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** The banded self-join candidate pairs `(id_a < id_b)` shared by
-    * [[minhashPairs]] and the star-first compositions' survivor pass.
-    * Self-join via dataset aliases, renaming only AFTER the join, so
-    * the two inputs are canonically identical subtrees and the band-
-    * key pipeline computes ONCE (ReusedExchange — the
-    * [[simhashCandidates]] reuse note applies verbatim). */
-  private def bandedCandidates(banded: DataFrame, idCol: String): DataFrame = {
-    val x = banded.alias("x")
-    val y = banded.alias("y")
-    x.join(y, col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
+  // ------------------------------------------------ shared pipeline stages
+  //
+  // Every near-dup family is candidate → verify → keep. The stages below
+  // are the one copy of each step; a modality passes its band-key frame
+  // (`(idCol, bk, …)` rows) and its exact verifier.
+
+  /** The banded self-join: bucket-mate pairs `(id_a < id_b)` of a
+    * band-key frame, plus `payload` columns over its `x`/`y` sides;
+    * `probe` adds a bucket-mate condition (multiprobe: one side exact).
+    * Self-join via dataset aliases, renaming only AFTER the join: the
+    * two inputs are then canonically identical subtrees, so the band-
+    * key pipeline (ending in its explicit exchange on `bk`) computes
+    * ONCE and the second side is a ReusedExchange. Renaming before the
+    * join breaks that match and silently doubles the pipeline; a naive
+    * unaliased a("bk") === b("bk") is worse still — it resolves to a
+    * trivially-true self comparison and cross-joins. */
+  private def bandedSelfJoin(banded: DataFrame, idCol: String,
+      probe: Option[Column] = None,
+      payload: Seq[Column] = Nil): DataFrame = {
+    val cond = (Seq(col("x.bk") === col("y.bk")) ++ probe :+
+      (col(s"x.$idCol") < col(s"y.$idCol"))).reduce(_ && _)
+    banded.alias("x").join(banded.alias("y"), cond)
+      .select(Seq(col(s"x.$idCol").as("id_a"),
+        col(s"y.$idCol").as("id_b")) ++ payload: _*)
   }
+
+  /** Batch×history candidates `(batch id_a, history id_b)`: the batch
+    * band keys equi-joined to the history's — a persisted bucketed
+    * `histBands` table plans with no history-side Exchange. */
+  private def crossCandidates(batchBands: DataFrame, histBands: DataFrame,
+      idCol: String): DataFrame =
+    batchBands.alias("x")
+      .join(histBands.select(col(idCol), col("bk")).alias("y"),
+        col("x.bk") === col("y.bk"))
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+
+  /** The batch×history incremental split under [[minhashIncremental]]
+    * and [[embeddingIncremental]]: cross candidates ∪ within-batch
+    * self-join, ONE `verify` pass (candidate pairs → the verified
+    * ones), then the pair kinds split by id_b (ids are globally
+    * unique): id_b in the batch ⇒ within pair, its id_b loses (greedy
+    * smaller-id-wins); id_b in history ⇒ cross pair, its batch-side
+    * id_a loses. Returns `newRows` minus both loser sets. Both joins
+    * consume the SAME batch band-key subtree (ReusedExchange computes
+    * the batch signatures once). */
+  private def incrementalSurvivors(newRows: DataFrame, batchIds: DataFrame,
+      batchBands: DataFrame, histBands: DataFrame, idCol: String)(
+      verify: DataFrame => DataFrame): DataFrame = {
+    val verified = verify(crossCandidates(batchBands, histBands, idCol)
+      .unionByName(bandedSelfJoin(batchBands, idCol)).distinct())
+    val batchIdsB = batchIds.select(col(idCol).as("id_b"))
+    val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
+      .select(col("id_b").as(idCol))
+    val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
+      .select(col("id_a").as(idCol))
+    newRows.join(withinLosers.union(crossLosers).distinct(),
+      Seq(idCol), "left_anti")
+  }
+
+  /** A persisted `histBands` table is only comparable under the exact
+    * knobs that built it, so it requires them explicit. */
+  private def requireExplicitKnobs(histBands: Option[DataFrame],
+      explicit: Boolean, knobs: String): Unit =
+    require(histBands.isEmpty || explicit,
+      s"histBands requires explicit $knobs — the persisted keys are " +
+        "only comparable under the exact knobs that built them")
+
+  /** The star window over a band-key frame: per bucket `bk`, each row's
+    * prefix MINIMUM and immediate PREDECESSOR of `link` (ordered by
+    * id) from ONE sorted window pass, no self-join — exploded into
+    * `carry` + one `linkAs` row each. The first row of a bucket links
+    * nowhere (both null); a cross-band 64-bit key collision can put
+    * the same id in a bucket twice — never self-link (`linkId` vs
+    * `selfId`). */
+  private def starWindow(banded: DataFrame, idCol: String, link: Column,
+      carry: Seq[Column], linkAs: String, linkId: Column,
+      selfId: Column): DataFrame = {
+    val w = Window.partitionBy(col("bk")).orderBy(col(idCol))
+    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
+    banded
+      .withColumn("mn", min(link).over(wPrev))
+      .withColumn("pv", lag(link, 1).over(w))
+      .select(carry :+ explode(array(col("mn"), col("pv"))).as(linkAs): _*)
+      .filter(col(linkAs).isNotNull && linkId =!= selfId)
+  }
+
+  /** Keep rule of every star/pair dedup: the distinct id_b side of an
+    * `(id_a < id_b)` link frame — the docs with a link to a smaller id. */
+  private def linkedIds(links: DataFrame, idCol: String): DataFrame =
+    links.select(col("id_b").as(idCol)).distinct()
+
+  /** `df` minus [[linkedIds]] of `links` (keep-min over the links). */
+  private def dropLinked(df: DataFrame, links: DataFrame,
+      idCol: String): DataFrame =
+    df.join(linkedIds(links, idCol), Seq(idCol), "left_anti")
+
+  /** Keep rule over `(id, component)` labels: one survivor per
+    * component — the smallest id, or with `scoreCol` the best-scoring
+    * member (score desc, ties to the smaller id; one candidate-bounded
+    * window over the cluster members, WindowGroupLimit shape — the
+    * member set is pairs-bounded, never corpus-bounded). */
+  private def keepPerComponent(df: DataFrame, comps: DataFrame,
+      idCol: String, scoreCol: Option[String]): DataFrame = {
+    val losers = scoreCol match {
+      case None => comps.filter(col("id") =!= col("component"))
+      case Some(sc) =>
+        val w = Window.partitionBy(col("component"))
+          .orderBy(col("_score").desc, col("id"))
+        comps.join(df.select(col(idCol).as("id"), col(sc).as("_score")), "id")
+          .withColumn("_rk", row_number().over(w))
+          .filter(col("_rk") =!= 1)
+    }
+    df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+  }
+
+  /** Collapse survivors' candidate pairs: `banded` minus the `drops`
+    * ids, banded self-join, distinct — the star-first compositions'
+    * survivor pass. */
+  private def survivorPairs(banded: DataFrame, drops: DataFrame,
+      idCol: String): DataFrame =
+    bandedSelfJoin(banded.join(drops, Seq(idCol), "left_anti"), idCol)
+      .distinct()
 
   /** The `(numHashes, bands)` auto-derivation for the MinHash family —
     * the Jaccard twin of `lshKnobs` (embedding side), opt-in by passing
@@ -228,34 +335,50 @@ object Dedup extends DedupPassages with DedupLines {
       idCol: String = "doc_id",
       numHashes: Int = 64,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
-    val docs = df.select(col(idCol), col(textCol))
-    // codegen'd per-row signature: one string hash per shingle +
-    // numHashes long-mixes into a reused accumulator — bit-identical
-    // to (and ~an order of magnitude cheaper than) the interpreted
-    // aggregate/zip_with/xxhash64 fold it replaces; min() is
-    // duplicate-insensitive, so set semantics still cost nothing
-    val sigs = shingled(docs, textCol, idCol)
-      .select(col(idCol),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
-    // band key = hash of (band index, the band's signature rows);
-    // sig is an attribute here, so element_at reads are O(1) — no
-    // outer-expression duplication into the banding projection
-    sigs.select(col(idCol),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
+      seed: Long = 42L): DataFrame =
+    minhashBands(minhashSigs(df.select(col(idCol), col(textCol)), textCol,
+        idCol, numHashes, seed), Seq(idCol), numHashes, bands)
       // explicit exchange on the join key: a self-join's two sides are
       // canonically identical subtrees ending in this shuffle, so
       // ReusedExchange computes the signature pipeline ONCE and replays
       // the (compact) banded rows for both sides — without it each side
       // re-scans and re-hashes the corpus
       .repartition(col("bk"))
+
+  /** The per-doc `(idCol, sh, sig)` minhash projection from ONE
+    * tokenization: the sorted-distinct shingle set (the verification
+    * payload — sorted so the per-pair intersect is a zero-allocation
+    * merge scan, the SortedIntersectCount kernel; Jaccard is set
+    * arithmetic, so sorting changes nothing the oracle sees) and the
+    * codegen'd per-row signature (one string hash per shingle +
+    * numHashes long-mixes into a reused accumulator — bit-identical to,
+    * and ~an order of magnitude cheaper than, the interpreted
+    * aggregate/zip_with/xxhash64 fold it replaces; min() is
+    * duplicate-insensitive, so set semantics cost nothing). Consumers
+    * that drop `sh` never compute it (column pruning). */
+  private def minhashSigs(docs: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, seed: Long): DataFrame =
+    shingled(docs, textCol, idCol)
+      .select(col(idCol),
+        array_sort(array_distinct(col("shingles"))).as("sh"),
+        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
+
+  /** The band-key explode over a [[minhashSigs]] frame: `keep` columns
+    * plus one `bk` row per band, bk = hash of (band index, the band's
+    * signature rows). `sig` is an attribute here, so element_at reads
+    * are O(1) — no outer-expression duplication into the banding
+    * projection. */
+  private def minhashBands(sigs: DataFrame, keep: Seq[String],
+      numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0,
+      s"bands ($bands) must divide numHashes ($numHashes)")
+    val rowsPerBand = numHashes / bands
+    sigs.select(keep.map(col) :+
+      explode(array((0 until bands).map { b =>
+        val rows = (0 until rowsPerBand).map(r =>
+          element_at(col("sig"), b * rowsPerBand + r + 1))
+        xxhash64(lit(b) +: rows: _*)
+      }: _*)).as("bk"): _*)
   }
 
   /** Incremental NEAR-dup dedup — the fuzzy twin of
@@ -289,45 +412,32 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double = 0.5,
       seed: Long = 42L,
       histBands: Option[DataFrame] = None): DataFrame = {
-    require(histBands.isEmpty || (numHashes > 0 && bands > 0),
-      "histBands requires explicit numHashes and bands — the persisted " +
-        "keys are only comparable under the exact knobs that built them")
-    // auto-knobs (either 0) derive from the HISTORY count — the big
-    // side bounds spurious-candidate mass, as in embeddingIncremental
-    val (nh, nb) = minhashKnobs(
-      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
-    val batchBands = minhashBandKeys(
-      newDocs, textCol, idCol, nh, nb, seed)
-    val hb = histBands.getOrElse(minhashBandKeys(
-      histDocs, textCol, idCol, nh, nb, seed))
-    // both candidate joins consume the SAME batch band-key subtree
-    // (ReusedExchange computes the batch signatures once); a naive
-    // minhashPairs(newDocs) call here would rebuild the whole pipeline
-    val cross = batchBands.alias("x")
-      .join(hb.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val within = batchBands.alias("x")
-      .join(batchBands.alias("y"), col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+    val (batchBands, hb) = minhashIncrementalBands(newDocs, histDocs,
+      textCol, idCol, numHashes, bands, minJaccard, seed, histBands)
     val allDocs = newDocs.select(col(idCol), col(textCol))
       .unionByName(histDocs.select(col(idCol), col(textCol)))
-    // ONE verification pass over the unioned candidate set. Pair kinds
-    // are distinguished by id_b (ids are globally unique): id_b in the
-    // batch ⇒ within pair, its id_b loses (greedy smaller-id-wins);
-    // id_b in history ⇒ cross pair, its batch-side id_a loses
-    val verified = ngramJaccard(allDocs,
-        cross.unionByName(within).distinct(), textCol = textCol,
-        idCol = idCol)
-      .filter(col("jaccard") >= minJaccard)
-    val batchIdsB = newDocs.select(col(idCol).as("id_b"))
-    val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
-      .select(col("id_b").as(idCol))
-    val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
-      .select(col("id_a").as(idCol))
-    newDocs.join(withinLosers.union(crossLosers).distinct(),
-      Seq(idCol), "left_anti")
+    incrementalSurvivors(newDocs, newDocs, batchBands, hb, idCol) { pairs =>
+      ngramJaccard(allDocs, pairs, textCol = textCol, idCol = idCol)
+        .filter(col("jaccard") >= minJaccard)
+    }
+  }
+
+  /** The batch and history band keys of the minhash incremental pair
+    * ([[minhashIncremental]], [[minhashIncrementalStarFirst]]). Auto-
+    * knobs (either 0) derive from the HISTORY count — the big side
+    * bounds spurious-candidate mass, as in embeddingIncremental; a
+    * persisted `histBands` replaces the history-side derivation. */
+  private def minhashIncrementalBands(newDocs: DataFrame,
+      histDocs: DataFrame, textCol: String, idCol: String, numHashes: Int,
+      bands: Int, minJaccard: Double, seed: Long,
+      histBands: Option[DataFrame]): (DataFrame, DataFrame) = {
+    requireExplicitKnobs(histBands, numHashes > 0 && bands > 0,
+      "numHashes and bands")
+    val (nh, nb) = minhashKnobs(
+      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
+    (minhashBandKeys(newDocs, textCol, idCol, nh, nb, seed),
+      histBands.getOrElse(
+        minhashBandKeys(histDocs, textCol, idCol, nh, nb, seed)))
   }
 
   /** Word n-grams with the STRICT short-doc fallback: a doc under n
@@ -370,26 +480,11 @@ object Dedup extends DedupPassages with DedupLines {
       idCol: String = "doc_id",
       numHashes: Int = 64,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
+      seed: Long = 42L): DataFrame =
     // sh is SORTED-distinct (r16): the streaming keeper's per-pair
-    // verification is then a zero-allocation merge scan (the
-    // SortedIntersectCount kernel) instead of a per-pair hash set —
-    // Jaccard is set arithmetic, so sorting changes nothing the
-    // oracle sees
-    val sigs = shingled(docs.select(col(idCol), col(textCol)), textCol, idCol)
-      .select(col(idCol),
-        array_sort(array_distinct(col("shingles"))).as("sh"),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
-    sigs.select(col(idCol), col("sh"),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
-  }
+    // verification is then a zero-allocation merge scan
+    minhashBands(minhashSigs(docs.select(col(idCol), col(textCol)),
+      textCol, idCol, numHashes, seed), Seq(idCol, "sh"), numHashes, bands)
 
   /** MLlib MinHashLSH variant (HashingTF sparse vectors +
     * approxSimilarityJoin), kept as the recall cross-check for
@@ -422,11 +517,9 @@ object Dedup extends DedupPassages with DedupLines {
     * smaller id (greedy single-pass suppression — the standard
     * at-scale approximation of connected-component dedup). */
   def minhash(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame = {
-    val losers = minhashPairs(df, textCol, idCol, minJaccard = minJaccard)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame =
+    dropLinked(df, minhashPairs(df, textCol, idCol, minJaccard = minJaccard),
+      idCol)
 
   /** Connected-component labels over an undirected `(id_a, id_b)` edge
     * frame: every node is labeled with the SMALLEST id reachable from
@@ -605,8 +698,6 @@ object Dedup extends DedupPassages with DedupLines {
       iter += 1
     }
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-star] converged=$converged after $iter rounds")
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds — " +
@@ -719,9 +810,6 @@ object Dedup extends DedupPassages with DedupLines {
     val conf = spark.conf
     val prevParts = conf.get("spark.sql.shuffle.partitions")
     val p = math.max(1, materialized.rdd.getNumPartitions)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-loop] materialized partitions p=$p " +
-        s"(session shuffle.partitions=$prevParts)")
     try {
       conf.set("spark.sql.shuffle.partitions",
         math.min(p, spark.sparkContext.defaultParallelism).toString)
@@ -736,13 +824,9 @@ object Dedup extends DedupPassages with DedupLines {
     * alternative to [[minhash]]'s greedy suppression (keeps exactly one
     * doc per near-dup CLUSTER, even through chains A~B~C where A≁C). */
   def minhashConnected(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame = {
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, minJaccard = minJaccard))
-    val losers = comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame =
+    keepPerComponent(df, connectedComponents(
+      minhashPairs(df, textCol, idCol, minJaccard = minJaccard)), idCol, None)
 
   /** [[minhashConnected]] keeping the BEST-scoring member of each
     * cluster instead of the smallest id — what a production dedup
@@ -757,98 +841,37 @@ object Dedup extends DedupPassages with DedupLines {
       scoreCol: String,
       textCol: String = "text",
       idCol: String = "doc_id",
-      minJaccard: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, minJaccard = minJaccard))
-    val members = comps
-      .join(df.select(col(idCol).as("id"), col(scoreCol).as("_score")),
-        "id")
-    val w = Window.partitionBy(col("component"))
-      .orderBy(col("_score").desc, col("id"))
-    val losers = members
-      .withColumn("_rk", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rk") =!= 1)
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      minJaccard: Double = 0.5): DataFrame =
+    keepPerComponent(df, connectedComponents(
+        minhashPairs(df, textCol, idCol, minJaccard = minJaccard)),
+      idCol, Some(scoreCol))
 
   // --------------------------------------------------------- minhash star
 
   /** One-pass per-doc minhash BASE (r15, the shared-shingle fix under
-    * the r14 verdict's top item): the sorted-distinct shingle set (the
-    * verification payload) and the minhash signature (the banding
-    * input) from a SINGLE tokenization, lazily localCheckpoint'ed so
-    * banding, the star-collapse verify and the survivor-pair verify
-    * all read the same materialized blocks — the previous shape
-    * re-tokenized the corpus once per stage (3× on a high-duplication
-    * corpus where the collapse candidates approach the corpus).
-    * Signature arithmetic is unchanged (min over a multiset == min
-    * over its set), so band keys — and every oracle row — are
-    * bit-identical. Blocks are corpus-token-scale: MEMORY_AND_DISK
-    * spill bounds them at scale, and the alternative is paying the
-    * tokenization per consumer. */
-  private def minhashBase(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      numHashes: Int,
-      seed: Long): DataFrame =
-    shingled(docs, textCol, idCol)
-      .select(col(idCol),
-        array_sort(array_distinct(col("shingles"))).as("sh"),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
+    * the r14 verdict's top item) behind every star-first composition:
+    * knobs ([[minhashKnobs]] over the corpus count), then the
+    * [[minhashSigs]] frame from a SINGLE tokenization, lazily
+    * localCheckpoint'ed so banding, the star-collapse verify and the
+    * survivor-pair verify all read the same materialized blocks — the
+    * previous shape re-tokenized the corpus once per stage (3× on a
+    * high-duplication corpus where the collapse candidates approach the
+    * corpus). Returns the `(idCol, sh)` verification frame and the
+    * band keys (same explicit exchange on `bk` as [[minhashBandKeys]],
+    * the self-join ReusedExchange contract). Signature arithmetic is
+    * unchanged (min over a multiset == min over its set), so band keys
+    * — and every oracle row — are bit-identical. Blocks are
+    * corpus-token-scale: MEMORY_AND_DISK spill bounds them at scale,
+    * and the alternative is paying the tokenization per consumer. */
+  private def minhashBase(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, bands: Int, minJaccard: Double,
+      seed: Long): (DataFrame, DataFrame) = {
+    val docs = df.select(col(idCol), col(textCol))
+    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
+    val base = minhashSigs(docs, textCol, idCol, nh, seed)
       .localCheckpoint(false)
-
-  /** [[minhashBandKeys]]'s banding stage over a [[minhashBase]] frame —
-    * same band-key derivation from the signature column, same explicit
-    * exchange on `bk` (the self-join ReusedExchange contract). */
-  private def bandKeysFromSigs(
-      base: DataFrame,
-      idCol: String,
-      numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
-    base.select(col(idCol),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
-      .repartition(col("bk"))
-  }
-
-  /** Threshold-aware verification over a shared `(idCol, sh)` frame:
-    * [[jaccardOverShingleFrame]] with (a) an EXACT size prescreen —
-    * J = I/(|A|+|B|−I) with I ≤ min(|A|,|B|) gives J ≤ min/max, so a
-    * pair failing `min ≥ τ·max` cannot qualify and skips the merge
-    * scan entirely (on a near-identical-replica collapse at τ = 0.95
-    * this discards every coincidental bucket-mate for two size reads)
-    * — and (b) the `jaccard ≥ τ` filter fused in, so callers get
-    * exactly the qualifying pairs. Never drops a qualifying pair:
-    * the prescreen is an upper bound, not a heuristic. */
-  private def verifiedAtLeast(
-      shingles: DataFrame,
-      pairs: DataFrame,
-      idCol: String,
-      minJaccard: Double): DataFrame = {
-    val a = shingles.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val b = shingles.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .filter(least(size(col("sh_a")), size(col("sh_b"))).cast("double")
-        >= lit(minJaccard) *
-          greatest(size(col("sh_a")), size(col("sh_b"))))
-      .withColumn("inter",
-        graft.functions.SortedIntersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("uni",
-        size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      .withColumn("jaccard",
-        when(col("uni") === 0, 0.0)
-          .otherwise(col("inter").cast("double") / col("uni")))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
+    (base.select(col(idCol), col("sh")),
+      minhashBands(base, Seq(idCol), nh, nb).repartition(col("bk")))
   }
 
   /** STAR-reduced MinHash linking — the Jaccard twin of
@@ -888,12 +911,10 @@ object Dedup extends DedupPassages with DedupLines {
       bands: Int = 16,
       minJaccard: Double = 0.5,
       seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    verifiedAtLeast(base.select(col(idCol), col("sh")),
-      minhashStarFromBandKeys(bandKeysFromSigs(base, idCol, nh, nb), idCol),
-      idCol, minJaccard)
+    val (sh, banded) = minhashBase(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed)
+    jaccardOverShingleFrame(sh, minhashStarFromBandKeys(banded, idCol),
+      idCol, Some(minJaccard))
   }
 
   /** The UNVERIFIED star candidate links `(id_a < id_b)` from a
@@ -910,21 +931,11 @@ object Dedup extends DedupPassages with DedupLines {
     * candidate, not a confirmed near-dup. */
   def minhashStarFromBandKeys(
       banded: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(col("bk")).orderBy(col(idCol))
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    banded
-      .withColumn("mn", min(col(idCol)).over(wPrev))
-      .withColumn("pv", lag(col(idCol), 1).over(w))
-      .select(col(idCol).as("id_b"),
-        explode(array(col("mn"), col("pv"))).as("id_a"))
-      // first row of a bucket links nowhere (both null); a cross-band
-      // 64-bit key collision can put the same id in a bucket twice —
-      // never self-link
-      .filter(col("id_a").isNotNull && col("id_a") =!= col("id_b"))
+      idCol: String = "doc_id"): DataFrame =
+    starWindow(banded, idCol, col(idCol), Seq(col(idCol).as("id_b")),
+        "id_a", col("id_a"), col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-  }
 
   /** Keep-min STAR COLLAPSE — [[minhashStar]]'s verified links applied
     * as a dedup: drops every doc with a link to a SMALLER id at
@@ -941,10 +952,9 @@ object Dedup extends DedupPassages with DedupLines {
       bands: Int = 16,
       minJaccard: Double = 0.5,
       seed: Long = 42L): DataFrame =
-    df.join(
-      minhashStar(df, textCol, idCol, numHashes, bands, minJaccard, seed)
-        .select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    dropLinked(df,
+      minhashStar(df, textCol, idCol, numHashes, bands, minJaccard, seed),
+      idCol)
 
   /** The PRODUCTION minhash pair relation (the [[simhashPairsStarFirst]]
     * recipe on the Jaccard side): star-collapse the near-identical
@@ -973,18 +983,16 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double = 0.5,
       collapseJaccard: Double = 0.8,
       seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
     // ONE tokenization for the whole composition (r15): the base frame
     // feeds banding, the collapse verify and the final verify
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val sh = base.select(col(idCol), col("sh"))
+    val (sh, banded) = minhashBase(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed)
     // cut on the survivor candidates: bounds the plan tree at the
     // collapse boundary (PlanAuditSpec audits the pre-cut frame below)
-    verifiedAtLeast(sh,
-      survivorCandidatesFromBase(base, idCol, nh, nb, collapseJaccard)
+    jaccardOverShingleFrame(sh,
+      survivorCandidatesFromBase(sh, banded, idCol, collapseJaccard)
         .localCheckpoint(false),
-      idCol, minJaccard)
+      idCol, Some(minJaccard))
   }
 
   /** The survivor candidate pairs [[minhashPairsStarFirst]] verifies —
@@ -1002,22 +1010,16 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double,
       collapseJaccard: Double,
       seed: Long): DataFrame = {
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    survivorCandidatesFromBase(
-      minhashBase(docs, textCol, idCol, nh, seed),
-      idCol, nh, nb, collapseJaccard)
+    val (sh, banded) = minhashBase(docs, textCol, idCol, numHashes, bands,
+      minJaccard, seed)
+    survivorCandidatesFromBase(sh, banded, idCol, collapseJaccard)
   }
 
   /** [[minhashSurvivorCandidates]] over an already-built
-    * [[minhashBase]] frame — the shape [[minhashPairsStarFirst]]
-    * composes so its final verify shares the SAME base blocks. */
-  private def survivorCandidatesFromBase(
-      base: DataFrame,
-      idCol: String,
-      numHashes: Int,
-      bands: Int,
-      collapseJaccard: Double): DataFrame = {
-    val banded = bandKeysFromSigs(base, idCol, numHashes, bands)
+    * [[minhashBase]] — the shape [[minhashPairsStarFirst]] composes so
+    * its final verify shares the SAME base blocks. */
+  private def survivorCandidatesFromBase(sh: DataFrame, banded: DataFrame,
+      idCol: String, collapseJaccard: Double): DataFrame = {
     // LINEAGE CUT at the collapse boundary: without it the drop-id
     // frame embeds the banded subtree into every survivor-pass
     // reference — a multiply-nested plan Catalyst chews minutes of
@@ -1027,48 +1029,48 @@ object Dedup extends DedupPassages with DedupLines {
     // connectedComponents label precedent) — and the survivor pass
     // plans against the leaf. Execution is unchanged: banded still
     // ReusedExchanges across the pair self-join.
-    val drops = verifiedAtLeast(base.select(col(idCol), col("sh")),
-        minhashStarFromBandKeys(banded, idCol), idCol, collapseJaccard)
-      .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint(false)
-    val survBanded = banded.join(drops, Seq(idCol), "left_anti")
-    bandedCandidates(survBanded, idCol)
+    val drops = linkedIds(jaccardOverShingleFrame(sh,
+        minhashStarFromBandKeys(banded, idCol), idCol, Some(collapseJaccard)),
+      idCol).localCheckpoint(false)
+    survivorPairs(banded, drops, idCol)
   }
 
-  /** The star-first EDGE set cluster dedup runs components over:
-    * verified star links (the collapse-grade edges, linear) UNION the
-    * banded pairs among collapse survivors — both at `minJaccard`, so
+  /** The star-first cluster components behind
+    * [[minhashConnectedStarFirst]], [[minhashConnectedBestStarFirst]]
+    * and [[minhashClusterWeights]]: [[minhashBase]], then the EDGE set
+    * — verified star links (the collapse-grade edges, linear) UNION the
+    * banded pairs among collapse survivors, both at `minJaccard`, so
     * every edge is a true pair and components REFINE the raw pair
     * relation's components (an edge missed by both mechanisms can
     * split a component — extra keepers, never wrong merges; DedupSpec
-    * bounds the divergence on the replicated fixture). */
-  private def minhashStarFirstEdges(
-      sh: DataFrame,
-      banded: DataFrame,
-      idCol: String,
-      minJaccard: Double): DataFrame = {
+    * bounds the divergence on the replicated fixture) — then
+    * [[connectedComponents]]. */
+  private def minhashStarFirstComponents(df: DataFrame, textCol: String,
+      idCol: String, numHashes: Int, bands: Int, minJaccard: Double,
+      seed: Long): DataFrame = {
+    val (sh, banded) = minhashBase(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed)
     // same lineage cut as [[minhashPairsStarFirst]] — links feed both
     // the drop set and the edge union, so without the cut the banded
     // subtree nests ~27× and plan analysis stalls. `sh` is the shared
     // [[minhashBase]] shingle frame (r15): both verifies read the same
     // materialized blocks instead of re-tokenizing the corpus.
-    val links = verifiedAtLeast(sh,
-        minhashStarFromBandKeys(banded, idCol), idCol, minJaccard)
+    val links = jaccardOverShingleFrame(sh,
+        minhashStarFromBandKeys(banded, idCol), idCol, Some(minJaccard))
       .select("id_a", "id_b")
       .localCheckpoint(false)
-    val drops = links.select(col("id_b").as(idCol)).distinct()
-    val survBanded = banded.join(drops, Seq(idCol), "left_anti")
-    val survPairs = verifiedAtLeast(sh,
-        bandedCandidates(survBanded, idCol).localCheckpoint(false),
-        idCol, minJaccard)
+    val survPairs = jaccardOverShingleFrame(sh,
+        survivorPairs(banded, linkedIds(links, idCol), idCol)
+          .localCheckpoint(false),
+        idCol, Some(minJaccard))
       .select("id_a", "id_b")
-    links.unionByName(survPairs).distinct()
+    connectedComponents(links.unionByName(survPairs).distinct())
   }
 
   /** [[minhashConnected]] in the production star-first shape: cluster
     * edges = verified star links ∪ survivor pairs (see
-    * [[minhashStarFirstEdges]]), components, keep the smallest id per
-    * cluster. The raw-pair-driven [[minhashConnected]] stays the
+    * [[minhashStarFirstComponents]]), components, keep the smallest id
+    * per cluster. The raw-pair-driven [[minhashConnected]] stays the
     * exhaustive ground truth (un-benched, DedupSpec). */
   def minhashConnectedStarFirst(
       df: DataFrame,
@@ -1077,17 +1079,9 @@ object Dedup extends DedupPassages with DedupLines {
       numHashes: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
-    val losers = comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    keepPerComponent(df, minhashStarFirstComponents(df, textCol, idCol,
+      numHashes, bands, minJaccard, seed), idCol, None)
 
   /** [[minhashConnectedBest]] in the star-first shape: same edge set
     * as [[minhashConnectedStarFirst]], production keep rule — the
@@ -1104,24 +1098,9 @@ object Dedup extends DedupPassages with DedupLines {
       numHashes: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
-    val members = comps
-      .join(df.select(col(idCol).as("id"), col(scoreCol).as("_score")),
-        "id")
-    val w = Window.partitionBy(col("component"))
-      .orderBy(col("_score").desc, col("id"))
-    val losers = members
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") =!= 1)
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    keepPerComponent(df, minhashStarFirstComponents(df, textCol, idCol,
+      numHashes, bands, minJaccard, seed), idCol, Some(scoreCol))
 
   /** SOFT dedup — per-doc training weights from the near-dup cluster
     * structure instead of dropping rows (round 18): every doc gets
@@ -1152,12 +1131,8 @@ object Dedup extends DedupPassages with DedupLines {
       bands: Int = 16,
       minJaccard: Double = 0.5,
       seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
+    val comps = minhashStarFirstComponents(df, textCol, idCol, numHashes,
+      bands, minJaccard, seed)
     val sizes = comps.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
     val m = comps.join(sizes, "component")
@@ -1194,11 +1169,8 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double = 0.5,
       seed: Long = 42L,
       histBands: Option[DataFrame] = None): DataFrame = {
-    require(histBands.isEmpty || (numHashes > 0 && bands > 0),
-      "histBands requires explicit numHashes and bands — the persisted " +
-        "keys are only comparable under the exact knobs that built them")
-    val (nh, nb) = minhashKnobs(
-      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
+    val (bands0, hb) = minhashIncrementalBands(newDocs, histDocs, textCol,
+      idCol, numHashes, bands, minJaccard, seed, histBands)
     val batchDocs = newDocs.select(col(idCol), col(textCol))
     // materialized ONCE (r19, guide §7.2): the batch band keys —
     // tokenize + minhash + banding — feed TWO consumers (the star
@@ -1207,23 +1179,16 @@ object Dedup extends DedupPassages with DedupLines {
     // 175 KB exchanges each fed by its own batch tokenize); the lazy
     // checkpoint replays compact (id, bk) rows instead. In-query, per
     // invocation; rows unchanged.
-    val batchBands = minhashBandKeys(newDocs, textCol, idCol, nh, nb, seed)
-      .localCheckpoint(false)
-    val hb = histBands.getOrElse(minhashBandKeys(
-      histDocs, textCol, idCol, nh, nb, seed))
+    val batchBands = bands0.localCheckpoint(false)
     // lineage cut (see [[minhashPairsStarFirst]]): the within-loser ids
     // feed the survivor anti-join AND the final drop union
-    val withinLosers = ngramJaccard(batchDocs,
-        minhashStarFromBandKeys(batchBands, idCol),
-        textCol = textCol, idCol = idCol)
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_b").as(idCol)).distinct()
+    val withinLosers = linkedIds(ngramJaccard(batchDocs,
+          minhashStarFromBandKeys(batchBands, idCol),
+          textCol = textCol, idCol = idCol)
+        .filter(col("jaccard") >= minJaccard), idCol)
       .localCheckpoint(false)
     val survBands = batchBands.join(withinLosers, Seq(idCol), "left_anti")
-    val cross = survBands.alias("x")
-      .join(hb.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+    val cross = crossCandidates(survBands, hb, idCol)
       .distinct()
       // cut before the verify's triple reference (see the pairs path)
       .localCheckpoint(false)
@@ -1437,22 +1402,15 @@ object Dedup extends DedupPassages with DedupLines {
     * pair-based keep-min set). Shared by the plain-banded and
     * multiprobe star generators. */
   private def starLinksFromBanded(banded: DataFrame, idCol: String,
-      maxHamming: Int): DataFrame = {
-    val w = Window.partitionBy(col("bk")).orderBy(col(idCol))
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    banded
-      .withColumn("mn", min(struct(col(idCol), col("simhash"))).over(wPrev))
-      .withColumn("pv", lag(struct(col(idCol), col("simhash")), 1).over(w))
-      .select(col(idCol), col("simhash"),
-        explode(array(col("mn"), col("pv"))).as("lnk"))
-      .filter(col("lnk").isNotNull &&
-        col(s"lnk.$idCol") =!= col(idCol))
+      maxHamming: Int): DataFrame =
+    starWindow(banded, idCol, struct(col(idCol), col("simhash")),
+        Seq(col(idCol), col("simhash")), "lnk", col(s"lnk.$idCol"),
+        col(idCol))
       .select(col(s"lnk.$idCol").as("id_a"), col(idCol).as("id_b"),
         bit_count(col("simhash").bitwiseXOR(col("lnk.simhash")))
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
 
   /** Keep-min STAR COLLAPSE — [[simhashStar]]'s links applied as a
     * dedup: drops every doc with a qualifying link to a SMALLER id
@@ -1465,10 +1423,8 @@ object Dedup extends DedupPassages with DedupLines {
   def simhashStarCollapse(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, salted: Boolean = true): DataFrame =
-    df.join(
-      simhashStar(df, textCol, idCol, maxHamming, bands, salted)
-        .select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    dropLinked(df, simhashStar(df, textCol, idCol, maxHamming, bands, salted),
+      idCol)
 
   /** The PRODUCTION simhash pair relation (round-12, retiring the r11
     * sf1 finding for good): star-collapse first, banded pairs over the
@@ -1505,9 +1461,8 @@ object Dedup extends DedupPassages with DedupLines {
     val fps = simhashFingerprints(df, textCol, idCol)
       .localCheckpoint(false)
     val salt = if (salted) Some("len_bucket") else None
-    val drops = simhashStarFromFingerprints(fps, idCol, collapseHamming,
-        collapseBands, salt)
-      .select(col("id_b").as(idCol)).distinct()
+    val drops = linkedIds(simhashStarFromFingerprints(fps, idCol,
+      collapseHamming, collapseBands, salt), idCol)
     val surv = fps.join(drops, Seq(idCol), "left_anti")
     simhashPairsFromFingerprints(surv, idCol, maxHamming, bands, salt)
   }
@@ -1556,8 +1511,8 @@ object Dedup extends DedupPassages with DedupLines {
     val docs = df.select(col(idCol), col(textCol))
     val (verifiedLinks, candidates, sh) = simhashStarFirstFrames(docs,
       textCol, idCol, minJaccard, maxHamming, salted)
-    val survPairs = verifiedAtLeast(sh, candidates.localCheckpoint(false),
-      idCol, minJaccard)
+    val survPairs = jaccardOverShingleFrame(sh,
+      candidates.localCheckpoint(false), idCol, Some(minJaccard))
     // branches are disjoint (a verified link's id_b never survives),
     // but the same pair can arrive via several links/buckets — distinct
     verifiedLinks.unionByName(survPairs).distinct()
@@ -1585,7 +1540,7 @@ object Dedup extends DedupPassages with DedupLines {
     * verify stages read — the previous shape re-tokenized the corpus
     * per ngramJaccard call (links + survivors ≈ 2 extra corpus passes
     * on a high-duplication fixture where candidates approach the
-    * corpus). Verification itself gains [[verifiedAtLeast]]'s exact
+    * corpus). Verification itself gains [[jaccardOverShingleFrame]]'s exact
     * size prescreen (a pair with `min < τ·max` set sizes cannot reach
     * τ and skips the merge scan). Arithmetic is unchanged — same
     * WordNgrams streams, same SortedIntersectCount counts — so every
@@ -1605,10 +1560,11 @@ object Dedup extends DedupPassages with DedupLines {
         maxHamming, salt)
       .select("id_a", "id_b")
       .localCheckpoint(false)
-    val verifiedLinks = verifiedAtLeast(sh, links, idCol, minJaccard)
+    val verifiedLinks = jaccardOverShingleFrame(sh, links, idCol,
+        Some(minJaccard))
       .localCheckpoint(false)
-    val drops = verifiedLinks.select(col("id_b").as(idCol)).distinct()
-    val surv = fps.join(drops, Seq(idCol), "left_anti")
+    val surv = fps.join(linkedIds(verifiedLinks, idCol), Seq(idCol),
+      "left_anti")
     val candidates = simhashCandidatesMultiprobe(surv, idCol, salt)
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -1646,9 +1602,6 @@ object Dedup extends DedupPassages with DedupLines {
       .localCheckpoint(false)
   }
 
-  /** Banded candidate pairs with exact Hamming distance, BEFORE the
-    * `maxHamming` filter — package-visible so specs can measure bucket
-    * fan-out (the quantity the salt exists to bound) directly. */
   /** The exploded (id, simhash, bk) band rows shared by the pair join
     * ([[simhashCandidates]]) and the linear star reduction
     * ([[simhashStar]]). With a salt: replicate each doc's band rows at
@@ -1678,24 +1631,17 @@ object Dedup extends DedupPassages with DedupLines {
       explode(array(bandStructs: _*)).as("bk"))
   }
 
+  /** Banded candidate pairs with exact Hamming distance, BEFORE the
+    * `maxHamming` filter — package-visible so specs can measure bucket
+    * fan-out (the quantity the salt exists to bound) directly. */
   private[graft] def simhashCandidates(fps: DataFrame, idCol: String,
-      bands: Int, saltCol: Option[String]): DataFrame = {
-    val banded = bandedRows(fps, idCol, bands, saltCol)
-    // Self-join via dataset aliases, renaming only AFTER the join: the
-    // two join inputs are then canonically identical subtrees, so the
-    // banded-fingerprint aggregation+shuffle is computed ONCE and the
-    // second side becomes a ReusedExchange. (Renaming before the join
-    // breaks that match and silently doubles the aggregation; a naive
-    // unaliased a("bk") === b("bk") is worse still — it resolves to a
-    // trivially-true self comparison and cross-joins.)
-    val x = banded.alias("x")
-    val y = banded.alias("y")
-    val hamming = bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-    x.join(y, col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        hamming.as("hamming"))
-  }
+      bands: Int, saltCol: Option[String]): DataFrame =
+    bandedSelfJoin(bandedRows(fps, idCol, bands, saltCol), idCol,
+      payload = Seq(xyHamming))
+
+  /** Exact Hamming distance of a banded self-join's `x`/`y` sides. */
+  private def xyHamming: Column =
+    bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming")
 
   /** MULTIPROBE banded rows (round 13): 4×16-bit blocks, each doc
     * emitting its exact block key plus all 16 one-bit FLIPS of it
@@ -1889,17 +1835,9 @@ object Dedup extends DedupPassages with DedupLines {
     * recall-complete for Hamming ≤ 7 per [[multiprobeBandedRows]].
     * Same ReusedExchange self-join discipline as the plain path. */
   private[graft] def simhashCandidatesMultiprobe(fps: DataFrame,
-      idCol: String, saltCol: Option[String]): DataFrame = {
-    val banded = multiprobeBandedRows(fps, idCol, saltCol)
-    val x = banded.alias("x")
-    val y = banded.alias("y")
-    val hamming = bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-    x.join(y, col("x.bk") === col("y.bk") &&
-        (col("x.exact") || col("y.exact")) &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        hamming.as("hamming"))
-  }
+      idCol: String, saltCol: Option[String]): DataFrame =
+    bandedSelfJoin(multiprobeBandedRows(fps, idCol, saltCol), idCol,
+      Some(col("x.exact") || col("y.exact")), Seq(xyHamming))
 
   /** [[simhashStarFromFingerprints]] over MULTIPROBE buckets — star
     * links with 16-bit bucket selectivity at Hamming budgets up to 7
@@ -1971,14 +1909,28 @@ object Dedup extends DedupPassages with DedupLines {
     * the intersect as one codegen'd merge scan per pair
     * ([[graft.functions.SortedIntersectCount]]). Factored out (r15) so
     * the star-first compositions can verify against ONE materialized
-    * shingle frame instead of re-tokenizing the corpus per stage. */
+    * shingle frame instead of re-tokenizing the corpus per stage.
+    *
+    * `atLeast = Some(τ)` is the threshold-aware verify: (a) an EXACT
+    * size prescreen — J = I/(|A|+|B|−I) with I ≤ min(|A|,|B|) gives
+    * J ≤ min/max, so a pair failing `min ≥ τ·max` cannot qualify and
+    * skips the merge scan entirely (on a near-identical-replica
+    * collapse at τ = 0.95 this discards every coincidental bucket-mate
+    * for two size reads) — and (b) the `jaccard ≥ τ` filter fused in,
+    * so callers get exactly the qualifying pairs. Never drops a
+    * qualifying pair: the prescreen is an upper bound, not a
+    * heuristic. */
   private def jaccardOverShingleFrame(
       shingles: DataFrame,
       pairs: DataFrame,
-      idCol: String): DataFrame = {
+      idCol: String,
+      atLeast: Option[Double] = None): DataFrame = {
     val a = shingles.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
     val b = shingles.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
+    val joined = pairs.join(a, "id_a").join(b, "id_b")
+    val scored = atLeast.fold(joined)(t => joined.filter(
+        least(size(col("sh_a")), size(col("sh_b"))).cast("double")
+          >= lit(t) * greatest(size(col("sh_a")), size(col("sh_b")))))
       .withColumn("inter",
         graft.functions.SortedIntersectCount(col("sh_a"), col("sh_b")))
       .withColumn("uni",
@@ -1986,6 +1938,7 @@ object Dedup extends DedupPassages with DedupLines {
       .withColumn("jaccard",
         when(col("uni") === 0, 0.0)
           .otherwise(col("inter").cast("double") / col("uni")))
+    atLeast.fold(scored)(t => scored.filter(col("jaccard") >= t))
       .select("id_a", "id_b", "jaccard")
   }
 
@@ -2032,7 +1985,7 @@ object Dedup extends DedupPassages with DedupLines {
     val (tables, bits) = lshKnobs(vecs.count(), minCosine,
       numHashTables, bitsPerTable, targetRecall)
     val banded = embeddingBandKeys(df, embCol, idCol, tables, bits, seed)
-    verifyCosine(vecs, bandedCandidates(banded, idCol), idCol)
+    verifyCosine(vecs, bandedSelfJoin(banded, idCol).distinct(), idCol)
       .filter(col("cosine") >= minCosine)
   }
 
@@ -2098,13 +2051,10 @@ object Dedup extends DedupPassages with DedupLines {
     // survivor pass; the lazy localCheckpoint compiles it once to a
     // compact RDD leaf, leaving the banded Exchange reusable across the
     // survivor self-join's two sides.
-    val drops = starVerified
-      .filter(col("cosine") >= collapseCosine)
-      .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint(false)
-    val survBanded = banded.join(drops, Seq(idCol), "left_anti")
-    val survPairs = verifyCosine(vecs, bandedCandidates(survBanded, idCol),
-      idCol)
+    val drops = linkedIds(starVerified.filter(col("cosine") >= collapseCosine),
+      idCol).localCheckpoint(false)
+    val survPairs = verifyCosine(vecs, survivorPairs(banded, drops, idCol),
+        idCol)
       .filter(col("cosine") >= minCosine)
     // a star link between two SURVIVORS (verified below collapseCosine)
     // also surfaces from the survivor self-join — same exact cosine on
@@ -2245,47 +2195,26 @@ object Dedup extends DedupPassages with DedupLines {
       targetRecall: Double = 0.9,
       seed: Long = 42L,
       histBands: Option[DataFrame] = None): DataFrame = {
-    require(histBands.isEmpty || (numHashTables > 0 && bitsPerTable > 0),
-      "histBands requires explicit numHashTables and bitsPerTable — the " +
-        "persisted keys are only comparable under the exact knobs that " +
-        "built them")
+    requireExplicitKnobs(histBands, numHashTables > 0 && bitsPerTable > 0,
+      "numHashTables and bitsPerTable")
     val (tables, bits) = lshKnobs(cleanVecs(histVecs, embCol, idCol).count(),
       minCosine, numHashTables, bitsPerTable, targetRecall)
-    val batchKeys =
-      embeddingBandKeys(newVecs, embCol, idCol, tables, bits, seed)
-    val histKeys = histBands.getOrElse(
-      embeddingBandKeys(histVecs, embCol, idCol, tables, bits, seed))
-    // both candidate joins consume the SAME batch band-key subtree; an
-    // embeddingPairs(newVecs) call here would rebuild the pipeline
-    val cross = batchKeys.alias("x")
-      .join(histKeys.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val within = batchKeys.alias("x")
-      .join(batchKeys.alias("y"), col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
     val batchVecs = cleanVecs(newVecs, embCol, idCol)
     val allVecs = batchVecs.unionByName(cleanVecs(histVecs, embCol, idCol))
-    // ONE verification pass; pair kinds split by id_b (ids unique):
-    // id_b in the batch ⇒ within pair, id_b loses; else cross pair,
-    // the batch-side id_a loses
-    val verified = cross.unionByName(within).distinct()
-      .join(batchVecs.select(col(idCol).as("id_a"), col("e").as("ea")),
-        "id_a")
-      .join(allVecs.select(col(idCol).as("id_b"), col("e").as("eb")),
-        "id_b")
-      .filter(CosineSimilarity(col("ea"), col("eb")) >= minCosine)
-      .select("id_a", "id_b")
-    val batchIdsB = batchVecs.select(col(idCol).as("id_b"))
-    val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
-      .select(col("id_b").as(idCol))
-    val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
-      .select(col("id_a").as(idCol))
-    newVecs.join(withinLosers.union(crossLosers).distinct(),
-      Seq(idCol), "left_anti")
+    incrementalSurvivors(newVecs, batchVecs,
+        embeddingBandKeys(newVecs, embCol, idCol, tables, bits, seed),
+        histBands.getOrElse(
+          embeddingBandKeys(histVecs, embCol, idCol, tables, bits, seed)),
+        idCol) { pairs =>
+      pairs
+        .join(batchVecs.select(col(idCol).as("id_a"), col("e").as("ea")),
+          "id_a")
+        .join(allVecs.select(col(idCol).as("id_b"), col("e").as("eb")),
+          "id_b")
+        .filter(CosineSimilarity(col("ea"), col("eb")) >= minCosine)
+        .select("id_a", "id_b")
+    }
   }
-
 
   /** The nCells auto-derivation for [[semantic]] — the embedding-side
     * sibling of [[minhashKnobs]]/`lshKnobs`, opt-in by passing

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -589,7 +589,7 @@ object StreamOps {
       val uni = av.length + bv.length - inter
       if (uni == 0) 0.0 else inter.toDouble / uni
     }
-    // exact size prescreen (verifiedAtLeast's bound): J = I/(|A|+|B|−I)
+    // exact size prescreen (the batch verify's bound): J = I/(|A|+|B|−I)
     // with I ≤ min gives J ≤ min/max — a pair failing min ≥ τ·max can
     // never qualify and skips the merge scan entirely. On a
     // near-identical-replica stream at τ = 0.95 this discards every
@@ -597,43 +597,55 @@ object StreamOps {
     def canReach(a: Seq[String], b: Seq[String]): Boolean =
       math.min(a.size, b.size).toDouble >=
         minJaccard * math.max(a.size, b.size)
+    keeperChainStream[BandedShingleRow, Seq[String], BucketKeeper,
+        NearDupLink](banded, ttl, _.bk, r => (r.doc_id, r.sh),
+        BucketKeeper(_, _), k => (k.id, k.sh)) { (id, sh, cid, csh) =>
+      if (!canReach(sh, csh)) None
+      else Some(jac(sh, csh)).filter(_ >= minJaccard)
+        .map(NearDupLink(id, cid, _))
+    }
+  }
+
+  /** The keeper+predecessor machine under [[nearDedupStream]] and
+    * [[nearDedupCosineStream]]: rows group by band key (`bucket`); per
+    * bucket, each row in id order — as an `(id, payload)` `entry` —
+    * is checked by `verify(id, payload, candidate id, candidate
+    * payload)` against the bucket's KEEPER (min id seen, carried in
+    * state as `S`) and its in-batch PREDECESSOR, whichever have a
+    * smaller id. Emits every verified link, append mode. With `ttl`, a
+    * bucket idle past the horizon evicts its keeper (a later near-dup
+    * of it re-enters as a fresh keeper); any batch touching the bucket
+    * renews the horizon. */
+  private def keeperChainStream[R, P, S: Encoder, O: Encoder](
+      banded: Dataset[R],
+      ttl: Option[String],
+      bucket: R => Long,
+      entry: R => (Long, P),
+      toKeeper: (Long, P) => S,
+      fromKeeper: S => (Long, P))(
+      verify: (Long, P, Long, P) => Option[O]): Dataset[O] = {
+    import banded.sparkSession.implicits._
     val timeoutConf =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    banded.groupByKey(_.bk)
-      .flatMapGroupsWithState[BucketKeeper, NearDupLink](
-        OutputMode.Append, timeoutConf) {
-        case (_, it: Iterator[BandedShingleRow],
-            state: GroupState[BucketKeeper]) =>
+    banded.groupByKey(bucket)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeoutConf) {
+        case (_, it: Iterator[R], state: GroupState[S]) =>
           if (state.hasTimedOut) {
-            // bucket idle past the TTL horizon: evict the keeper. A
-            // later near-dup of it re-enters as a fresh keeper.
             state.remove()
             Iterator.empty
           } else {
-            val sorted = it.toArray.sortBy(_.doc_id)
-            val out = scala.collection.mutable.ArrayBuffer.empty[NearDupLink]
-            var keeper = state.getOption
-            var prev: Option[BandedShingleRow] = None
-            sorted.foreach { d =>
-              val candidates =
-                (keeper.map(k => (k.id, k.sh)).toSeq ++
-                  prev.map(p => (p.doc_id, p.sh)).toSeq)
-                  .filter(_._1 < d.doc_id)
-                  .distinctBy(_._1)
-              candidates.foreach { case (cid, csh) =>
-                if (canReach(d.sh, csh)) {
-                  val j = jac(d.sh, csh)
-                  if (j >= minJaccard) out += NearDupLink(d.doc_id, cid, j)
-                }
-              }
-              if (keeper.forall(_.id > d.doc_id))
-                keeper = Some(BucketKeeper(d.doc_id, d.sh))
+            val out = scala.collection.mutable.ArrayBuffer.empty[O]
+            var keeper = state.getOption.map(fromKeeper)
+            var prev: Option[(Long, P)] = None
+            it.map(entry).toVector.sortBy(_._1).foreach { case d @ (id, p) =>
+              (keeper.toSeq ++ prev.toSeq).filter(_._1 < id).distinctBy(_._1)
+                .foreach { case (cid, cp) => out ++= verify(id, p, cid, cp) }
+              if (keeper.forall(_._1 > id)) keeper = Some(d)
               prev = Some(d)
             }
-            keeper.foreach { k =>
-              state.update(k)
-              // any batch touching the bucket renews its horizon
+            keeper.foreach { case (kid, kp) =>
+              state.update(toKeeper(kid, kp))
               ttl.foreach(state.setTimeoutDuration)
             }
             out.iterator
@@ -794,42 +806,11 @@ object StreamOps {
       val d = math.sqrt(na) * math.sqrt(nb)
       if (d == 0.0) -1.0 else dot / d
     }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    banded.groupByKey(_.bk)
-      .flatMapGroupsWithState[VecBucketKeeper, VecNearLink](
-        OutputMode.Append, timeoutConf) {
-        case (_, it: Iterator[BandedVecRow],
-            state: GroupState[VecBucketKeeper]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toArray.sortBy(_.vec_id)
-            val out = scala.collection.mutable.ArrayBuffer.empty[VecNearLink]
-            var keeper = state.getOption
-            var prev: Option[BandedVecRow] = None
-            sorted.foreach { v =>
-              val candidates =
-                (keeper.map(k => (k.id, k.e)).toSeq ++
-                  prev.map(p => (p.vec_id, p.e)).toSeq)
-                  .filter(_._1 < v.vec_id)
-                  .distinctBy(_._1)
-              candidates.foreach { case (cid, ce) =>
-                if (cos(v.e, ce) >= minCosine) out += VecNearLink(v.vec_id, cid)
-              }
-              if (keeper.forall(_.id > v.vec_id))
-                keeper = Some(VecBucketKeeper(v.vec_id, v.e))
-              prev = Some(v)
-            }
-            keeper.foreach { k =>
-              state.update(k)
-              ttl.foreach(state.setTimeoutDuration)
-            }
-            out.iterator
-          }
-      }
+    keeperChainStream[BandedVecRow, Seq[Double], VecBucketKeeper,
+        VecNearLink](banded, ttl, _.bk, r => (r.vec_id, r.e),
+        VecBucketKeeper(_, _), k => (k.id, k.e)) { (id, e, cid, ce) =>
+      Option.when(cos(e, ce) >= minCosine)(VecNearLink(id, cid))
+    }
   }
 
   /** Stream-stream interval join (ad attribution): pair each click

@@ -363,10 +363,14 @@ class DedupSpec extends SparkSpec {
     val nearHist = (words.take(words.length - 1) :+ "zzzinc").mkString(" ")
     val novel = "a genuinely novel document about nothing seen before " +
       "with plenty of fresh tokens to shingle"
+    // 500000 is a cross loser AND the smaller id of the within pair
+    // (500000, 500003): the within rule still drops 500003
+    val nearBoth = ("zzzhead" +: words.drop(1)).mkString(" ")
     val batch = Seq(
       (500000L, nearHist),          // near-dup of hist doc 0 → dropped
       (500001L, novel),             // novel → kept
-      (500002L, novel + " tail")    // near-dup of 500001 within batch → dropped
+      (500002L, novel + " tail"),   // near-dup of 500001 within batch → dropped
+      (500003L, nearBoth)           // near 500000 within batch → dropped
     ).toDF("doc_id", "text")
     val kept = Dedup.minhashIncremental(batch, hist, minJaccard = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -462,10 +466,14 @@ class DedupSpec extends SparkSpec {
     val rng = new scala.util.Random(11)
     val novel = Array.fill(v0.length)(rng.nextGaussian())
     val nearNovel = novel.clone(); nearNovel(1) += 1e-4
+    // 800000 is a cross loser AND the smaller id of the within pair
+    // (800000, 800003): the within rule still drops 800003
+    val nearBoth = nearHist.clone(); nearBoth(2) += 1e-4
     val batch = Seq(
       (800000L, nearHist.toSeq),  // near hist vec 0 → dropped
       (800001L, novel.toSeq),     // novel → kept
-      (800002L, nearNovel.toSeq)  // near 800001 within batch → dropped
+      (800002L, nearNovel.toSeq), // near 800001 within batch → dropped
+      (800003L, nearBoth.toSeq)   // near 800000 within batch → dropped
     ).toDF("vec_id", "embedding")
     val kept = Dedup.embeddingIncremental(batch, hist, minCosine = 0.99)
       .select("vec_id").collect().map(_.getLong(0)).toSet
