@@ -178,26 +178,23 @@ object Dedup extends DedupPassages with DedupLines {
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
 
   /** The batch×history incremental split under [[minhashIncremental]]
-    * and [[embeddingIncremental]]: cross candidates ∪ within-batch
-    * self-join, ONE `verify` pass (candidate pairs → the verified
-    * ones), then the pair kinds split by id_b (ids are globally
-    * unique): id_b in the batch ⇒ within pair, its id_b loses (greedy
-    * smaller-id-wins); id_b in history ⇒ cross pair, its batch-side
-    * id_a loses. Returns `newRows` minus both loser sets. Both joins
-    * consume the SAME batch band-key subtree (ReusedExchange computes
-    * the batch signatures once). */
+    * and [[embeddingIncremental]]: cross ∪ within-batch candidates cut
+    * ONCE (a verify may read them twice, as [[ngramJaccard]] does; each
+    * un-cut read re-derived the batch band keys), ONE `verify`, ONE
+    * loser projection by id_b (ids globally unique): id_b in the batch
+    * ⇒ within pair, id_b loses (smaller id wins); else id_a loses. */
   private def incrementalSurvivors(newRows: DataFrame, batchIds: DataFrame,
       batchBands: DataFrame, histBands: DataFrame, idCol: String)(
       verify: DataFrame => DataFrame): DataFrame = {
-    val verified = verify(crossCandidates(batchBands, histBands, idCol)
-      .unionByName(bandedSelfJoin(batchBands, idCol)).distinct())
-    val batchIdsB = batchIds.select(col(idCol).as("id_b"))
-    val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
-      .select(col("id_b").as(idCol))
-    val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
-      .select(col("id_a").as(idCol))
-    newRows.join(withinLosers.union(crossLosers).distinct(),
-      Seq(idCol), "left_anti")
+    val pairs = crossCandidates(batchBands, histBands, idCol)
+      .unionByName(bandedSelfJoin(batchBands, idCol)).distinct()
+      .localCheckpoint(false)
+    val losers = verify(pairs)
+      .join(batchIds.select(col(idCol).as("id_b"), lit(true).as("_within")),
+        Seq("id_b"), "left")
+      .select(when(col("_within"), col("id_b")).otherwise(col("id_a"))
+        .as(idCol))
+    newRows.join(losers.distinct(), Seq(idCol), "left_anti")
   }
 
   /** A persisted `histBands` table is only comparable under the exact
@@ -389,13 +386,14 @@ object Dedup extends DedupPassages with DedupLines {
     * Ids must be globally unique across batch and history (true of any
     * append-only doc pipeline).
     *
-    * Scale: candidate generation is two equi-joins on 64-bit band keys
-    * — batch×history and batch×batch — and verification shingles only
-    * candidate docs ([[ngramJaccard]]'s semi-join). By default the
-    * history side recomputes its band keys in-query; a nightly
-    * pipeline should instead compute [[minhashBandKeys]] on the
-    * history ONCE, persist it bucketed by `bk`
-    * ([[graft.sources.Sources.writeBucketed]]), and pass the table as
+    * Scale: candidates are two equi-joins on 64-bit band keys —
+    * batch×history and batch×batch — whose distinct union is cut ONCE,
+    * so each call derives the batch band keys in one pass; the verify
+    * reads the cut pairs and shingles only candidate docs
+    * ([[ngramJaccard]]'s semi-join). By default the history side
+    * recomputes its band keys in-query; a nightly pipeline should
+    * instead persist [[minhashBandKeys]] of the history bucketed by
+    * `bk` ([[graft.sources.Sources.writeBucketed]]) and pass it as
     * `histBands` — the candidate join then plans with NO history-side
     * Exchange (PlanAuditSpec asserts the shape) and history text is
     * only touched for the (tiny) verification set. A supplied

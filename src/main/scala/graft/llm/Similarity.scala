@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -562,7 +563,8 @@ object Similarity {
     * Scale: candidates come from [[cosineTopK]] (broadcast query
     * side); everything after is |queries|·k-bounded — the pairwise
     * sim relation is ≤ k² per query, never corpus-sized, and the
-    * `select` plan-unrolled joins are all on the query key. */
+    * `select` plan-unrolled joins are all on the query key. Query ids
+    * must be integral or string. */
   def mmrRerank(
       corpus: DataFrame,
       queries: DataFrame,
@@ -576,6 +578,14 @@ object Similarity {
       s"mmrRerank: need 1 <= select <= k, got select=$select k=$k")
     require(math.abs(lambda + oneMinusLambda - 1.0) < 1e-9,
       s"mmrRerank: lambda $lambda + oneMinusLambda $oneMinusLambda != 1")
+    // the greedy loop groups by String.valueOf(query_id), injective
+    // only for these types
+    val qType = queries.schema(idCol).dataType
+    require(qType match {
+      case ByteType | ShortType | IntegerType | LongType | _: StringType => true
+      case _ => false
+    }, s"mmrRerank: query id $idCol must be an integral or string type, " +
+      s"got ${qType.simpleString}")
     val top = cosineTopK(corpus, queries, k, embCol, idCol, roundAt = 6)
     // re-attach candidate vectors for the pairwise leg (k rows/query)
     val cands = top.join(

@@ -12,6 +12,11 @@ class DedupSpec extends SparkSpec {
   private lazy val docs: DataFrame =
     spark.read.parquet(s"$sf0001/documents.parquet")
 
+  private lazy val vecs: DataFrame =
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+
   /** sf0.001 documents + a whitespace/case-mangled copy of doc 0 (id
     * 100000) and a one-word-edited copy of doc 1 (id 100001). */
   private lazy val planted: DataFrame = {
@@ -458,8 +463,7 @@ class DedupSpec extends SparkSpec {
   test("embeddingIncremental: drops batch vecs near history, keeps novel ones") {
     val s = spark
     import s.implicits._
-    val hist = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val hist = vecs
     val v0 = hist.filter(col("vec_id") === 0L)
       .head().getSeq[Double](1).toArray
     val nearHist = v0.clone(); nearHist(0) += 1e-4
@@ -493,6 +497,100 @@ class DedupSpec extends SparkSpec {
           histBands = Some(spark.table("graft_emb_bands_spec")))
       }
     } finally spark.sql("DROP TABLE IF EXISTS graft_emb_bands_spec")
+  }
+
+  test("minhash/embeddingIncremental degenerate batches, in-query and " +
+      "persisted histBands: empty → empty, no candidate pair → every " +
+      "row kept, copy groups → the smallest id of each") {
+    val s = spark
+    import s.implicits._
+    val hist = docs.select("doc_id", "text")
+    val dim = vecs.where(col("embedding").isNotNull)
+      .head().getSeq[Double](1).length
+    // 2 tables × 32 bits: unrelated vectors share no bucket, exact
+    // copies share every one
+    val (tables, bits) = (2, 32)
+    graft.sources.Sources.writeBucketed(Dedup.minhashBandKeys(hist),
+      "graft_mh_bands_degen", "bk", numBuckets = 4)
+    graft.sources.Sources.writeBucketed(Dedup.embeddingBandKeys(
+        vecs, numTables = tables, bitsPerTable = bits),
+      "graft_emb_bands_degen", "bk", numBuckets = 4)
+    def ids(df: DataFrame): Set[Long] =
+      df.collect().map(_.getLong(0)).toSet
+    // survivors of the in-query and the persisted-history leg
+    def minhashLegs(batch: Seq[(Long, String)]): Seq[Set[Long]] =
+      Seq(None, Some(spark.table("graft_mh_bands_degen"))).map(hb =>
+        ids(Dedup.minhashIncremental(batch.toDF("doc_id", "text"), hist,
+          histBands = hb).select("doc_id")))
+    def embeddingLegs(batch: Seq[(Long, Seq[Double])]): Seq[Set[Long]] =
+      Seq(None, Some(spark.table("graft_emb_bands_degen"))).map(hb =>
+        ids(Dedup.embeddingIncremental(batch.toDF("vec_id", "embedding"),
+          vecs, minCosine = 0.99, numHashTables = tables,
+          bitsPerTable = bits, histBands = hb).select("vec_id")))
+    // tokens no history doc has, disjoint across i
+    def novelText(i: Int) = (0 until 12).map(j => s"zzq${i}w$j").mkString(" ")
+    val rng = new scala.util.Random(5)
+    def novelVec() = Seq.fill(dim)(rng.nextGaussian())
+    try {
+      assert(minhashLegs(Nil).forall(_.isEmpty))
+      assert(embeddingLegs(Nil).forall(_.isEmpty))
+
+      val freshIds = (0 until 5).map(600000L + _)
+      assert(minhashLegs(freshIds.map(i => (i, novelText(i.toInt))))
+        .forall(_ == freshIds.toSet))
+      assert(embeddingLegs(freshIds.map(i => (i, novelVec())))
+        .forall(_ == freshIds.toSet))
+
+      // groups {600010, 600011, 600012} and {600020, 600021}, listed
+      // out of id order
+      val (ta, tb) = (novelText(10), novelText(11))
+      val (va, vb) = (novelVec(), novelVec())
+      val groups = Seq(600012L -> 0, 600010L -> 0, 600021L -> 1,
+        600011L -> 0, 600020L -> 1)
+      val mins = Set(600010L, 600020L)
+      assert(minhashLegs(groups.map { case (i, g) =>
+        (i, if (g == 0) ta else tb) }).forall(_ == mins))
+      assert(embeddingLegs(groups.map { case (i, g) =>
+        (i, if (g == 0) va else vb) }).forall(_ == mins))
+    } finally Seq("graft_mh_bands_degen", "graft_emb_bands_degen")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("minhash/embeddingIncremental: the final plan reads the candidate " +
+      "pairs from one cut — no batch signature derivation left in it") {
+    // the candidate pairs are a lazy localCheckpoint, so the plan that
+    // runs holds them as one RDD-scan leaf; re-deriving the batch band
+    // keys per consumer (one tokenize + signature scan each) is the
+    // regression this pins
+    def assertCut(out: DataFrame, kernels: String*): Unit = {
+      out.write.format("noop").mode("overwrite").save()
+      val p = out.queryExecution.executedPlan.toString
+      kernels.foreach(k =>
+        assert(!p.contains(k), s"$k derived in the final plan:\n$p"))
+      assert(p.contains("Scan ExistingRDD[id_a"), s"no pair cut:\n$p")
+    }
+    val text = docs.select("doc_id", "text")
+    graft.sources.Sources.writeBucketed(
+      Dedup.minhashBandKeys(text.filter(col("doc_id") % 10 < 8)),
+      "graft_mh_bands_cut", "bk", numBuckets = 4)
+    graft.sources.Sources.writeBucketed(Dedup.embeddingBandKeys(
+        vecs.filter(col("vec_id") % 10 < 8), numTables = 4,
+        bitsPerTable = 12),
+      "graft_emb_bands_cut", "bk", numBuckets = 4)
+    try {
+      assertCut(Dedup.minhashIncremental(
+          text.filter(col("doc_id") % 10 >= 8),
+          text.filter(col("doc_id") % 10 < 8),
+          histBands = Some(spark.table("graft_mh_bands_cut"))),
+        "minhash_signature", "word_ngrams")
+      assertCut(Dedup.embeddingIncremental(
+          vecs.filter(col("vec_id") % 10 >= 8),
+          vecs.filter(col("vec_id") % 10 < 8), minCosine = 0.99,
+          numHashTables = 4, bitsPerTable = 12,
+          histBands = Some(spark.table("graft_emb_bands_cut"))),
+        "hyperplane_signature")
+    } finally Seq("graft_mh_bands_cut", "graft_emb_bands_cut")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("embeddingPairs: planted near-identical embedding pair found") {

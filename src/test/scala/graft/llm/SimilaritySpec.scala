@@ -568,6 +568,16 @@ class SimilaritySpec extends SparkSpec {
     assert(topk == Seq(100L, 101L))
   }
 
+  test("mmrRerank: a non-integral, non-string query id is rejected " +
+      "(the greedy loop groups by its string form)") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .withColumn("vec_id", col("vec_id").cast("decimal(10,2)"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.mmrRerank(emb, emb.filter(col("vec_id") < 5))
+    }
+    assert(e.getMessage.contains("decimal(10,2)"), e.getMessage)
+  }
+
   test("mmrRerank: 5 distinct picks per query on real embeddings; " +
       "step 1 equals the relevance argmax") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
