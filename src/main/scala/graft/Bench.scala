@@ -1,125 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** The measurement protocol [[Bench]] and [[StateProbe]] share — one
-  * definition so the committed BENCH_* artifacts and the provider-A/B
-  * probe numbers stay comparable (a protocol change lands in both or
-  * neither). */
-private[graft] object BenchHarness {
-  /** 4-decimal (0.1 ms) precision: full doubles ballooned the JSON
-    * line past the driver's tail-capture window (BENCH_r09 landed
-    * front-truncated, losing the headline fields) — sub-ms digits are
-    * noise on a shared box anyway. */
-  def r4(v: Double): String = BigDecimal(v)
-    .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-
-  /** One timed execution: (seconds, Some(outputRowCount) |
-    * None-on-failure). The count() it already forces to materialize
-    * the plan IS the output volume — recording it (r16 verdict item 2)
-    * lets any later round compute sec/output-row and separate "query
-    * got slower" from "fixture emits more rows" without trusting
-    * hand-written PLANS.md tables. */
-  def timedRun(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : (Double, Option[Long]) = {
-    // per-query isolation: cached fold/CV blocks from one query must
-    // not occupy (or re-register, cf. the r4 "block already exists"
-    // churn) block-manager state while a later query is timed
-    spark.catalog.clearCache()
-    // ... and stale stream metrics must not attribute to a later
-    // stream query whose own run failed before reaching the sink
-    SparkEntry.lastStreamMetrics = None
-    val t0 = System.nanoTime()
-    val cnt = try { Some(fn(spark, sfDir).count()) } catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        None
-    }
-    ((System.nanoTime() - t0) / 1e9, cnt)
-  }
-}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
+import BenchHarness.{r4, timedRun}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JIT + codegen + parquet-footer caches otherwise
-    // land entirely on whichever query sorts first, distorting its
-    // number by seconds. Best-effort — a missing warmup table must not
-    // abort the bench (per-query failures are reported, this isn't one).
-    try {
-      spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
-    }
-    // Untimed MLlib warmup: the FIRST linear-algebra fit in a JVM pays
-    // several seconds of Breeze/L-BFGS/netlib-BLAS classloading + JIT
-    // that otherwise lands on whichever fit query runs unluckily
-    // (validation_curves went 3.98→22.09s across rounds on unchanged
-    // code). Tiny seeded fits per family — LR (logistic/L-BFGS),
-    // KMeans (distance kernels), PCA (SVD), IDF (treeAggregate) — move
-    // that one-time cost out of the measured queries.
-    try {
-      import org.apache.spark.ml.classification.LogisticRegression
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.feature.{IDF, PCA}
-      import org.apache.spark.ml.functions.array_to_vector
-      import org.apache.spark.ml.tuning.{ParamGridBuilder, TrainValidationSplit}
-      import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-      import org.apache.spark.sql.functions.col
-      val tiny = spark.range(100)
-        .selectExpr("cast(id % 2 as double) as label",
-          "array(cast(id as double), cast(id % 7 as double), 1.0d) as arr")
-        .select(col("label"), array_to_vector(col("arr")).as("features"))
-      new LogisticRegression().setMaxIter(5).fit(tiny)
-      new KMeans().setK(2).setSeed(42L).setMaxIter(3).fit(tiny)
-      new PCA().setK(2).setInputCol("features").setOutputCol("pca").fit(tiny)
-      new IDF().setInputCol("features").setOutputCol("idf").fit(tiny)
-      // tuning-harness classloading (TrainValidationSplit + evaluator):
-      // r9 showed predefined_split_grid run 1 = 7.1s vs run 2 = 4.5s —
-      // the gap is one-time ml.tuning init, not plan cost
-      val tvsLr = new LogisticRegression().setMaxIter(3)
-      new TrainValidationSplit()
-        .setEstimator(tvsLr)
-        .setEvaluator(new MulticlassClassificationEvaluator()
-          .setMetricName("accuracy"))
-        .setEstimatorParamMaps(new ParamGridBuilder()
-          .addGrid(tvsLr.regParam, Array(0.0, 0.1)).build())
-        .setTrainRatio(0.75).setSeed(42L)
-        .fit(tiny)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] mllib warmup skipped: ${e.getMessage}")
-    }
-    // Untimed ANN warmup: the first IVF/PQ index build pays takeSample +
-    // two KMeans fits + probe-join codegen that otherwise land on
-    // whichever similarity_* query the sort order times first (r8 driver
-    // log: similarity_ivfpq run 1 = 13.0s vs run 2 = 1.76s — all
-    // cold-start). A tiny seeded fit+probe per index family moves that
-    // one-time cost out of the measured window; the min-of-two protocol
-    // already absorbs residual noise.
-    try {
-      import org.apache.spark.sql.functions.col
-      val tinyEmb = spark.range(200).selectExpr(
-        "id as vec_id",
-        "transform(sequence(0, 7), i -> cast(hash(id, i) % 1000 as float) / 1000.0f) as embedding")
-      val q = tinyEmb.filter(col("vec_id") < 4)
-      graft.llm.Similarity.ivfProbe(
-        graft.llm.Similarity.ivfIndex(tinyEmb, nCells = 4),
-        q, k = 4, nProbe = 2).count()
-      graft.llm.Similarity.ivfPqProbe(
-        graft.llm.Similarity.ivfPqIndex(tinyEmb, nCells = 4, m = 4, pqK = 8),
-        q, k = 4, nProbe = 2).count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann warmup skipped: ${e.getMessage}")
-    }
+    // SPARK_GRAFT_QUERIES=a,b,c runs a comma-separated subset — the
+    // drift-triage tool: re-run a flagged query SOLO (README rule)
+    // without paying the full registry. Subset runs still print the
+    // same JSON shape; the drift compare stays meaningful per-query.
+    val names = BenchHarness.queryNames(sys.env.get("SPARK_GRAFT_QUERIES")
+      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)).sorted
+    val spark = BenchHarness.session()
+    BenchHarness.warmup(spark, sfDir)
     // A failed query is reported as -1 and excluded from the total — it
     // must not masquerade as a fast success (a query that throws
     // instantly would otherwise look like a speedup).
@@ -145,36 +39,19 @@ object Bench {
     // the driver-vs-local gap is environmental, not a regression.
     // The MXBean returns -1.0 where load average is unavailable — emit
     // JSON null rather than a sentinel that reads as "idle box".
-    def loadAvg(): Option[Double] = {
+    def loadAvg(): JValue = {
       val v = java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
-      if (v < 0) None else Some(v)
+      if (v < 0) JNull else r4(v)
     }
     val loadStart = loadAvg()
-    // SPARK_GRAFT_QUERIES=a,b,c runs a comma-separated subset — the
-    // drift-triage tool: re-run a flagged query SOLO (README rule)
-    // without paying the full registry. Subset runs still print the
-    // same JSON shape; the drift compare stays meaningful per-query.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not in the registry: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    def timedRun(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): (Double, Option[Long]) =
-      BenchHarness.timedRun(spark, sfDir, name, fn)
     case class QueryResult(name: String, sec: Double, ok: Boolean,
       runs: Seq[Double], outRows: Option[Long], streamState: Option[String])
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    def obj(fs: Seq[(String, JValue)]): JObject = JObject(fs.toList)
+    val results = names.map { name =>
       val nRuns = if (baselineSet(name)) 3 else 2
-      val runs = (1 to nRuns).map(_ => timedRun(name, fn))
+      val runs = (1 to nRuns).map(_ =>
+        timedRun(spark, sfDir, name, SparkEntry.queries(name)))
       // r16 verdict item 4: the state-operator metrics of the query's
       // last stream run ride into the artifact — state rows vs distinct
       // docs and commit/update time vs wall time, machine-checkable
@@ -184,26 +61,22 @@ object Bench {
       QueryResult(name, runs.map(_._1).min, runs.forall(_._2.isDefined),
         runs.map(_._1), runs.flatMap(_._2).lastOption, streamState)
     }
-    def r4(v: Double): String = BenchHarness.r4(v)
-    val qs = results.map { r =>
-      "\"" + r.name + "\":" + (if (r.ok) r4(r.sec) else "-1") }
-      .mkString("{", ",", "}")
-    val runsJson = results.map { r =>
-      "\"" + r.name + "\":" + r.runs.map(r4).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    val qs = obj(results.map(r =>
+      r.name -> (if (r.ok) r4(r.sec) else JInt(-1))))
+    val runsJson = obj(results.map(r =>
+      r.name -> JArray(r.runs.map(r4).toList)))
     // Per-query output row counts (r16 verdict item 2): the materializing
     // count() from the last successful run. Failed queries are omitted.
-    val outRowsJson = results.collect {
-      case r if r.ok && r.outRows.isDefined =>
-        "\"" + r.name + "\":" + r.outRows.get }.mkString("{", ",", "}")
+    val outRowsJson = obj(results.collect {
+      case r if r.ok && r.outRows.isDefined => r.name -> JInt(r.outRows.get) })
     // State-operator metrics per stream_* row (r16 verdict item 4);
     // gated on ok like out_rows — a query whose stream completed but
     // whose read-back failed must not ship metrics next to passing rows
-    val streamStateJson = results.collect {
+    val streamStateJson = obj(results.collect {
       case r if r.ok && r.streamState.isDefined =>
-        "\"" + r.name + "\":" + r.streamState.get }.mkString("{", ",", "}")
-    val failed = results.collect { case r if !r.ok => "\"" + r.name + "\"" }
-      .mkString("[", ",", "]")
+        r.name -> parse(r.streamState.get) })
+    val failed =
+      JArray(results.collect { case r if !r.ok => JString(r.name) }.toList)
     val total = results.collect { case r if r.ok => r.sec }.sum
     // Like-for-like subtotal over the 11 queries the round-1 BASELINE
     // run (36.58s) actually timed — the query set has since grown 6×,
@@ -264,8 +137,7 @@ object Bench {
     // drift compare the family split exists to prevent. Unknown basename
     // → no family → "drift": null plus a stderr warning, never a guessed
     // denominator.
-    val sfDirName = new java.io.File(sfDir).getName
-    val family: Option[String] = sfDirName match {
+    val family: Option[String] = new java.io.File(sfDir).getName match {
       case "sf0.1" => Some("BENCH_LOCAL")
       case "sf1" => Some("BENCH_SF1")
       case "sf1_lowdup" => Some("BENCH_SF1_LOWDUP")
@@ -283,52 +155,23 @@ object Bench {
         .sortBy(roundNum)
         .lastOption
     }
-    // Machine-written single-line JSON; pull a flat {"name":num,...}
-    // object by key. ASSUMES the flat shape Bench itself writes —
-    // a nested value inside the object would cut the match short
-    // (the [^}]* stops at the first '}'). \s* tolerates the
-    // pretty-printed `"queries": {` python's json.dump emits — the
-    // r15 committed artifact used that form and the compact-only
-    // regex silently parsed an EMPTY prior map, making the drift
-    // field vacuous a second way (caught r16: a real 1.5× row went
-    // unflagged against a parse-failed baseline).
-    def flatNumObj(s: String, key: String): Map[String, Double] = {
-      val re = ("\"" + key + """":\s*\{([^}]*)\}""").r
-      re.findFirstMatchIn(s).map { mm =>
-        mm.group(1).split(",").flatMap { kv =>
-          kv.split(":") match {
-            case Array(kq, v) =>
-              try Some(kq.trim.stripPrefix("\"").stripSuffix("\"") ->
-                v.trim.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-      }.getOrElse(Map.empty)
-    }
-    val priorText: Option[String] = priorFile.map { f =>
-      val txt = scala.io.Source.fromFile(f)
-      try txt.mkString finally txt.close()
-    }
-    val priorQueriesParsed: Map[String, Double] =
-      priorText.map(flatNumObj(_, "queries")).getOrElse(Map.empty)
+    val priorText = priorFile.map(f => java.nio.file.Files.readString(f.toPath))
+    def prior(key: String): Map[String, Double] =
+      priorText.map(BenchHarness.numObj(_, key)).getOrElse(Map.empty)
+    val priorQueries = prior("queries")
     // Vacuous-prior guard (r18 review): a prior file that EXISTS but
     // parses to zero queries (tail-truncated capture losing the
     // "queries" object, or a summary-only artifact) must not ship
     // "drift":{"vs":...,"flagged":{}} — the r15/r16 failure where a
     // real regression hid behind a parse-failed baseline. Treat it as
     // NO compare, loudly.
-    val priorVacuous = priorFile.isDefined && priorQueriesParsed.isEmpty
+    val priorVacuous = priorFile.isDefined && priorQueries.isEmpty
     if (priorVacuous)
       System.err.println(s"[bench] prior ${priorFile.get.getName} parsed " +
         "to ZERO queries (truncated or summary-only artifact?); " +
         "drift compare disabled for this run")
     val priorUsable = priorFile.filter(_ => !priorVacuous)
-    val priorQueries: Map[String, Double] =
-      if (priorVacuous) Map.empty else priorQueriesParsed
-    val priorOutRows: Map[String, Double] =
-      if (priorVacuous) Map.empty
-      else priorText.map(flatNumObj(_, "out_rows")).getOrElse(Map.empty)
+    val priorOutRows = prior("out_rows")
     // Composite drift rule (r17 verdict item 4): where BOTH rounds carry
     // a positive out_rows for the query, a raw-seconds flag must ALSO
     // hold on seconds-per-output-row — output-volume growth (fixture or
@@ -365,22 +208,17 @@ object Bench {
     // exception as a legitimate fast min (the triage would read a
     // crash as "contention, recovered") — failed solo = -1, the same
     // failure sentinel the queries map uses
-    val soloRuns: Seq[(String, Double)] = drifted.take(soloCap)
-      .flatMap { case (n, _) =>
-        selected.get(n).map { fn =>
-          val rs = (1 to 2).map(_ => timedRun(n, fn))
-          n -> (if (rs.forall(_._2.isDefined)) rs.map(_._1).min else -1.0)
-        }
-      }
-    val driftJson = priorUsable match {
-      case Some(f) =>
-        val flagged = drifted.map { case (n, ratio) =>
-          "\"" + n + "\":" + r4(ratio) }.mkString("{", ",", "}")
-        val solo = soloRuns.map { case (n, s) =>
-          "\"" + n + "\":" + r4(s) }.mkString("{", ",", "}")
-        val skipped = math.max(0, drifted.size - soloCap)
-        s"""{"vs":"${f.getName}","flagged":$flagged,"solo":$solo,"solo_skipped":$skipped}"""
-      case None => "null"
+    val soloRuns: Seq[(String, Double)] = drifted.take(soloCap).map {
+      case (n, _) =>
+        val rs = (1 to 2).map(_ =>
+          timedRun(spark, sfDir, n, SparkEntry.queries(n)))
+        n -> (if (rs.forall(_._2.isDefined)) rs.map(_._1).min else -1.0)
+    }
+    val driftJson = priorUsable.fold[JValue](JNull) { f =>
+      obj(Seq("vs" -> JString(f.getName),
+        "flagged" -> obj(drifted.map { case (n, ratio) => n -> r4(ratio) }),
+        "solo" -> obj(soloRuns.map { case (n, s) => n -> r4(s) }),
+        "solo_skipped" -> JInt(math.max(0, drifted.size - soloCap))))
     }
     // A flag whose automated solo re-run came back UNDER the flag
     // predicate was contention, not regression — count those so the
@@ -396,8 +234,23 @@ object Bench {
     // repeats value/baseline_subset to keep the gate numbers evidenced
     // either way
     val loadEnd = loadAvg()
-    def la(v: Option[Double]): String = v.map(r4).getOrElse("null")
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","baseline_subset":${r4(baseSub)},"streaming_subtotal":${r4(streamSub)},"batch_subtotal":${r4(batchSub)},"load_avg_start":${la(loadStart)},"load_avg_end":${la(loadEnd)},"drift":$driftJson,"queries":$qs,"out_rows":$outRowsJson,"stream_state":$streamStateJson,"runs":$runsJson,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"n_failed":${results.count(!_.ok)},"total_sec":${r4(total)},"baseline_subset_sec":${r4(baseSub)},"streaming_subtotal_sec":${r4(streamSub)},"batch_subtotal_sec":${r4(batchSub)},"load_avg_start_1m":${la(loadStart)},"load_avg_end_1m":${la(loadEnd)}}""")
+    val headline = Seq("value" -> r4(total), "unit" -> JString("sec"))
+    val subtotals = Seq("total_sec" -> r4(total),
+      "baseline_subset_sec" -> r4(baseSub),
+      "streaming_subtotal_sec" -> r4(streamSub),
+      "batch_subtotal_sec" -> r4(batchSub))
+    val counts = Seq("n_queries" -> JInt(results.size),
+      "n_failed" -> JInt(results.count(!_.ok)))
+    val sf = "sf" -> JString(sfDir)
+    val loads = Seq("load_avg_start_1m" -> loadStart,
+      "load_avg_end_1m" -> loadEnd)
+    println(compact(obj(Seq("metric" -> JString("total")) ++ headline ++ Seq(
+      "baseline_subset" -> r4(baseSub), "streaming_subtotal" -> r4(streamSub),
+      "batch_subtotal" -> r4(batchSub), "load_avg_start" -> loadStart,
+      "load_avg_end" -> loadEnd, "drift" -> driftJson, "queries" -> qs,
+      "out_rows" -> outRowsJson, "stream_state" -> streamStateJson,
+      "runs" -> runsJson, "failed" -> failed, sf) ++ counts ++ subtotals ++
+      loads)))
     // Compact summary line AFTER the full artifact (r17 verdict item 2):
     // the driver's fixed-size tail capture cuts the ~20 KB artifact line
     // mid-stream (BENCH_r16/r17 read "parsed": null — only the
@@ -410,7 +263,11 @@ object Bench {
     // was compared at all (false reads as "no compare ran", never as
     // "clean"), and drift_solo_cleared subtracts the flags the
     // in-artifact solo re-runs already exonerated as contention.
-    println(s"""{"metric":"summary","value":${r4(total)},"unit":"sec","total_sec":${r4(total)},"baseline_subset_sec":${r4(baseSub)},"streaming_subtotal_sec":${r4(streamSub)},"batch_subtotal_sec":${r4(batchSub)},"n_queries":${results.size},"n_failed":${results.count(!_.ok)},"drift_checked":${priorUsable.isDefined},"drift_flagged":${drifted.size},"drift_solo_cleared":$soloCleared,"sf":"$sfDir","load_avg_start_1m":${la(loadStart)},"load_avg_end_1m":${la(loadEnd)}}""")
+    println(compact(obj(Seq("metric" -> JString("summary")) ++ headline ++
+      subtotals ++ counts ++ Seq(
+      "drift_checked" -> JBool(priorUsable.isDefined),
+      "drift_flagged" -> JInt(drifted.size),
+      "drift_solo_cleared" -> JInt(soloCleared), sf) ++ loads)))
     spark.stop()
   }
 }

@@ -1,39 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (optimization guide §1.2 / §7.2): write
   * `explain("formatted")` of registered queries to files — the
   * before/after plan evidence committed under the plans/ directory
   * (the judge cannot run Spark; these files are how plan-shape claims
   * are checked). Usage:
-  *   runMain graft.PlanDump <outDir> <suffix> [queryName...]
-  * writes `<outDir>/<name>_<suffix>.txt` per query. Reads the same
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS contract as [[Bench]] so the
-  * dumped plan is the benched shape. Stream queries build their plan
-  * inside runAvailableNow and cannot be explained statically — they are
-  * skipped with a note. Diagnostic only: never run by the driver,
-  * changes no query. */
+  *   runMain graft.PlanDump [--final] <outDir> <suffix> [queryName...]
+  * writes `<outDir>/<name>_<suffix>.txt` per query, from the
+  * [[BenchHarness]] session and SPARK_GRAFT_SF_DIR, so the dumped plan
+  * is the benched shape. `--final` first executes the frame's own plan
+  * and dumps the AQE-final one (`isFinalPlan=true`: runtime join
+  * strategies, ReusedExchange and stage reuse are only visible after
+  * execution). What to look for: PushedFilters / ReadSchema on scans,
+  * broadcast vs sort-merge joins, ReusedExchange on self-joins,
+  * WholeStageCodegen span width, no CartesianProduct outside declared
+  * broadcast-bounded cross joins. Stream queries build their plan
+  * inside runAvailableNow; their dump is the post-run read-back.
+  * Diagnostic only: never run by the driver, changes no query. */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [name...]")
+  def main(argv: Array[String]): Unit = {
+    val finalPlan = argv.contains("--final")
+    val args = argv.filterNot(_ == "--final")
+    require(args.length >= 2,
+      "usage: PlanDump [--final] <outDir> <suffix> [name...]")
     val outDir = new java.io.File(args(0))
     outDir.mkdirs()
     val suffix = args(1)
-    val names =
-      if (args.length > 2) args.drop(2).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = BenchHarness.queryNames(args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchHarness.session()
     names.foreach { n =>
-      val fn = SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query: $n"))
       val out = new java.io.File(outDir, s"${n}_$suffix.txt")
       try {
         spark.catalog.clearCache()
@@ -41,10 +37,14 @@ object PlanDump {
         // index builds, streams run to completion); the dumped plan is
         // the final returned frame's — for a stream row that is the
         // post-run read-back, noted in the header.
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
+        val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        // run THIS QueryExecution via its RDD: count()/write each build
+        // a separate plan and leave this one's AdaptiveSparkPlan unrun
+        if (finalPlan) qe.toRdd.foreachPartition(_ => ())
+        val plan = qe.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        val header = s"-- query: $n\n-- sfDir: $sfDir  cpus: $cpus\n" +
+        val header = s"-- query: $n\n-- sfDir: $sfDir  cpus: " +
+          s"${spark.sparkContext.defaultParallelism}\n" +
           (if (n.startsWith("stream_"))
             "-- NOTE: stream row; this is the plan of the post-run " +
               "sink read-back, the batch plan runs inside the stream\n"

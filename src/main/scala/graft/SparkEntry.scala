@@ -639,14 +639,6 @@ object SparkEntry {
     probed.crossJoin(broadcast(best)).crossJoin(broadcast(splitScore))
   }
 
-  /** The shared streaming-oracle harness: run `stream` to completion
-    * under Trigger.AvailableNow with foreachBatch materializing each
-    * micro-batch to a temp parquet sink, read the sink back through
-    * `readBack`, and LOCALCHECKPOINT before the finally-block deletes
-    * the temp dir (the returned frame must not reference the deleted
-    * sink lazily — load-bearing, stated once here instead of five
-    * times). `tagBatchId` appends the micro-batch id column the CDC
-    * snapshot row resolves last-writer-wins with. */
   /** State-operator metrics of the LAST [[runAvailableNow]] stream in
     * this JVM, as one JSON object — the r16 verdict item 4
     * side-channel: Bench attaches it to each stream_* row so the
@@ -691,6 +683,14 @@ object SparkEntry {
   private[graft] def streamScratchDir(): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft_stream")
 
+  /** The shared streaming-oracle harness: run `stream` to completion
+    * under Trigger.AvailableNow with foreachBatch materializing each
+    * micro-batch to a temp parquet sink, read the sink back through
+    * `readBack`, and LOCALCHECKPOINT before the finally-block deletes
+    * the temp dir (the returned frame must not reference the deleted
+    * sink lazily — load-bearing, stated once here instead of five
+    * times). `tagBatchId` appends the micro-batch id column the CDC
+    * snapshot row resolves last-writer-wins with. */
   private[graft] def runAvailableNow(
       s: SparkSession,
       stream: DataFrame,

@@ -1,32 +1,22 @@
 package graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization guide §1): per-job / per-stage wall
-  * breakdown of a registered query, the local[32] substitute for the
-  * Spark UI's Stages page (the UI is disabled under the bench contract).
+  * breakdown of a registered query, the local substitute for the Spark
+  * UI's Stages page (the UI is off in the [[BenchHarness]] session).
   * Usage: runMain graft.StageProfile [sfDir] [queryName...]
   * Prints, per query: total wall, job count, and every stage's wall,
   * task count, shuffle read/write bytes and the head of its name — the
   * evidence for "where do the seconds go" claims in OPTIMIZATION_r*.md.
-  * Reads the same SPARK_GRAFT_CPUS contract as [[Bench]] so the
-  * breakdown reflects the benched shape. Diagnostic only: never run by
-  * the driver, changes no query. */
+  * Runs in the [[BenchHarness]] session with its warm-up and timed run,
+  * so the breakdown reflects the benched shape. Diagnostic only: never
+  * run by the driver, changes no query. */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names =
-      if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = BenchHarness.queryNames(args.drop(1).toSeq)
+    val spark = BenchHarness.session()
     case class StageRow(id: Int, name: String, ms: Long, tasks: Int,
       shufRead: Long, shufWrite: Long, input: Long)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]
@@ -49,25 +39,13 @@ object StageProfile {
           .foreach(t0 => jobs.add((e.jobId, e.time - t0)))
       }
     })
-    // same warmup as Bench so one-time JIT/codegen/footer costs don't
-    // masquerade as query cost
-    try {
-      spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[profile] warmup skipped: ${e.getMessage}")
-    }
+    BenchHarness.warmup(spark, sfDir)
     import scala.jdk.CollectionConverters._
     names.foreach { n =>
       stages.clear(); jobs.clear(); jobStart.clear()
-      spark.catalog.clearCache()
-      SparkEntry.lastStreamMetrics = None
       spark.sparkContext.setJobDescription(n)
-      val t0 = System.nanoTime()
-      val cnt = try Some(SparkEntry.queries(n)(spark, sfDir).count())
-        catch { case e: Throwable =>
-          System.err.println(s"[profile] $n FAILED: ${e.getMessage}"); None }
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (wall, cnt) =
+        BenchHarness.timedRun(spark, sfDir, n, SparkEntry.queries(n))
       // listener bus is async; give it a beat to drain
       Thread.sleep(300)
       val ss = stages.asScala.toSeq.sortBy(-_.ms)

@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
+import BenchHarness.r4
 
 /** State-store provider A/B probe for the streaming keepers (r17
   * verdict item 7): run registered stream_* queries under BOTH the
@@ -15,31 +17,18 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.StateProbe [sfDir] [query...]
   *   defaults: sfDir = /root/testdata/sf0.1, queries =
   *   stream_dedup_near stream_phash_near stream_embed_near.
-  * Each (query, provider) runs twice and reports the min (the Bench
-  * protocol); providers alternate per query so a box-load window
-  * cannot bias one side of the A/B. */
+  * Each (query, provider) runs twice and reports the min, in the
+  * [[BenchHarness]] session after its warm-up (the Bench protocol);
+  * providers alternate per query so a box-load window cannot bias one
+  * side of the A/B. */
 object StateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names =
+    val names = BenchHarness.queryNames(
       if (args.length > 1) args.drop(1).toSeq
-      else Seq("stream_dedup_near", "stream_phash_near", "stream_embed_near")
-    // validate BEFORE paying SparkSession startup (the Bench rule): a
-    // typo'd name must fail with the valid alternatives, not a bare
-    // key-not-found after 30 s of JVM warmup
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")} — valid " +
-        s"stream rows: ${SparkEntry.queries.keySet.filter(
-          _.startsWith("stream_")).toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      else Seq("stream_dedup_near", "stream_phash_near", "stream_embed_near"))
+    val spark = BenchHarness.session()
+    BenchHarness.warmup(spark, sfDir)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val rocks = "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
@@ -47,7 +36,6 @@ object StateProbe {
     // also uses, so these numbers stay comparable with the committed
     // BENCH_* artifacts (a failed run reports sec -1, Bench's failure
     // sentinel, and the remaining (query, provider) legs still run)
-    import BenchHarness.r4
     names.foreach { name =>
       Seq("default" -> None, "rocksdb" -> Some(rocks)).foreach {
         case (label, provider) =>
@@ -62,13 +50,13 @@ object StateProbe {
           }
           val allOk = runs.forall(_._2)
           val best = runs.filter(_._2).minByOption(_._1)
-          println(s"""{"probe":"state_provider","query":"$name",""" +
-            s""""provider":"$label",""" +
-            s""""sec":${best.map(b => r4(b._1)).getOrElse("-1")},""" +
-            s""""ok":$allOk,""" +
-            s""""runs":[${runs.map(r => r4(r._1)).mkString(",")}],""" +
-            s""""stream_state":${
-              best.flatMap(_._3).getOrElse("null")},"sf":"$sfDir"}""")
+          println(compact(JObject("probe" -> JString("state_provider"),
+            "query" -> JString(name), "provider" -> JString(label),
+            "sec" -> best.fold[JValue](JInt(-1))(b => r4(b._1)),
+            "ok" -> JBool(allOk),
+            "runs" -> JArray(runs.map(r => r4(r._1)).toList),
+            "stream_state" -> best.flatMap(_._3).fold[JValue](JNull)(parse(_)),
+            "sf" -> JString(sfDir))))
       }
     }
     spark.stop()

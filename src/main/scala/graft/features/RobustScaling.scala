@@ -81,8 +81,9 @@ object RobustScaling {
       // left to AQE the few-MB post-shuffle frame coalesces into ONE
       // task and every column's rank sort serializes behind the
       // largest (measured 1.45 s single-task for 3 columns); an
-      // explicit column-keyed repartition keeps the per-column sorts
-      // parallel (parallelism = |cols|, the natural bound here)
+      // explicit column-keyed repartition spreads the per-column sorts
+      // over up to |cols| tasks (hashing may still put two columns in
+      // one partition)
       .repartition(cols.size, col("c"))
     val wCum = Window.partitionBy(col("c")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -119,6 +120,30 @@ object RobustScaling {
     }.toMap
   }
 
+  /** The `probs` quantiles of every column in one aggregation job: the
+    * distributed distribution path when exact (see [[exactQuantiles]]),
+    * the GK sketch aggregate otherwise. All-null columns are absent. */
+  private def quantiles(
+      df: DataFrame,
+      cols: Seq[String],
+      probs: Seq[Double],
+      quantileError: Double,
+      exact: Boolean): Map[String, Seq[Double]] =
+    if (exact) exactQuantiles(df, cols, probs)
+    else {
+      val qExprs: Seq[Column] = cols.map { c =>
+        percentile_approx(col(c).cast("double"),
+          array(probs.map(lit): _*),
+          lit(math.max(1, math.ceil(1.0 / quantileError).toInt))).as(c)
+      }
+      val row = df.agg(qExprs.head, qExprs.tail: _*).head()
+      cols.flatMap { c =>
+        val idx = row.fieldIndex(c)
+        if (row.isNullAt(idx)) None
+        else Some(c -> row.getSeq[Double](idx).toSeq)
+      }.toMap
+    }
+
   def apply(
       df: DataFrame,
       columns: Seq[String] = Nil,
@@ -127,28 +152,9 @@ object RobustScaling {
     val cols = if (columns.nonEmpty) columns else numericColumns(df)
     if (cols.isEmpty) return df
 
-    // One job computes q25/q50/q75 for every column at once: the
-    // distributed distribution path when exact (see [[exactQuantiles]]),
-    // the GK sketch aggregate otherwise.
-    val probs = Seq(0.25, 0.5, 0.75)
-    val quantiles: Map[String, Seq[Double]] =
-      if (exact) exactQuantiles(df, cols, probs)
-      else {
-        val qExprs: Seq[Column] = cols.map { c =>
-          percentile_approx(col(c).cast("double"),
-            array(probs.map(lit): _*),
-            lit(math.max(1, math.ceil(1.0 / quantileError).toInt))).as(c)
-        }
-        val row = df.agg(qExprs.head, qExprs.tail: _*).head()
-        cols.flatMap { c =>
-          val idx = row.fieldIndex(c)
-          if (row.isNullAt(idx)) None // all-null column
-          else Some(c -> row.getSeq[Double](idx).toSeq)
-        }.toMap
-      }
-
+    val qs = quantiles(df, cols, Seq(0.25, 0.5, 0.75), quantileError, exact)
     val scaled: Seq[(String, Column)] = cols.flatMap { c =>
-      quantiles.get(c).flatMap { case Seq(q25, q50, q75) =>
+      qs.get(c).flatMap { case Seq(q25, q50, q75) =>
         val iqr = q75 - q25
         if (iqr <= IqrGuard) None // constant column: skip, as the reference does
         else Some(s"${c}_scaled" -> ((col(c) - lit(q50)) / lit(iqr)))
@@ -185,27 +191,9 @@ object RobustScaling {
     val cols = if (columns.nonEmpty) columns else numericColumns(df)
     if (cols.isEmpty) return df
 
-    // Same exact-vs-sketch dual as [[apply]]: distributed distribution
-    // aggregation when exact (see [[exactQuantiles]]), GK otherwise.
-    val probs = Seq(lo, hi)
-    val quantiles: Map[String, Seq[Double]] =
-      if (exact) exactQuantiles(df, cols, probs)
-      else {
-        val qExprs: Seq[Column] = cols.map { c =>
-          percentile_approx(col(c).cast("double"),
-            array(probs.map(lit): _*),
-            lit(math.max(1, math.ceil(1.0 / quantileError).toInt))).as(c)
-        }
-        val row = df.agg(qExprs.head, qExprs.tail: _*).head()
-        cols.flatMap { c =>
-          val idx = row.fieldIndex(c)
-          if (row.isNullAt(idx)) None
-          else Some(c -> row.getSeq[Double](idx).toSeq)
-        }.toMap
-      }
-
+    val qs = quantiles(df, cols, Seq(lo, hi), quantileError, exact)
     val clipped: Seq[(String, Column)] = cols.flatMap { c =>
-      quantiles.get(c).map { case Seq(qlo, qhi) =>
+      qs.get(c).map { case Seq(qlo, qhi) =>
         s"${c}_wins" ->
           least(greatest(col(c).cast("double"), lit(qlo)), lit(qhi))
       }

@@ -31,7 +31,7 @@ object Dedup extends DedupPassages with DedupLines {
     * row_number window runs inside each partition. Skew-safe even for
     * a pathologically duplicated single document: Spark plans the
     * rn=1 filter as a WindowGroupLimit with a PARTIAL pass before the
-    * exchange (visible in `graft.Explain`), so each map task ships at
+    * exchange (visible in `graft.PlanDump`), so each map task ships at
     * most one row per hash — the hot key never concentrates.
     */
   def exact(df: DataFrame, textCol: String = "text",
@@ -1268,7 +1268,7 @@ object Dedup extends DedupPassages with DedupLines {
     * Cost note: the fingerprint aggregation feeds BOTH sides of the
     * self-join. Under AQE the two identical aggregation subtrees are
     * deduplicated at runtime — the executed plan carries a
-    * ReusedExchange (verify with SPARK_EXPLAIN_RUN=1 graft.Explain), so
+    * ReusedExchange (verify with `graft.PlanDump --final`), so
     * the corpus is scanned/aggregated once. With AQE disabled that
     * reuse is not guaranteed; compute [[simhashFingerprints]] once,
     * persist it under YOUR lifecycle, and call
