@@ -1,6 +1,6 @@
 package graft
 import org.json4s._
-import org.json4s.jackson.JsonMethods.{compact, parse}
+import org.json4s.jackson.JsonMethods.compact
 import BenchHarness.{r4, timedRun}
 
 object Bench {
@@ -46,7 +46,7 @@ object Bench {
     }
     val loadStart = loadAvg()
     case class QueryResult(name: String, sec: Double, ok: Boolean,
-      runs: Seq[Double], outRows: Option[Long], streamState: Option[String])
+      runs: Seq[Double], outRows: Option[Long], streamState: Option[JObject])
     def obj(fs: Seq[(String, JValue)]): JObject = JObject(fs.toList)
     val results = names.map { name =>
       val nRuns = if (baselineSet(name)) 3 else 2
@@ -74,7 +74,7 @@ object Bench {
     // whose read-back failed must not ship metrics next to passing rows
     val streamStateJson = obj(results.collect {
       case r if r.ok && r.streamState.isDefined =>
-        r.name -> parse(r.streamState.get) })
+        r.name -> r.streamState.get })
     val failed =
       JArray(results.collect { case r if !r.ok => JString(r.name) }.toList)
     val total = results.collect { case r if r.ok => r.sec }.sum

@@ -8,6 +8,7 @@ import graft.llm._
 import graft.operators.{Events, Profile, RangeJoin, Relational, Sketches, Skew}
 import graft.sources.Sources
 import graft.streaming.StreamOps
+import org.json4s.{JInt, JObject}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -648,7 +649,7 @@ object SparkEntry {
     * A registered query that runs several streams (e.g. the CDC
     * snapshot's two-phase ingest) reports its LAST stream's run.
     * None when no stream has run, or the last run had no progress. */
-  @volatile private[graft] var lastStreamMetrics: Option[String] = None
+  @volatile private[graft] var lastStreamMetrics: Option[JObject] = None
   private[graft] def recordStreamMetrics(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val ps = q.recentProgress.toSeq
@@ -656,19 +657,18 @@ object SparkEntry {
       if (ps.isEmpty) None
       else {
         val ops = ps.flatMap(_.stateOperators.toSeq)
-        val wallMs = ps.map(_.batchDuration).sum
-        val base = s""""batches":${ps.size},"batch_duration_ms":$wallMs"""
-        Some(if (ops.isEmpty) s"{$base}" else {
+        val base = List("batches" -> JInt(ps.size),
+          "batch_duration_ms" -> JInt(ps.map(_.batchDuration).sum))
+        Some(JObject(if (ops.isEmpty) base else base ++ List(
           // rows-total from the FINAL batch (it is a gauge, not a
           // counter); the time fields are per-batch costs, summed
-          val rowsTotal = ps.last.stateOperators.map(_.numRowsTotal).sum
-          s"""{$base,"state_rows_total":$rowsTotal,""" +
-            s""""state_rows_updated":${ops.map(_.numRowsUpdated).sum},""" +
-            s""""commit_ms":${ops.map(_.commitTimeMs).sum},""" +
-            s""""updates_ms":${ops.map(_.allUpdatesTimeMs).sum},""" +
-            s""""removals_ms":${ops.map(_.allRemovalsTimeMs).sum},""" +
-            s""""state_memory_bytes":${ops.map(_.memoryUsedBytes).max}}"""
-        })
+          "state_rows_total" ->
+            JInt(ps.last.stateOperators.map(_.numRowsTotal).sum),
+          "state_rows_updated" -> JInt(ops.map(_.numRowsUpdated).sum),
+          "commit_ms" -> JInt(ops.map(_.commitTimeMs).sum),
+          "updates_ms" -> JInt(ops.map(_.allUpdatesTimeMs).sum),
+          "removals_ms" -> JInt(ops.map(_.allRemovalsTimeMs).sum),
+          "state_memory_bytes" -> JInt(ops.map(_.memoryUsedBytes).max))))
       }
   }
 

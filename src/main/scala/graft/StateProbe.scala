@@ -1,6 +1,6 @@
 package graft
 import org.json4s._
-import org.json4s.jackson.JsonMethods.{compact, parse}
+import org.json4s.jackson.JsonMethods.compact
 import BenchHarness.r4
 
 /** State-store provider A/B probe for the streaming keepers (r17
@@ -55,7 +55,7 @@ object StateProbe {
             "sec" -> best.fold[JValue](JInt(-1))(b => r4(b._1)),
             "ok" -> JBool(allOk),
             "runs" -> JArray(runs.map(r => r4(r._1)).toList),
-            "stream_state" -> best.flatMap(_._3).fold[JValue](JNull)(parse(_)),
+            "stream_state" -> best.flatMap(_._3).getOrElse(JNull),
             "sf" -> JString(sfDir))))
       }
     }

@@ -194,8 +194,15 @@ object Dedup extends DedupPassages with DedupLines {
         Seq("id_b"), "left")
       .select(when(col("_within"), col("id_b")).otherwise(col("id_a"))
         .as(idCol))
-    newRows.join(losers.distinct(), Seq(idCol), "left_anti")
+    dropLosers(newRows, idCol, losers)
   }
+
+  /** The keep rule of every incremental dedup: `batch` minus the
+    * distinct ids of the `losers` frames (each one `idCol` column). */
+  private[llm] def dropLosers(batch: DataFrame, idCol: String,
+      losers: DataFrame*): DataFrame =
+    batch.join(losers.reduce(_ unionByName _).distinct(), Seq(idCol),
+      "left_anti")
 
   /** A persisted `histBands` table is only comparable under the exact
     * knobs that built it, so it requires them explicit. */
@@ -1198,8 +1205,7 @@ object Dedup extends DedupPassages with DedupLines {
         textCol = textCol, idCol = idCol)
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a").as(idCol))
-    newDocs.join(withinLosers.union(crossLosers).distinct(),
-      Seq(idCol), "left_anti")
+    dropLosers(newDocs, idCol, withinLosers, crossLosers)
   }
 
   // -------------------------------------------------------------- simhash
@@ -1610,23 +1616,35 @@ object Dedup extends DedupPassages with DedupLines {
   private def bandedRows(fps: DataFrame, idCol: String,
       bands: Int, saltCol: Option[String]): DataFrame = {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
-    val bandBits = 64 / bands
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1L
-    val blocks = (0 until bands).map { b =>
-      (b, shiftright(col("simhash"), b * bandBits).bitwiseAND(mask))
-    }
-    val bandStructs = saltCol match {
-      case Some(sc) =>
-        for { (b, key) <- blocks; off <- 0 to 1 } yield
-          struct(lit(b).as("band"), key.as("key"),
-            (col(sc) + lit(off)).as("salt"))
-      case None =>
-        blocks.map { case (b, key) =>
-          struct(lit(b).as("band"), key.as("key"))
-        }
-    }
     fps.select(col(idCol), col("simhash"),
-      explode(array(bandStructs: _*)).as("bk"))
+      explode(array(blockKeys(flips = false, bands).flatMap {
+        case (b, _, key) => bandStructs(b, key, saltCol)
+      }: _*)).as("bk"))
+  }
+
+  /** The block keys of the 64-bit `simhash` column: `(band, exact,
+    * key)` per `64 / bands`-bit block — with `flips`, each block's
+    * exact key followed by its one-bit flips ([[multiprobeBandedRows]]
+    * explains the 4×16-bit multiprobe layout). The one key recipe
+    * under every struct and `xxhash64` Hamming band key. */
+  private def blockKeys(flips: Boolean,
+      bands: Int = 4): Seq[(Int, Boolean, Column)] = {
+    val bits = 64 / bands
+    val mask = if (bits == 64) -1L else (1L << bits) - 1L
+    for { b <- 0 until bands; v <- 0 to (if (flips) bits else 0) } yield {
+      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
+      (b, v == 0, if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1))))
+    }
+  }
+
+  /** A struct band key `(band, key)`; with a salt column, twice — at
+    * salt and salt+1 — so same-or-adjacent salt buckets still collide
+    * (see [[bandedRows]]). */
+  private def bandStructs(band: Int, key: Column,
+      saltCol: Option[String]): Seq[Column] = saltCol match {
+    case Some(sc) => (0 to 1).map(off => struct(lit(band).as("band"),
+      key.as("key"), (col(sc) + lit(off)).as("salt")))
+    case None => Seq(struct(lit(band).as("band"), key.as("key")))
   }
 
   /** Banded candidate pairs with exact Hamming distance, BEFORE the
@@ -1660,33 +1678,8 @@ object Dedup extends DedupPassages with DedupLines {
     * simhashes (cf. Manku, Jain & Das Sarma, "Detecting Near-
     * Duplicates for Web Crawling", WWW 2007). */
   private def multiprobeBandedRows(fps: DataFrame, idCol: String,
-      saltCol: Option[String]): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
-    val variants = for { b <- 0 until bands; v <- 0 to bits } yield {
-      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
-      val key =
-        if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1)))
-      (v, struct(lit(b).as("band"), key.as("key")))
-    }
-    val probeStructs = saltCol match {
-      case Some(sc) =>
-        for { (v, bk0) <- variants; off <- 0 to 1 } yield
-          struct(
-            struct(bk0.getField("band").as("band"),
-              bk0.getField("key").as("key"),
-              (col(sc) + lit(off)).as("salt")).as("bk"),
-            lit(v == 0).as("exact"))
-      case None =>
-        variants.map { case (v, bk0) =>
-          struct(bk0.as("bk"), lit(v == 0).as("exact"))
-        }
-    }
-    fps.select(col(idCol), col("simhash"),
-      explode(array(probeStructs: _*)).as("p"))
-      .select(col(idCol), col("simhash"),
-        col("p.bk").as("bk"), col("p.exact").as("exact"))
+      saltCol: Option[String]): DataFrame =
+    probeRows(fps, idCol)(bandStructs(_, _, saltCol))
       // explicit exchange on the join/window key (the minhashBandKeys
       // discipline, load-bearing here): the 17× explode hides its row
       // growth from size estimates, so without the exchange the
@@ -1697,7 +1690,19 @@ object Dedup extends DedupPassages with DedupLines {
       // and the star window partitions by the same key — no extra
       // shuffle anywhere.
       .repartition(col("bk"))
-  }
+
+  /** The multiprobe rows `(idCol, simhash, bk, exact)` of `fps`: every
+    * [[blockKeys]] key and its 16 flips, each made band keys by
+    * `bandKeys(band, key)`; `exact` tags the unflipped rows. */
+  private def probeRows(fps: DataFrame, idCol: String)(
+      bandKeys: (Int, Column) => Seq[Column]): DataFrame =
+    fps.select(col(idCol), col("simhash"),
+        explode(array(blockKeys(flips = true).flatMap {
+          case (b, exact, key) => bandKeys(b, key)
+            .map(bk => struct(bk.as("bk"), lit(exact).as("exact")))
+        }: _*)).as("p"))
+      .select(col(idCol), col("simhash"),
+        col("p.bk").as("bk"), col("p.exact").as("exact"))
 
   /** EXACT multiprobe block keys over a `(idCol, simhash)` frame — the
     * PERSISTABLE banding seam shared by the incremental twins (text
@@ -1714,16 +1719,11 @@ object Dedup extends DedupPassages with DedupLines {
     * candidate joins verify in-place — history text is NEVER
     * re-tokenized. */
   private[graft] def exactBlockKeys(fps: DataFrame,
-      idCol: String): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
+      idCol: String): DataFrame =
     fps.select(col(idCol), col("simhash"),
-      explode(array((0 until bands).map { b =>
-        xxhash64(lit(b),
-          shiftright(col("simhash"), b * bits).bitwiseAND(mask))
+      explode(array(blockKeys(flips = false).map {
+        case (b, _, key) => xxhash64(lit(b), key)
       }: _*)).as("bk"))
-  }
 
   /** Batch-side probe rows for [[exactBlockKeys]] histories: exact
     * block keys plus all 16 one-bit flips per band (68 rows per doc),
@@ -1750,21 +1750,8 @@ object Dedup extends DedupPassages with DedupLines {
     * plans its own Exchange on the extracted key, which a repartition
     * by the column cannot satisfy — the minhashBandedShingles rule. */
   private[graft] def multiprobeProbeKeysFlagged(fps: DataFrame,
-      idCol: String): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
-    val probeStructs = for { b <- 0 until bands; v <- 0 to bits } yield {
-      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
-      val key =
-        if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1)))
-      struct(xxhash64(lit(b), key).as("bk"), lit(v == 0).as("exact"))
-    }
-    fps.select(col(idCol), col("simhash"),
-        explode(array(probeStructs: _*)).as("p"))
-      .select(col(idCol), col("simhash"),
-        col("p.bk").as("bk"), col("p.exact").as("exact"))
-  }
+      idCol: String): DataFrame =
+    probeRows(fps, idCol)((b, key) => Seq(xxhash64(lit(b), key)))
 
   /** Persistable history band keys for [[simhashIncremental]] —
     * [[exactBlockKeys]] over the corpus fingerprints. Compute ONCE on
@@ -1808,24 +1795,41 @@ object Dedup extends DedupPassages with DedupLines {
       textCol: String = "text",
       idCol: String = "doc_id",
       maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"simhashIncremental: multiprobe banding guarantees recall only " +
-        s"for maxHamming <= 7, got $maxHamming")
+    requireMultiprobeBudget("simhashIncremental", maxHamming)
     val fps = simhashFingerprints(newDocs, textCol, idCol)
       .select(col(idCol), col("simhash"))
       .localCheckpoint(false)
+    hammingIncremental(fps, fps, histBands,
+      simhashCandidatesMultiprobe(fps, idCol, None)
+        .filter(col("hamming") <= maxHamming), idCol, maxHamming)
+  }
+
+  /** The Hamming incremental under [[simhashIncremental]] and
+    * [[Multimodal.dHashIncremental]]. Cross losers: the multiprobe
+    * probes of the batch fingerprints `fps` (`idCol`, `simhash`)
+    * equi-joined to the persisted [[exactBlockKeys]] history, verified
+    * by full `bit_count` ≤ `maxHamming`. Within losers: the id_b side
+    * of the verified `withinPairs`. Both drop from `batch`. */
+  private[llm] def hammingIncremental(batch: DataFrame, fps: DataFrame,
+      histBands: DataFrame, withinPairs: DataFrame, idCol: String,
+      maxHamming: Int): DataFrame = {
     val crossLosers = multiprobeProbeKeys(fps, idCol)
       .join(histBands.select(col(idCol).as("hist_id"),
         col("simhash").as("hist_simhash"), col("bk")), "bk")
       .filter(bit_count(col("simhash").bitwiseXOR(col("hist_simhash")))
         <= maxHamming)
       .select(col(idCol))
-    val withinLosers = simhashCandidatesMultiprobe(fps, idCol, None)
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_b").as(idCol))
-    fps.join(crossLosers.unionByName(withinLosers).distinct(),
-      Seq(idCol), "left_anti")
+    dropLosers(batch, idCol, crossLosers,
+      withinPairs.select(col("id_b").as(idCol)))
   }
+
+  /** Multiprobe banding is recall-complete only for Hamming budgets
+    * 0..7 (see [[multiprobeBandedRows]]); `op` names the caller. */
+  private[graft] def requireMultiprobeBudget(op: String,
+      maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 7,
+      s"$op: multiprobe banding guarantees recall only for a Hamming " +
+        s"budget in 0..7, got $maxHamming")
 
   /** [[simhashCandidates]] over multiprobe buckets: bucket-mates where
     * at least ONE side is an exact row (two flips meeting proves only
@@ -1849,8 +1853,8 @@ object Dedup extends DedupPassages with DedupLines {
   def simhashStarFromFingerprintsMultiprobe(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 6,
       saltCol: Option[String] = None): DataFrame = {
-    require(maxHamming <= 7,
-      s"multiprobe recall guarantee covers Hamming <= 7, got $maxHamming")
+    requireMultiprobeBudget("simhashStarFromFingerprintsMultiprobe",
+      maxHamming)
     starLinksFromBanded(
       multiprobeBandedRows(fps, idCol, saltCol), idCol, maxHamming)
   }

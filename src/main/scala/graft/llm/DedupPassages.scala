@@ -243,7 +243,6 @@ trait DedupPassages { self: Dedup.type =>
       .select(col(idCol))
     val withinLosers = sharedChunkPairs(batchKept, idCol, minShared)
       .select(col("id_b").as(idCol))
-    newDocs.join(crossLosers.union(withinLosers).distinct(),
-      Seq(idCol), "left_anti")
+    dropLosers(newDocs, idCol, crossLosers, withinLosers)
   }
 }

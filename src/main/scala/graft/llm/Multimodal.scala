@@ -346,9 +346,7 @@ object Multimodal {
       hashes: DataFrame,
       maxHamming: Int = 6,
       idCol: String = "doc_id"): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"dHashPairs: banding guarantees recall only for maxHamming <= 7, " +
-        s"got $maxHamming")
+    Dedup.requireMultiprobeBudget("dHashPairs", maxHamming)
     val gh = graft.functions.BmpDHash.GridH
     val dCols = (0 until gh).map(y => col(s"d$y"))
     val valid = hashes.filter(col("d0").isNotNull)
@@ -451,19 +449,10 @@ object Multimodal {
       histBands: DataFrame,
       maxHamming: Int = 2,
       idCol: String = "doc_id"): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"dHashIncremental: multiprobe banding guarantees recall only " +
-        s"for maxHamming <= 7, got $maxHamming")
-    val crossLosers = dHashProbes(newHashes, idCol)
-      .join(histBands.select(col(idCol).as("hist_id"),
-        col("simhash").as("hist_simhash"), col("bk")), "bk")
-      .filter(bit_count(col("simhash").bitwiseXOR(col("hist_simhash")))
-        <= maxHamming)
-      .select(col(idCol))
-    val withinLosers = dHashPairs(newHashes, maxHamming, idCol)
-      .select(col("id_b").as(idCol))
-    newHashes.join(crossLosers.unionByName(withinLosers).distinct(),
-      Seq(idCol), "left_anti")
+    Dedup.requireMultiprobeBudget("dHashIncremental", maxHamming)
+    Dedup.hammingIncremental(newHashes, packedFps(newHashes, idCol),
+      histBands, dHashPairs(newHashes, maxHamming, idCol), idCol,
+      maxHamming)
   }
 
   /** REAL pixel path, third codec and second MODALITY (round 13):

@@ -606,16 +606,13 @@ object StreamOps {
     }
   }
 
-  /** The keeper+predecessor machine under [[nearDedupStream]] and
-    * [[nearDedupCosineStream]]: rows group by band key (`bucket`); per
-    * bucket, each row in id order — as an `(id, payload)` `entry` —
-    * is checked by `verify(id, payload, candidate id, candidate
-    * payload)` against the bucket's KEEPER (min id seen, carried in
-    * state as `S`) and its in-batch PREDECESSOR, whichever have a
-    * smaller id. Emits every verified link, append mode. With `ttl`, a
-    * bucket idle past the horizon evicts its keeper (a later near-dup
-    * of it re-enters as a fresh keeper); any batch touching the bucket
-    * renews the horizon. */
+  /** The keeper+predecessor step under [[nearDedupStream]] and
+    * [[nearDedupCosineStream]], run per band key (`bucket`) by
+    * [[bucketStateStream]]: each row in id order — as an `(id,
+    * payload)` `entry` — is checked by `verify(id, payload, candidate
+    * id, candidate payload)` against the bucket's KEEPER (min id seen,
+    * carried in state as `S`) and its in-batch PREDECESSOR, whichever
+    * have a smaller id. Emits every verified link. */
   private def keeperChainStream[R, P, S: Encoder, O: Encoder](
       banded: Dataset[R],
       ttl: Option[String],
@@ -623,7 +620,30 @@ object StreamOps {
       entry: R => (Long, P),
       toKeeper: (Long, P) => S,
       fromKeeper: S => (Long, P))(
-      verify: (Long, P, Long, P) => Option[O]): Dataset[O] = {
+      verify: (Long, P, Long, P) => Option[O]): Dataset[O] =
+    bucketStateStream[R, S, O](banded, ttl, bucket) { (it, state) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[O]
+      var keeper = state.map(fromKeeper)
+      var prev: Option[(Long, P)] = None
+      it.map(entry).toVector.sortBy(_._1).foreach { case d @ (id, p) =>
+        (keeper.toSeq ++ prev.toSeq).filter(_._1 < id).distinctBy(_._1)
+          .foreach { case (cid, cp) => out ++= verify(id, p, cid, cp) }
+        if (keeper.forall(_._1 > id)) keeper = Some(d)
+        prev = Some(d)
+      }
+      (keeper.map { case (kid, kp) => toKeeper(kid, kp) }, out.iterator)
+    }
+
+  /** The bucket-state machine under every near-dup keeper: rows group
+    * by `bucket`, and `step(rows, state)` returns the bucket's next
+    * state (None keeps it as is) and its links, append mode. With
+    * `ttl`, a bucket idle past the horizon evicts its state (a later
+    * near-dup of it re-enters fresh); any batch that updates the
+    * bucket renews the horizon. */
+  private def bucketStateStream[R, S: Encoder, O: Encoder](
+      banded: Dataset[R], ttl: Option[String], bucket: R => Long)(
+      step: (Iterator[R], Option[S]) => (Option[S], Iterator[O])
+      ): Dataset[O] = {
     import banded.sparkSession.implicits._
     val timeoutConf =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
@@ -635,20 +655,12 @@ object StreamOps {
             state.remove()
             Iterator.empty
           } else {
-            val out = scala.collection.mutable.ArrayBuffer.empty[O]
-            var keeper = state.getOption.map(fromKeeper)
-            var prev: Option[(Long, P)] = None
-            it.map(entry).toVector.sortBy(_._1).foreach { case d @ (id, p) =>
-              (keeper.toSeq ++ prev.toSeq).filter(_._1 < id).distinctBy(_._1)
-                .foreach { case (cid, cp) => out ++= verify(id, p, cid, cp) }
-              if (keeper.forall(_._1 > id)) keeper = Some(d)
-              prev = Some(d)
-            }
-            keeper.foreach { case (kid, kp) =>
-              state.update(toKeeper(kid, kp))
+            val (next, out) = step(it, state.getOption)
+            next.foreach { s =>
+              state.update(s)
               ttl.foreach(state.setTimeoutDuration)
             }
-            out.iterator
+            out
           }
       }
   }
@@ -704,51 +716,32 @@ object StreamOps {
       maxHamming: Int = 2,
       ttl: Option[String] = None): Dataset[HashNearLink] = {
     import banded.sparkSession.implicits._
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"nearDedupHashStream: multiprobe banding guarantees recall only " +
-        s"for maxHamming <= 7, got $maxHamming")
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    banded.groupByKey(_.bk)
-      .flatMapGroupsWithState[HashBucketEntries, HashNearLink](
-        OutputMode.Append, timeoutConf) {
-        case (_, it: Iterator[BandedHashRow],
-            state: GroupState[HashBucketEntries]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // one logical presence per doc in this bucket: a doc's
-            // exact key and a flip of another block can hash-collide
-            // into the same bucket — fold to (fingerprint, any exact)
-            val docs = it.toArray.groupBy(_.doc_id).iterator
-              .map { case (id, rows) =>
-                (id, rows.head.simhash, rows.exists(_.exact))
-              }
-              .toArray.sortBy(_._1)
-            var entries = state.getOption
-              .map(_.entries).getOrElse(Map.empty[Long, Long])
-            val out =
-              scala.collection.mutable.ArrayBuffer.empty[HashNearLink]
-            docs.foreach { case (id, sim, isExact) =>
-              entries.foreach { case (h, minId) =>
-                if (minId < id) {
-                  val ham = java.lang.Long.bitCount(sim ^ h)
-                  if (ham <= maxHamming) out += HashNearLink(id, minId, ham)
-                }
-              }
-              if (isExact && entries.getOrElse(sim, Long.MaxValue) > id)
-                entries = entries.updated(sim, id)
-            }
-            if (entries.nonEmpty) {
-              state.update(HashBucketEntries(entries))
-              // any batch touching the bucket renews its horizon
-              ttl.foreach(state.setTimeoutDuration)
-            }
-            out.iterator
+    graft.llm.Dedup.requireMultiprobeBudget("nearDedupHashStream",
+      maxHamming)
+    bucketStateStream[BandedHashRow, HashBucketEntries, HashNearLink](
+        banded, ttl, _.bk) { (it, state) =>
+      // one logical presence per doc in this bucket: a doc's exact key
+      // and a flip of another block can hash-collide into the same
+      // bucket — fold to (fingerprint, any exact)
+      val docs = it.toArray.groupBy(_.doc_id).iterator
+        .map { case (id, rows) =>
+          (id, rows.head.simhash, rows.exists(_.exact)) }
+        .toArray.sortBy(_._1)
+      var entries = state.map(_.entries).getOrElse(Map.empty[Long, Long])
+      val out = scala.collection.mutable.ArrayBuffer.empty[HashNearLink]
+      docs.foreach { case (id, sim, isExact) =>
+        entries.foreach { case (h, minId) =>
+          if (minId < id) {
+            val ham = java.lang.Long.bitCount(sim ^ h)
+            if (ham <= maxHamming) out += HashNearLink(id, minId, ham)
           }
+        }
+        if (isExact && entries.getOrElse(sim, Long.MaxValue) > id)
+          entries = entries.updated(sim, id)
       }
+      (Option.when(entries.nonEmpty)(HashBucketEntries(entries)),
+        out.iterator)
+    }
   }
 
   /** STREAMING cosine near-duplicate dedup — the EMBEDDING modality's

@@ -515,28 +515,40 @@ class DedupSpec extends SparkSpec {
     graft.sources.Sources.writeBucketed(Dedup.embeddingBandKeys(
         vecs, numTables = tables, bitsPerTable = bits),
       "graft_emb_bands_degen", "bk", numBuckets = 4)
+    graft.sources.Sources.writeBucketed(Dedup.simhashBandKeysExact(hist),
+      "graft_sh_bands_degen", "bk", numBuckets = 4)
+    graft.sources.Sources.writeBucketed(Dedup.passageChunkKeys(hist),
+      "graft_psg_chunks_degen", "chunk", numBuckets = 4)
     def ids(df: DataFrame): Set[Long] =
       df.collect().map(_.getLong(0)).toSet
-    // survivors of the in-query and the persisted-history leg
-    def minhashLegs(batch: Seq[(Long, String)]): Seq[Set[Long]] =
+    // survivors of minhash's in-query and persisted-history legs, then
+    // of the simhash and passage incrementals (persisted history only)
+    def textLegs(batch: Seq[(Long, String)]): Seq[Set[Long]] = {
+      val b = batch.toDF("doc_id", "text")
       Seq(None, Some(spark.table("graft_mh_bands_degen"))).map(hb =>
-        ids(Dedup.minhashIncremental(batch.toDF("doc_id", "text"), hist,
-          histBands = hb).select("doc_id")))
+        ids(Dedup.minhashIncremental(b, hist, histBands = hb)
+          .select("doc_id"))) ++ Seq(
+        ids(Dedup.simhashIncremental(b,
+          spark.table("graft_sh_bands_degen")).select("doc_id")),
+        ids(Dedup.passageIncremental(b,
+          spark.table("graft_psg_chunks_degen")).select("doc_id")))
+    }
     def embeddingLegs(batch: Seq[(Long, Seq[Double])]): Seq[Set[Long]] =
       Seq(None, Some(spark.table("graft_emb_bands_degen"))).map(hb =>
         ids(Dedup.embeddingIncremental(batch.toDF("vec_id", "embedding"),
           vecs, minCosine = 0.99, numHashTables = tables,
           bitsPerTable = bits, histBands = hb).select("vec_id")))
-    // tokens no history doc has, disjoint across i
-    def novelText(i: Int) = (0 until 12).map(j => s"zzq${i}w$j").mkString(" ")
+    // tokens no history doc has, disjoint across i; long enough for
+    // several CDC chunks (passageIncremental drops on >= 2 shared)
+    def novelText(i: Int) = (0 until 60).map(j => s"zzq${i}w$j").mkString(" ")
     val rng = new scala.util.Random(5)
     def novelVec() = Seq.fill(dim)(rng.nextGaussian())
     try {
-      assert(minhashLegs(Nil).forall(_.isEmpty))
+      assert(textLegs(Nil).forall(_.isEmpty))
       assert(embeddingLegs(Nil).forall(_.isEmpty))
 
       val freshIds = (0 until 5).map(600000L + _)
-      assert(minhashLegs(freshIds.map(i => (i, novelText(i.toInt))))
+      assert(textLegs(freshIds.map(i => (i, novelText(i.toInt))))
         .forall(_ == freshIds.toSet))
       assert(embeddingLegs(freshIds.map(i => (i, novelVec())))
         .forall(_ == freshIds.toSet))
@@ -548,12 +560,42 @@ class DedupSpec extends SparkSpec {
       val groups = Seq(600012L -> 0, 600010L -> 0, 600021L -> 1,
         600011L -> 0, 600020L -> 1)
       val mins = Set(600010L, 600020L)
-      assert(minhashLegs(groups.map { case (i, g) =>
+      assert(textLegs(groups.map { case (i, g) =>
         (i, if (g == 0) ta else tb) }).forall(_ == mins))
       assert(embeddingLegs(groups.map { case (i, g) =>
         (i, if (g == 0) va else vb) }).forall(_ == mins))
-    } finally Seq("graft_mh_bands_degen", "graft_emb_bands_degen")
+    } finally Seq("graft_mh_bands_degen", "graft_emb_bands_degen",
+        "graft_sh_bands_degen", "graft_psg_chunks_degen")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("multiprobe Hamming budget: every multiprobe entry point rejects " +
+      "-1 and 8 and names itself; a negative budget is not an empty " +
+      "\"no duplicates\" result") {
+    val s = spark
+    import s.implicits._
+    val text = docs.select("doc_id", "text")
+    val fps = Dedup.simhashFingerprints(text).select("doc_id", "simhash")
+    val hashes = Multimodal.bmpDHash(
+      Seq((1L, Array[Byte](1, 2))).toDF("doc_id", "payload"), "payload")
+    val stream = Seq.empty[graft.streaming.BandedHashRow].toDS()
+    val entryPoints = Seq[(String, Int => Any)](
+      "simhashIncremental" -> (h => Dedup.simhashIncremental(text,
+        Dedup.simhashBandKeysExact(text), maxHamming = h)),
+      "simhashStarFromFingerprintsMultiprobe" -> (h =>
+        Dedup.simhashStarFromFingerprintsMultiprobe(fps, maxHamming = h)),
+      "dHashPairs" -> (h => Multimodal.dHashPairs(hashes, maxHamming = h)),
+      "dHashIncremental" -> (h => Multimodal.dHashIncremental(hashes,
+        Multimodal.dHashBandKeys(hashes), maxHamming = h)),
+      "nearDedupHashStream" -> (h => graft.streaming.StreamOps
+        .nearDedupHashStream(stream, maxHamming = h)),
+      // the production composition over the multiprobe star
+      "simhashStarFromFingerprintsMultiprobe" -> (h =>
+        Dedup.simhashVerifiedStarFirst(text, maxHamming = h)))
+    for ((op, call) <- entryPoints; h <- Seq(-1, 8)) {
+      val e = intercept[IllegalArgumentException](call(h))
+      assert(e.getMessage.contains(op), e.getMessage)
+    }
   }
 
   test("minhash/embeddingIncremental: the final plan reads the candidate " +

@@ -427,24 +427,39 @@ class MultimodalSpec extends SparkSpec {
     val bumped = bmp(Seq.fill(7)(gradRow) :+ bumpRow, 9, 8)
     val const = bmp(Seq.fill(8)((0 until 9).flatMap(_ =>
       Seq(7, 7, 7)) :+ 0), 9, 8)
+    val nonBmp = "not a bitmap, just bytes.........................."
+      .getBytes("US-ASCII")
+    // random gray levels: random dHash bits, far from every other image
+    val rng = new scala.util.Random(11)
+    def noise() = bmp(Seq.fill(8)((0 until 9).flatMap { _ =>
+      val v = rng.nextInt(256); Seq(v, v, v) } :+ 0), 9, 8)
     val hist = Multimodal.bmpDHash(
       Seq((1L, grad)).toDF("doc_id", "payload"), "payload")
-    val batch = Multimodal.bmpDHash(Seq(
-      (10L, grad),    // clone of history 1 — cross loser at hamming 0
-      (11L, bumped),  // hamming 1 from history 1 — cross loser
-      (12L, const),   // novel — survives
-      (13L, const),   // clone of 12 WITHIN the batch — within loser
-      (14L, "not a bitmap, just bytes.........................."
-        .getBytes("US-ASCII"))) // non-BMP: no signature, survives
-      .toDF("doc_id", "payload"), "payload")
     graft.sources.Sources.writeBucketed(
       Multimodal.dHashBandKeys(hist), "graft_test_ph_hist", "bk",
       numBuckets = 4)
-    try {
-      val surv = Multimodal.dHashIncremental(
-          batch, spark.table("graft_test_ph_hist"), maxHamming = 2)
+    def survivors(batch: Seq[(Long, Array[Byte])]): Set[Long] =
+      Multimodal.dHashIncremental(
+          Multimodal.bmpDHash(batch.toDF("doc_id", "payload"), "payload"),
+          spark.table("graft_test_ph_hist"), maxHamming = 2)
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(surv == Set(12L, 14L))
+    try {
+      assert(survivors(Seq(
+        10L -> grad,    // clone of history 1 — cross loser at hamming 0
+        11L -> bumped,  // hamming 1 from history 1 — cross loser
+        12L -> const,   // novel — survives
+        13L -> const,   // clone of 12 WITHIN the batch — within loser
+        14L -> nonBmp)) // non-BMP: no signature, survives
+        == Set(12L, 14L))
+      // degenerate batches: empty → empty; no candidate pair → every
+      // row kept; copy groups listed out of id order → the smallest id
+      // of each; the non-BMP row survives each
+      assert(survivors(Nil).isEmpty)
+      assert(survivors((20L to 24L).map(_ -> noise()) :+ (25L -> nonBmp))
+        == (20L to 25L).toSet)
+      val (a, b) = (noise(), noise())
+      assert(survivors(Seq(32L -> a, 30L -> a, 41L -> b, 31L -> a,
+        40L -> b, 50L -> nonBmp)) == Set(30L, 40L, 50L))
     } finally spark.sql("DROP TABLE IF EXISTS graft_test_ph_hist")
   }
 

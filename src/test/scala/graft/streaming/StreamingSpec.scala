@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, jvalue2monadic}
 
 /** The same StreamOps code path must produce identical results whether
   * driven as a batch DataFrame or as a Structured Streaming source —
@@ -1144,6 +1145,16 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** A numeric field of the state metrics the last stream run recorded. */
+  private def streamMetric(k: String): Long = {
+    val js = graft.SparkEntry.lastStreamMetrics
+      .getOrElse(fail("no stream metrics recorded"))
+    js \ k match {
+      case JInt(v) => v.toLong
+      case _ => fail(s"field $k missing in $js")
+    }
+  }
+
   test("stream keeper state metrics ride the run harness into the bench " +
       "side-channel: state rows bounded by bands x docs, commit/update " +
       "times recorded (r16 verdict item 4)") {
@@ -1155,23 +1166,19 @@ class StreamingSpec extends SparkSpec {
     graft.SparkEntry.queries("stream_dedup_near")(spark, sf0001).count()
     val js = graft.SparkEntry.lastStreamMetrics
       .getOrElse(fail("no stream metrics recorded"))
-    def field(k: String): Long = {
-      val re = ("\"" + k + "\":(-?\\d+)").r
-      re.findFirstMatchIn(js).map(_.group(1).toLong)
-        .getOrElse(fail(s"field $k missing in $js"))
-    }
     val nDocs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id").distinct().count()
-    assert(field("batches") >= 1)
-    assert(field("batch_duration_ms") > 0)
-    val stateRows = field("state_rows_total")
+    assert(streamMetric("batches") >= 1)
+    assert(streamMetric("batch_duration_ms") > 0)
+    val stateRows = streamMetric("state_rows_total")
     // one keeper per occupied band bucket: > 0, and never more than
     // bands (<= 64 by minhashKnobs' clamp) per distinct doc
     assert(stateRows > 0, js)
     assert(stateRows <= 64L * nDocs, js)
-    assert(field("state_rows_updated") >= stateRows, js)
-    assert(field("commit_ms") >= 0 && field("updates_ms") >= 0, js)
-    assert(field("state_memory_bytes") > 0, js)
+    assert(streamMetric("state_rows_updated") >= stateRows, js)
+    assert(streamMetric("commit_ms") >= 0, js)
+    assert(streamMetric("updates_ms") >= 0, js)
+    assert(streamMetric("state_memory_bytes") > 0, js)
   }
 
   test("Hamming keeper state-growth LAW, exactly: state rows == distinct " +
@@ -1183,11 +1190,7 @@ class StreamingSpec extends SparkSpec {
     // keys. This is the "state linear in distinct fingerprints"
     // contract as an equality, not a bound.
     graft.SparkEntry.queries("stream_phash_near")(spark, sf0001).count()
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
-    val stateRows = "\"state_rows_total\":(\\d+)".r
-      .findFirstMatchIn(js).map(_.group(1).toLong)
-      .getOrElse(fail(s"state_rows_total missing in $js"))
+    val stateRows = streamMetric("state_rows_total")
     import org.apache.spark.sql.functions.col
     val expected = graft.llm.Multimodal.dHashStreamBanded(
         graft.llm.Multimodal.bmpDHash(
@@ -1206,11 +1209,7 @@ class StreamingSpec extends SparkSpec {
     // any row lands in — so state rows must equal the batch-side
     // distinct band-key count of the same fixture.
     graft.SparkEntry.queries("stream_embed_near")(spark, sf0001).count()
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
-    val stateRows = "\"state_rows_total\":(\\d+)".r
-      .findFirstMatchIn(js).map(_.group(1).toLong)
-      .getOrElse(fail(s"state_rows_total missing in $js"))
+    val stateRows = streamMetric("state_rows_total")
     import org.apache.spark.sql.functions._
     // the registration's fixture, batch-side: corpus + the three
     // in-flight plants, banded under the same knobs
@@ -1250,11 +1249,7 @@ class StreamingSpec extends SparkSpec {
     // scaladoc contract as a CI equality, matching the Hamming and
     // cosine keepers' law tests above.
     graft.SparkEntry.queries("stream_dedup_near")(spark, sf0001).count()
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
-    val stateRows = "\"state_rows_total\":(\\d+)".r
-      .findFirstMatchIn(js).map(_.group(1).toLong)
-      .getOrElse(fail(s"state_rows_total missing in $js"))
+    val stateRows = streamMetric("state_rows_total")
     import org.apache.spark.sql.functions.col
     val expected = graft.llm.Dedup.minhashBandedShingles(
         spark.read.parquet(s"$sf0001/documents.parquet")
@@ -1275,11 +1270,7 @@ class StreamingSpec extends SparkSpec {
     // batch-side distinct key count — the last of the four keepers'
     // state laws as an equality (r17 verdict item 6).
     graft.SparkEntry.queries("stream_dedup_keys")(spark, sf0001).count()
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
-    val stateRows = "\"state_rows_total\":(\\d+)".r
-      .findFirstMatchIn(js).map(_.group(1).toLong)
-      .getOrElse(fail(s"state_rows_total missing in $js"))
+    val stateRows = streamMetric("state_rows_total")
     val expected = spark.read.parquet(s"$sf0001/events.parquet")
       .select("user_id", "event_type").distinct().count()
     assert(stateRows === expected,
