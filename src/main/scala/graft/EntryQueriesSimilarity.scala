@@ -20,6 +20,27 @@ import graft.SparkEntry._
   * not change; [[SparkEntry.queries]] assembles the slices and pins
   * key-disjointness. */
 private[graft] object EntryQueriesSimilarity {
+  /** The one recall aggregation under the four `*_recall` rows:
+    * per query, how many of the exact cosine top-10 (6dp, the
+    * similarity_topk leg) the `approx` probe of the first 10 vectors
+    * found. `approx` gets `(session, dir, embeddings, queries)`. */
+  private def recallAt10(
+      approx: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val emb = embeddings(s, dir)
+    val qs = emb.filter(col("vec_id") < 10)
+    val truth = Similarity.cosineTopK(emb, qs, k = 10, roundAt = 6)
+      .select("query_id", "neighbor_id")
+    val hits = approx(s, dir, emb, qs)
+      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
+    truth.join(hits, Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_truth"),
+        coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hit"),
+        round(coalesce(sum(col("hit")), lit(0)) / count(lit(1)), 6)
+          .as("recall"))
+  }
+
   // Seq, not Map (r17 advice #5): a key accidentally registered twice
   // in ONE literal would silently last-wins inside a Map before any
   // disjointness check could see it; as a Seq the duplicate survives
@@ -144,21 +165,9 @@ private[graft] object EntryQueriesSimilarity {
     // cell-pruned scan is pinned, not just its shape. The truth leg
     // broadcasts the 10 query vectors (cosineTopK's contract); the
     // membership join is per-query top-10 rows on both sides.
-    "similarity_ivf_recall" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 10)
-      val truth = Similarity.cosineTopK(emb, qs, k = 10, roundAt = 6)
-        .select("query_id", "neighbor_id")
-      val approx = Similarity.ivfProbe(cachedIvfHashInit(s, dir), qs,
-          k = 10, nProbe = 4, roundAt = 6)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hit"),
-          round(coalesce(sum(col("hit")), lit(0)) / count(lit(1)), 6)
-            .as("recall"))
-    }),
+    "similarity_ivf_recall" -> recallAt10((s, dir, _, qs) =>
+      Similarity.ivfProbe(cachedIvfHashInit(s, dir), qs,
+        k = 10, nProbe = 4, roundAt = 6)),
 
     // Product quantization: codes-only ANN scan (the compressed-corpus
     // complement of IVF's pruned scan). Registered with the HASH-INIT
@@ -185,21 +194,9 @@ private[graft] object EntryQueriesSimilarity {
     // deterministic hash-init codebook as similarity_pq, so the
     // recall is hash-exact against an oracle re-deriving BOTH
     // rankings.
-    "similarity_pq_recall" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 10)
-      val truth = Similarity.cosineTopK(emb, qs, k = 10, roundAt = 6)
-        .select("query_id", "neighbor_id")
-      val approx = Similarity.pqProbe(Similarity.pqIndexHashInit(emb), qs,
-          k = 10, roundAt = 6)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hit"),
-          round(coalesce(sum(col("hit")), lit(0)) / count(lit(1)), 6)
-            .as("recall"))
-    }),
+    "similarity_pq_recall" -> recallAt10((_, _, emb, qs) =>
+      Similarity.pqProbe(Similarity.pqIndexHashInit(emb), qs,
+        k = 10, roundAt = 6)),
 
     // Scalar quantization (SQ8) — the TRAINLESS quantizer: bounds are
     // one exact min/max aggregate, so unlike the seeded-fit indexes
@@ -219,21 +216,8 @@ private[graft] object EntryQueriesSimilarity {
     // the family (expected near-1 recall; the row makes that a gated
     // number instead of a spec-only bound). Trainless exact bounds →
     // hash-exact.
-    "similarity_sq8_recall" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 10)
-      val truth = Similarity.cosineTopK(emb, qs, k = 10, roundAt = 6)
-        .select("query_id", "neighbor_id")
-      val approx = Similarity.sqProbe(Similarity.sqIndex(emb), qs,
-          k = 10, roundAt = 6)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hit"),
-          round(coalesce(sum(col("hit")), lit(0)) / count(lit(1)), 6)
-            .as("recall"))
-    }),
+    "similarity_sq8_recall" -> recallAt10((_, _, emb, qs) =>
+      Similarity.sqProbe(Similarity.sqIndex(emb), qs, k = 10, roundAt = 6)),
 
     // The composed two-level ANN (FAISS IVFPQ): coarse-cell pruning ×
     // compressed-code scan. Registered with BOTH quantizers hash-init
@@ -269,21 +253,9 @@ private[graft] object EntryQueriesSimilarity {
     // even when probing surfaces them, so this recall is the stricter
     // end-to-end quality number for the compressed-corpus scan. Same
     // deterministic hash-init legs, so the number is hash-exact.
-    "similarity_ivfpq_recall" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 10)
-      val truth = Similarity.cosineTopK(emb, qs, k = 10, roundAt = 6)
-        .select("query_id", "neighbor_id")
-      val approx = Similarity.ivfPqProbe(cachedIvfPqHashInit(s, dir), qs,
-          k = 10, nProbe = 8, roundAt = 6)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hit"),
-          round(coalesce(sum(col("hit")), lit(0)) / count(lit(1)), 6)
-            .as("recall"))
-    }),
+    "similarity_ivfpq_recall" -> recallAt10((s, dir, _, qs) =>
+      Similarity.ivfPqProbe(cachedIvfPqHashInit(s, dir), qs,
+        k = 10, nProbe = 8, roundAt = 6)),
 
     // Hybrid retrieval: reciprocal-rank fusion of the PROVEN bm25 and
     // cosine top-10 rankings over the same query ids (documents and

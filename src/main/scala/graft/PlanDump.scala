@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Measurement tool (optimization guide §1.2 / §7.2): write
   * `explain("formatted")` of registered queries to files — the
   * before/after plan evidence committed under the plans/ directory
@@ -16,6 +23,16 @@ package graft
   * WholeStageCodegen span width, no CartesianProduct outside declared
   * broadcast-bounded cross joins. Stream queries build their plan
   * inside runAvailableNow; their dump is the post-run read-back.
+  *
+  * Building a frame may itself run SQL jobs: a quantile or bounds
+  * `collect`/`head`, a count, an eager `localCheckpoint`, a table
+  * write. A `QueryExecutionListener` is registered while the row is
+  * built, and after the returned frame's plan each captured job's
+  * formatted plan follows under a `-- build-time job <i>` header, in
+  * completion order. Invisible still: jobs run on the RDD API
+  * (`takeSample`'s own jobs; only the plan of the frame it samples
+  * shows), a stream's micro-batches (they run in the stream's own
+  * session) and the sub-plan behind a lazy `localCheckpoint(false)`.
   * Diagnostic only: never run by the driver, changes no query. */
 object PlanDump {
   def main(argv: Array[String]): Unit = {
@@ -33,16 +50,33 @@ object PlanDump {
       val out = new java.io.File(outDir, s"${n}_$suffix.txt")
       try {
         spark.catalog.clearCache()
-        // Building the frame may itself run jobs (fixture ingest,
-        // index builds, streams run to completion); the dumped plan is
-        // the final returned frame's — for a stream row that is the
-        // post-run read-back, noted in the header.
-        val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        val built = new ConcurrentLinkedQueue[QueryExecution]
+        val listener = new QueryExecutionListener {
+          override def onSuccess(f: String, qe: QueryExecution,
+              ns: Long): Unit = built.add(qe)
+          override def onFailure(f: String, qe: QueryExecution,
+              e: Exception): Unit = built.add(qe)
+        }
+        spark.listenerManager.register(listener)
+        val qe =
+          try SparkEntry.queries(n)(spark, sfDir).queryExecution
+          finally {
+            // the listener bus delivers in order: once a marker job's
+            // callback arrives, every build job's has arrived
+            val marker = spark.range(1)
+            marker.collect()
+            val deadline = System.nanoTime() + 10000000000L
+            while (!built.remove(marker.queryExecution) &&
+                System.nanoTime() < deadline) Thread.sleep(5)
+            spark.listenerManager.unregister(listener)
+          }
         // run THIS QueryExecution via its RDD: count()/write each build
         // a separate plan and leave this one's AdaptiveSparkPlan unrun
         if (finalPlan) qe.toRdd.foreachPartition(_ => ())
-        val plan = qe.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val plan = qe.explainString(formatted) +
+          built.asScala.zipWithIndex.map { case (b, i) =>
+            s"\n-- build-time job $i\n${b.explainString(formatted)}"
+          }.mkString
         val header = s"-- query: $n\n-- sfDir: $sfDir  cpus: " +
           s"${spark.sparkContext.defaultParallelism}\n" +
           (if (n.startsWith("stream_"))
@@ -58,4 +92,6 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  private val formatted = ExplainMode.fromString("formatted")
 }

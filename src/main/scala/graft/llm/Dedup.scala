@@ -1295,9 +1295,7 @@ object Dedup extends DedupPassages with DedupLines {
   def simhashPairsFromFingerprints(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, saltCol: Option[String] = None): DataFrame = {
-    require(maxHamming < bands,
-      s"pigeonhole recall guarantee needs maxHamming < bands " +
-        s"(got $maxHamming >= $bands)")
+    requireBandedBudget("simhashPairsFromFingerprints", maxHamming, bands)
     simhashCandidates(fps, idCol, bands, saltCol)
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -1387,9 +1385,7 @@ object Dedup extends DedupPassages with DedupLines {
   def simhashStarFromFingerprints(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, saltCol: Option[String] = None): DataFrame = {
-    require(maxHamming < bands,
-      s"pigeonhole recall guarantee needs maxHamming < bands " +
-        s"(got $maxHamming >= $bands)")
+    requireBandedBudget("simhashStarFromFingerprints", maxHamming, bands)
     starLinksFromBanded(bandedRows(fps, idCol, bands, saltCol), idCol,
       maxHamming)
   }
@@ -1822,6 +1818,15 @@ object Dedup extends DedupPassages with DedupLines {
     dropLosers(batch, idCol, crossLosers,
       withinPairs.select(col("id_b").as(idCol)))
   }
+
+  /** Plain `bands`-way banding is recall-complete (pigeonhole: some
+    * block matches exactly) only for a Hamming budget in
+    * `0 until bands`; `op` names the caller. */
+  private def requireBandedBudget(op: String, maxHamming: Int,
+      bands: Int): Unit =
+    require(maxHamming >= 0 && maxHamming < bands,
+      s"$op: pigeonhole recall guarantee needs 0 <= maxHamming < bands, " +
+        s"got maxHamming=$maxHamming, bands=$bands")
 
   /** Multiprobe banding is recall-complete only for Hamming budgets
     * 0..7 (see [[multiprobeBandedRows]]); `op` names the caller. */

@@ -23,6 +23,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   *     O(N·Q·nProbe/nCells) with one co-partitioned join on cell id —
   *     the classic billion-scale ANN layout (IVF-Flat). [[ivfTopK]]
   *     composes the two for one-shot use.
+  *
+  * The exact, IVF, PQ, IVF-PQ and SQ probes differ only in how they
+  * find and score candidates; each ends in the same [[score]] and
+  * [[rank]] stages, and the IVF and PQ quantizers share one [[kMeans]]
+  * fit.
   */
 object Similarity {
 
@@ -40,20 +45,88 @@ object Similarity {
     * divide-by-zero; coalesce maps the null to -1 like [[cosine]]. */
   private[llm] def cosineHof(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), (s, x) => s + x))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), (s, x) => s + x))
-    coalesce(try_divide(dot, na * nb), lit(-1.0))
+    coalesce(try_divide(dot, sqrt(normSq(a)) * sqrt(normSq(b))), lit(-1.0))
   }
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
+
+  /** Σ x² of an array column, folded in index order. */
+  private def normSq(v: Column): Column =
+    aggregate(transform(v, x => x * x), lit(0.0), (s, x) => s + x)
+
+  /** The driver-side L2 norm, summed in the same order. */
+  private def l2(v: Array[Double]): Double =
+    math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x))
+
+  /** `(idCol, embCol)` as `(idAs, embAs: array<double>)`. */
+  private def vectors(df: DataFrame, embCol: String, idCol: String,
+      idAs: String, embAs: String): DataFrame =
+    df.select(col(idCol).as(idAs), asDouble(col(embCol)).as(embAs))
+
+  /** Length of the first non-empty `embCol` vector (one `head()` job). */
+  private def firstDim(corpus: DataFrame, embCol: String): Int =
+    corpus.select(size(asDouble(col(embCol))).as("d")).where(col("d") > 0)
+      .head().getInt(0)
+
+  /** The score stage of every probe: drop each query's own id, then
+    * name the score `scoreCol`, rounded to `roundAt` decimals when
+    * `roundAt >= 0` — rounding BEFORE ranking (ties then break on
+    * neighbor_id) is what makes a probe hash-comparable against a
+    * DuckDB oracle despite cross-engine ulp differences. */
+  private def score(candidates: DataFrame, raw: Column, scoreCol: String,
+      roundAt: Int): DataFrame =
+    candidates.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn(scoreCol, if (roundAt >= 0) round(raw, roundAt) else raw)
+
+  /** A quantized dot product over stored norms as an approximate
+    * cosine; a zero norm on either side pins to -1 like [[cosine]]. */
+  private def approxCosine(dot: Column, norm: Column): Column =
+    when(norm > 0 && col("q_norm") > 0, dot / (norm * col("q_norm")))
+      .otherwise(lit(-1.0))
+
+  /** The rank stage of every probe, returning
+    * `(query_id, neighbor_id, rank, scoreCol)`:
+    *  - `nAssign > 1` collapses replicas — a neighbor reached through
+    *    two probed cells carries the same score twice, so max == first,
+    *    and the groupBy combines map-side (≤ 1 row per pair per task);
+    *  - the per-query window keeps the top `k` by (score desc,
+    *    neighbor_id), one shuffle keyed by query;
+    *  - `refine > 0` (FAISS's IndexRefineFlat) keeps a top-`refine`
+    *    shortlist instead, re-joins the raw `corpus` embeddings BY ID
+    *    and re-ranks by exact cosine: the exact scoring touches
+    *    `|queries| × refine` rows, never the corpus, and a true
+    *    neighbor only needs to reach the shortlist. */
+  private def rank(scored: DataFrame, scoreCol: String, k: Int,
+      nAssign: Int = 1, refine: Int = 0, corpus: DataFrame = null,
+      embCol: String = "", idCol: String = ""): DataFrame = {
+    require(refine == 0 || refine >= k,
+      s"refine ($refine) must be 0 (off) or >= k ($k)")
+    require(refine == 0 || corpus != null,
+      "refine > 0 needs the raw corpus to re-rank against")
+    val deduped =
+      if (nAssign > 1)
+        scored.groupBy(col("query_id"), col("neighbor_id"))
+          .agg(max(col(scoreCol)).as(scoreCol),
+            (if (refine > 0) Seq(first(col("q_emb")).as("q_emb")) else Nil): _*)
+      else scored
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scoreCol).desc, col("neighbor_id"))
+    def top(df: DataFrame, n: Int): DataFrame =
+      df.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+    val ranked =
+      if (refine == 0) top(deduped, k)
+      else top(top(deduped, refine).select("query_id", "neighbor_id", "q_emb")
+        .join(vectors(corpus, embCol, idCol, "neighbor_id", "c_emb"),
+          "neighbor_id")
+        .withColumn(scoreCol, cosine(col("q_emb"), col("c_emb"))), k)
+    ranked.select("query_id", "neighbor_id", "rank", scoreCol)
+  }
 
   /** Exact top-k neighbors for each query id in `queries` (a subset of
     * ids or a separate frame with the same `(idCol, embCol)` schema).
     *
     * `roundAt >= 0` rounds the cosine to that many decimals BEFORE
-    * ranking (ties then broken by neighbor_id) — this is what makes the
-    * result hash-comparable against a DuckDB oracle despite cross-engine
-    * ulp differences in the float reduction.
+    * ranking (see [[score]]).
     *
     * Scale: `queries` is broadcast (small by construction); the corpus
     * is scanned once; the only shuffle is the per-query top-k window
@@ -66,19 +139,10 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       roundAt: Int = -1): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id"), asDouble(col(embCol)).as("q_emb")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(embCol)).as("c_emb"))
-    val sim = cosine(col("q_emb"), col("c_emb"))
-    val scored = c.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", if (roundAt >= 0) round(sim, roundAt) else sim)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    val q = broadcast(vectors(queries, embCol, idCol, "query_id", "q_emb"))
+    rank(score(vectors(corpus, embCol, idCol, "neighbor_id", "c_emb")
+      .crossJoin(q), cosine(col("q_emb"), col("c_emb")), "cosine", roundAt),
+      "cosine", k)
   }
 
   /** Exact self-join top-k (validation / recall baseline only —
@@ -152,32 +216,40 @@ object Similarity {
       nAssign: Int = 2): IvfIndex = {
     require(nAssign >= 1 && nAssign <= nCells,
       s"nAssign ($nAssign) must be in [1, nCells=$nCells]")
-    // takeSample, NOT sample().limit(): limit() keeps whichever rows the
-    // earliest partitions produce, so on a corpus physically ordered by
-    // source/date the quantizer would be fit on the head of the corpus
-    // only and probes over the rest would rank against irrelevant
-    // centroids. takeSample reservoir-samples UNIFORMLY across all
-    // partitions of the (pre-thinned) sample at the same bounded driver
-    // cost; the extra count pass is a build-once price.
-    // null embeddings are excluded from the fit sample (a null Seq
-    // would NPE deep inside the k-means loop with no useful message);
-    // rows with null embeddings are likewise never indexed — their
-    // cell scores are null, and explode(null) drops the row. The exact
-    // twin ranks them at cosine -1 (below any real neighbor), so the
-    // index and [[cosineTopK]] agree on every top-k that matters.
+    // rows with null embeddings are never indexed — their cell scores
+    // are null, and explode(null) drops the row. The exact twin ranks
+    // them at cosine -1 (below any real neighbor), so the index and
+    // [[cosineTopK]] agree on every top-k that matters.
+    val sample = fitSample("ivfIndex", corpus, embCol, seed,
+      fitSampleFraction, maxFitSample)
+    val centroids = kMeans(sample, nCells, maxIter, seed, Cosine)
+    IvfIndex(centroids,
+      assignCells(corpus, centroids, nAssign, embCol, idCol), nAssign)
+  }
+
+  /** The bounded driver sample both quantizer fits train on: ≤
+    * `maxFitSample` non-null vectors after `fraction`. `takeSample`,
+    * NOT `sample().limit()`: limit() keeps whichever rows the earliest
+    * partitions produce, so on a corpus physically ordered by
+    * source/date the quantizer would be fit on the head of the corpus
+    * only. takeSample reservoir-samples UNIFORMLY across all partitions
+    * of the (pre-thinned) sample at the same bounded driver cost; the
+    * extra count pass is a build-once price. Null embeddings are
+    * excluded (a null Seq would NPE deep inside [[kMeans]] with no
+    * useful message); `op` names the caller when nothing is left. */
+  private def fitSample(op: String, corpus: DataFrame, embCol: String,
+      seed: Long, fraction: Double, maxFitSample: Int): Array[Array[Double]] = {
     val sample = corpus
       .select(asDouble(col(embCol)).as("e"))
       .where(col("e").isNotNull)
-      .sample(withReplacement = false, fitSampleFraction, seed)
+      .sample(withReplacement = false, fraction, seed)
       .rdd
       .takeSample(withReplacement = false, maxFitSample, seed)
       .map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty,
-      s"ivfIndex: no non-null '$embCol' rows in the fit sample — " +
+      s"$op: no non-null '$embCol' rows in the fit sample — " +
         "is the embedding column entirely null, or the corpus empty?")
-    val centroids = sphericalKMeans(sample, nCells, maxIter, seed)
-    IvfIndex(centroids,
-      assignCells(corpus, centroids, nAssign, embCol, idCol), nAssign)
+    sample
   }
 
   /** The one-pass cell assignment shared by [[ivfIndex]] (build) and
@@ -203,8 +275,7 @@ object Similarity {
       embCol: String,
       idCol: String): DataFrame = {
     val top = topCells(corpus, col("c_emb"), centroids, nAssign)
-    val base = corpus
-      .select(col(idCol).as("neighbor_id"), asDouble(col(embCol)).as("c_emb"))
+    val base = vectors(corpus, embCol, idCol, "neighbor_id", "c_emb")
     if (nAssign == 1) base.withColumn("cell", element_at(top, 1))
     else base.withColumn("cell", explode(top))
   }
@@ -295,10 +366,9 @@ object Similarity {
     * Returns the same shape as [[cosineTopK]]; recall < 1.0 by design,
     * measured by [[recallAgainst]]. Scale: probes (|queries| × nProbe
     * rows) are broadcast; the cell equi-join touches only probed cells;
-    * the one shuffle is the per-query top-k window.
+    * [[rank]] collapses `nAssign` replicas and windows the top-k.
     *
-    * `roundAt` mirrors [[cosineTopK]]: round the cosine BEFORE ranking
-    * (ties then break on neighbor_id) so that an EXHAUSTIVE probe
+    * `roundAt` mirrors [[cosineTopK]], so an EXHAUSTIVE probe
     * (`nProbe = nCells` — every cell visited, candidate set = whole
     * corpus) returns bitwise the same rows as the brute-force twin and
     * can be held to the same DuckDB oracle. */
@@ -310,29 +380,12 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       roundAt: Int = -1): DataFrame = {
-    val probes = queries
-      .select(col(idCol).as("query_id"), asDouble(col(embCol)).as("q_emb"))
+    val probes = vectors(queries, embCol, idCol, "query_id", "q_emb")
       .withColumn("cell",
         explode(topCells(queries, col("q_emb"), index.centroids, nProbe)))
-    val sim = cosine(col("q_emb"), col("c_emb"))
-    val scored = index.cells.join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", if (roundAt >= 0) round(sim, roundAt) else sim)
-    // multi-assignment can surface the same neighbor from two probed
-    // cells; collapse replicas with a partial-aggregated groupBy (the
-    // duplicate rows carry identical cosines, so max == first; the
-    // map-side combine means the extra exchange ships ≤1 row per
-    // (query, neighbor) per task — candidate-bounded, not corpus-bounded)
-    val deduped =
-      if (index.nAssign > 1)
-        scored.groupBy(col("query_id"), col("neighbor_id"))
-          .agg(max(col("cosine")).as("cosine"))
-      else scored
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    deduped.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rank(score(index.cells.join(broadcast(probes), "cell"),
+      cosine(col("q_emb"), col("c_emb")), "cosine", roundAt),
+      "cosine", k, index.nAssign)
   }
 
   /** One-shot IVF-Flat ANN: [[ivfIndex]] + [[ivfProbe]]. Index reuse is
@@ -398,34 +451,28 @@ object Similarity {
       maxFitSample: Int = 20000,
       maxIter: Int = 10): PqIndex = {
     require(m >= 1 && k >= 2, s"need m >= 1 and k >= 2, got m=$m k=$k")
-    val sample = corpus
-      .select(asDouble(col(embCol)).as("e"))
-      .where(col("e").isNotNull)
-      .sample(withReplacement = false, fitSampleFraction, seed)
-      .rdd
-      .takeSample(withReplacement = false, maxFitSample, seed)
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty,
-      s"pqIndex: no non-null '$embCol' rows in the fit sample")
+    val sample = fitSample("pqIndex", corpus, embCol, seed,
+      fitSampleFraction, maxFitSample)
     val dim = sample.head.length
     require(dim % m == 0,
       s"pqIndex: embedding dim $dim is not divisible by m=$m subspaces")
-    val subDim = dim / m
-    val flat = new Array[Double](m * k * subDim)
-    var j = 0
-    while (j < m) {
-      // per-subspace fit: seed varies by j so subspaces don't share
-      // sampling accidents; points are the j-th slice of every sample
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(
-        v, j * subDim, (j + 1) * subDim))
-      val cb = lloydKMeans(pts, k, maxIter, seed + j)
-      var c = 0
-      while (c < k) {
-        System.arraycopy(cb(c), 0, flat, (j * k + c) * subDim, subDim)
-        c += 1
-      }
-      j += 1
-    }
+    // per-subspace fit: seed varies by j so subspaces don't share
+    // sampling accidents
+    pqBuild(corpus, m, k, dim / m, embCol, idCol)(j =>
+      kMeans(subvectors(sample, j, dim / m), k, maxIter, seed + j, SquaredL2))
+  }
+
+  /** The `j`-th `subDim` slice of every vector. */
+  private def subvectors(vs: Array[Array[Double]], j: Int,
+      subDim: Int): Array[Array[Double]] =
+    vs.map(java.util.Arrays.copyOfRange(_, j * subDim, (j + 1) * subDim))
+
+  /** Flatten the `m` per-subspace codebooks (`k` centroids of `subDim`
+    * each, from `book(j)`), broadcast them, and encode the corpus. */
+  private def pqBuild(corpus: DataFrame, m: Int, k: Int, subDim: Int,
+      embCol: String, idCol: String)(
+      book: Int => Array[Array[Double]]): PqIndex = {
+    val flat = Array.concat((0 until m).flatMap(book(_)): _*)
     val bcast = corpus.sparkSession.sparkContext.broadcast(flat)
     PqIndex(bcast, m, k, subDim,
       encodeCodes(corpus, bcast, m, k, subDim, embCol, idCol))
@@ -491,28 +538,13 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id"): PqIndex = {
     require(m >= 1 && k >= 2, s"need m >= 1 and k >= 2, got m=$m k=$k")
-    val e = asDouble(col(embCol))
-    val dim = corpus.select(size(e).as("d")).where(col("d") > 0).head()
-      .getInt(0)
+    val dim = firstDim(corpus, embCol)
     require(dim % m == 0,
       s"pqIndexHashInit: embedding dim $dim is not divisible by m=$m")
-    val subDim = dim / m
     val picked = hashSelectRows(corpus, k, dim, PqHashMultiplier,
       embCol, idCol)
-    val flat = new Array[Double](m * k * subDim)
-    var c = 0
-    while (c < k) {
-      var j = 0
-      while (j < m) {
-        System.arraycopy(picked(c), j * subDim, flat,
-          (j * k + c) * subDim, subDim)
-        j += 1
-      }
-      c += 1
-    }
-    val bcast = corpus.sparkSession.sparkContext.broadcast(flat)
-    PqIndex(bcast, m, k, subDim,
-      encodeCodes(corpus, bcast, m, k, subDim, embCol, idCol))
+    pqBuild(corpus, m, k, dim / m, embCol, idCol)(
+      subvectors(picked, _, dim / m))
   }
 
   /** [[idHash]] multipliers for the two hash-init quantizers — two
@@ -589,13 +621,10 @@ object Similarity {
     val top = cosineTopK(corpus, queries, k, embCol, idCol, roundAt = 6)
     // re-attach candidate vectors for the pairwise leg (k rows/query)
     val cands = top.join(
-        corpus.select(col(idCol).as("neighbor_id"),
-          asDouble(col(embCol)).as("c_emb")),
-        "neighbor_id")
+        vectors(corpus, embCol, idCol, "neighbor_id", "c_emb"), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .localCheckpoint(false)
-    val vecs = corpus.select(col(idCol).as("vid"),
-      asDouble(col(embCol)).as("e"))
+    val vecs = vectors(corpus, embCol, idCol, "vid", "e")
     val pairSim = cands.select(col("query_id"), col("neighbor_id").as("a"))
       .join(cands.select(col("query_id"), col("neighbor_id").as("b")),
         "query_id")
@@ -731,8 +760,8 @@ object Similarity {
   }
 
   /** L2-normalized coarse centroids from `nCells` hash-drawn corpus
-    * rows — the deterministic stand-in for [[sphericalKMeans]] shared
-    * by [[ivfIndexHashInit]] and [[ivfPqIndexHashInit]]. */
+    * rows — the deterministic stand-in for the [[Cosine]] [[kMeans]]
+    * fit, shared by [[ivfIndexHashInit]] and [[ivfPqIndexHashInit]]. */
   private def hashInitCentroids(
       corpus: DataFrame,
       nCells: Int,
@@ -741,9 +770,7 @@ object Similarity {
       idCol: String): Array[Array[Double]] =
     hashSelectRows(corpus, nCells, dim, IvfHashMultiplier,
       embCol, idCol).map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      val n = math.sqrt(s)
+      val n = l2(v)
       require(n > 0, "hash-init coarse fit: zero-norm centroid row " +
         "drawn — corpus has degenerate vectors in the hash sample")
       v.map(_ / n)
@@ -765,10 +792,8 @@ object Similarity {
       nCells: Int = 16,
       embCol: String = "embedding",
       idCol: String = "vec_id"): IvfIndex = {
-    val e = asDouble(col(embCol))
-    val dim = corpus.select(size(e).as("d")).where(col("d") > 0).head()
-      .getInt(0)
-    val centroids = hashInitCentroids(corpus, nCells, dim, embCol, idCol)
+    val centroids = hashInitCentroids(corpus, nCells,
+      firstDim(corpus, embCol), embCol, idCol)
     IvfIndex(centroids,
       assignCells(corpus, centroids, nAssign = 1, embCol, idCol), 1)
   }
@@ -807,13 +832,11 @@ object Similarity {
       bcast: org.apache.spark.broadcast.Broadcast[Array[Double]],
       m: Int, k: Int, subDim: Int,
       embCol: String, idCol: String): DataFrame = {
-    val normSq = aggregate(
-      transform(asDouble(col(embCol)), x => x * x), lit(0.0), (s, x) => s + x)
+    val e = asDouble(col(embCol))
     corpus
       .select(col(idCol).as("neighbor_id"),
-        graft.functions.PqEncode(asDouble(col(embCol)), bcast, m, k, subDim)
-          .as("codes"),
-        sqrt(normSq).as("norm"))
+        graft.functions.PqEncode(e, bcast, m, k, subDim).as("codes"),
+        sqrt(normSq(e)).as("norm"))
       .where(col("codes").isNotNull)
   }
 
@@ -880,16 +903,10 @@ object Similarity {
     * normalized by the EXACT stored norms, so the score approximates
     * cosine and zero-norm rows pin to -1 like the exact twin.
     *
-    * `refine > 0` adds the standard second stage (FAISS's
-    * IndexRefineFlat): the ADC pass keeps a per-query shortlist of
-    * `refine` candidates, which re-joins the RAW embeddings BY ID and
-    * re-ranks with exact cosine. The expensive exact scoring then
-    * touches `|queries| × refine` rows instead of the corpus — the
-    * refine join is candidate-bounded, so the compressed scan still
-    * does all corpus-sized work. On weakly-clustered embeddings this
-    * is what turns ADC's lossy ordering into high recall@k (the true
-    * neighbor only needs to land in the top-`refine`, not the
-    * top-k). */
+    * `refine > 0` adds [[rank]]'s exact re-rank of the ADC
+    * top-`refine` shortlist; the compressed scan still does all
+    * corpus-sized work. On weakly-clustered embeddings this is what
+    * turns ADC's lossy ordering into high recall@k. */
   def pqProbe(
       index: PqIndex,
       queries: DataFrame,
@@ -899,46 +916,16 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       roundAt: Int = -1): DataFrame = {
-    require(refine == 0 || refine >= k,
-      s"refine ($refine) must be 0 (off) or >= k ($k)")
-    require(refine == 0 || corpus != null,
-      "refine > 0 needs the raw corpus to re-rank against")
-    val normSq = aggregate(
-      transform(asDouble(col(embCol)), x => x * x), lit(0.0), (s, x) => s + x)
+    val e = asDouble(col(embCol))
     val q = broadcast(queries
       .select(col(idCol).as("query_id"),
-        graft.functions.PqLut(asDouble(col(embCol)), index.codebook,
-          index.m, index.k, index.subDim).as("lut"),
-        asDouble(col(embCol)).as("q_emb"),
-        sqrt(normSq).as("q_norm"))
+        graft.functions.PqLut(e, index.codebook, index.m, index.k,
+          index.subDim).as("lut"),
+        e.as("q_emb"), sqrt(normSq(e)).as("q_norm"))
       .where(col("lut").isNotNull))
     val adc = graft.functions.PqAdcScore(col("lut"), col("codes"), index.k)
-    val rawScore = when(col("norm") > 0 && col("q_norm") > 0,
-      adc / (col("norm") * col("q_norm"))).otherwise(lit(-1.0))
-    val scored = index.codes.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("pq_score",
-        if (roundAt >= 0) round(rawScore, roundAt) else rawScore)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_score").desc, col("neighbor_id"))
-    if (refine == 0) {
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "pq_score")
-    } else {
-      val shortlist = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= refine)
-        .select("query_id", "neighbor_id", "q_emb")
-      val exactSide = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(embCol)).as("c_emb"))
-      // candidate-bounded equi-join: |queries| × refine rows against
-      // the corpus by id — broadcast-able whenever the shortlist is
-      val rescored = shortlist.join(exactSide, "neighbor_id")
-        .withColumn("pq_score", cosine(col("q_emb"), col("c_emb")))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "pq_score")
-    }
+    rank(score(index.codes.crossJoin(q), approxCosine(adc, col("norm")),
+      "pq_score", roundAt), "pq_score", k, 1, refine, corpus, embCol, idCol)
   }
 
   /** The composed two-level ANN index (FAISS's IVFPQ): the IVF coarse
@@ -999,55 +986,19 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       roundAt: Int = -1): DataFrame = {
-    require(refine == 0 || refine >= k,
-      s"refine ($refine) must be 0 (off) or >= k ($k)")
-    require(refine == 0 || corpus != null,
-      "refine > 0 needs the raw corpus to re-rank against")
-    val normSq = aggregate(
-      transform(asDouble(col(embCol)), x => x * x), lit(0.0), (s, x) => s + x)
+    val e = asDouble(col(embCol))
     val probes = broadcast(queries
-      .select(col(idCol).as("query_id"),
-        asDouble(col(embCol)).as("q_emb"),
-        graft.functions.PqLut(asDouble(col(embCol)), index.codebook,
-          index.m, index.k, index.subDim).as("lut"),
-        sqrt(normSq).as("q_norm"))
+      .select(col(idCol).as("query_id"), e.as("q_emb"),
+        graft.functions.PqLut(e, index.codebook, index.m, index.k,
+          index.subDim).as("lut"),
+        sqrt(normSq(e)).as("q_norm"))
       .where(col("lut").isNotNull)
       .withColumn("cell",
         explode(topCells(queries, col("q_emb"), index.centroids, nProbe))))
     val adc = graft.functions.PqAdcScore(col("lut"), col("codes"), index.k)
-    val rawScore = when(col("norm") > 0 && col("q_norm") > 0,
-      adc / (col("norm") * col("q_norm"))).otherwise(lit(-1.0))
-    val scored = index.cellCodes.join(probes, "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("pq_score",
-        if (roundAt >= 0) round(rawScore, roundAt) else rawScore)
-    // nAssign replica dedup, as in ivfProbe (identical scores per
-    // replica: max == first); q_emb rides along for the refine join,
-    // keyed by query_id so the agg stays partial-combining
-    val deduped =
-      if (index.nAssign > 1)
-        scored.groupBy(col("query_id"), col("neighbor_id"))
-          .agg(max(col("pq_score")).as("pq_score"),
-            first(col("q_emb")).as("q_emb"))
-      else scored
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_score").desc, col("neighbor_id"))
-    if (refine == 0) {
-      deduped.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "pq_score")
-    } else {
-      val shortlist = deduped.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= refine)
-        .select("query_id", "neighbor_id", "q_emb")
-      val exactSide = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(embCol)).as("c_emb"))
-      val rescored = shortlist.join(exactSide, "neighbor_id")
-        .withColumn("pq_score", cosine(col("q_emb"), col("c_emb")))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "pq_score")
-    }
+    rank(score(index.cellCodes.join(probes, "cell"),
+      approxCosine(adc, col("norm")), "pq_score", roundAt),
+      "pq_score", k, index.nAssign, refine, corpus, embCol, idCol)
   }
 
   /** A built SQ8 (scalar-quantization) index: per-dimension [min,
@@ -1080,8 +1031,7 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id"): SqIndex = {
     val e = asDouble(col(embCol))
-    val dimRow = corpus.select(size(e).as("d")).where(col("d") > 0).head()
-    val dim = dimRow.getInt(0)
+    val dim = firstDim(corpus, embCol)
     val wellFormed = corpus.where(size(e) === dim)
     val aggs = (0 until dim).flatMap { i =>
       Seq(min(element_at(e, i + 1)).as(s"mn_$i"),
@@ -1164,8 +1114,7 @@ object Similarity {
     * neighbor_id) — with the exact-aggregate bounds this makes the
     * FULL index hash-comparable against a DuckDB twin, the property
     * the seeded-fit indexes (IVF/PQ) cannot offer. `refine > 0` adds
-    * the FAISS refine stage: exact cosine over the SQ top-`refine`
-    * shortlist BY ID (candidate-bounded, `|queries| × refine` rows). */
+    * [[rank]]'s exact re-rank of the SQ top-`refine` shortlist. */
   def sqProbe(
       index: SqIndex,
       queries: DataFrame,
@@ -1175,122 +1124,15 @@ object Similarity {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       roundAt: Int = -1): DataFrame = {
-    require(refine == 0 || refine >= k,
-      s"refine ($refine) must be 0 (off) or >= k ($k)")
-    require(refine == 0 || corpus != null,
-      "refine > 0 needs the raw corpus to re-rank against")
-    val normSq = aggregate(
-      transform(asDouble(col(embCol)), x => x * x), lit(0.0), (s, x) => s + x)
+    val e = asDouble(col(embCol))
     val q = broadcast(queries
-      .select(col(idCol).as("query_id"),
-        asDouble(col(embCol)).as("q_emb"),
-        sqrt(normSq).as("q_norm"))
+      .select(col(idCol).as("query_id"), e.as("q_emb"),
+        sqrt(normSq(e)).as("q_norm"))
       .where(size(col("q_emb")) === index.vmin.length))
     val adc = graft.functions.SqAdcDot(col("q_emb"), col("codes"),
       index.vmin, index.vdiff)
-    val raw = when(col("rnorm") > 0 && col("q_norm") > 0,
-      adc / (col("rnorm") * col("q_norm"))).otherwise(lit(-1.0))
-    val scored = index.codes.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sq_score", if (roundAt >= 0) round(raw, roundAt) else raw)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq_score").desc, col("neighbor_id"))
-    if (refine == 0) {
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sq_score")
-    } else {
-      val shortlist = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= refine)
-        .select("query_id", "neighbor_id", "q_emb")
-      val exactSide = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(embCol)).as("c_emb"))
-      val rescored = shortlist.join(exactSide, "neighbor_id")
-        .withColumn("sq_score", cosine(col("q_emb"), col("c_emb")))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sq_score")
-    }
-  }
-
-  /** Driver-local plain-L2 Lloyd k-means for PQ subspace codebooks —
-    * the euclidean sibling of [[sphericalKMeans]] (subvectors are NOT
-    * unit vectors, so cosine assignment would be wrong here). k-means++
-    * D² init, deterministic under `seed`, empty clusters keep their
-    * previous centroid, fewer distinct points than k leaves duplicate
-    * centroids (harmless: encode argmin tie-breaks on centroid id). */
-  private def lloydKMeans(
-      points: Array[Array[Double]],
-      k: Int,
-      maxIter: Int,
-      seed: Long): Array[Array[Double]] = {
-    require(points.nonEmpty, "pqIndex: empty fit sample")
-    val dim = points.head.length
-    val rng = new scala.util.Random(seed)
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val chosen = scala.collection.mutable.ArrayBuffer(
-      points(rng.nextInt(points.length)).clone())
-    val minDist = points.map(p => d2(p, chosen.head))
-    while (chosen.length < math.min(k, points.length)) {
-      val total = minDist.sum
-      val pick =
-        if (total <= 0) rng.nextInt(points.length)
-        else {
-          var r = rng.nextDouble() * total
-          var i = 0
-          while (i < minDist.length - 1 && r > minDist(i)) {
-            r -= minDist(i); i += 1
-          }
-          i
-        }
-      chosen += points(pick).clone()
-      var i = 0
-      while (i < points.length) {
-        val d = d2(points(i), chosen.last)
-        if (d < minDist(i)) minDist(i) = d
-        i += 1
-      }
-    }
-    val centroids = chosen.toArray ++
-      Array.fill(math.max(0, k - points.length))(points(0).clone())
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      points.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          val d = d2(p, centroids(c))
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
-        counts(best) += 1
-      }
-      moved = false
-      var c = 0
-      while (c < k) {
-        if (counts(c) > 0) {
-          val nc = sums(c).map(_ / counts(c))
-          var i = 0
-          while (i < dim && !moved) {
-            if (math.abs(nc(i) - centroids(c)(i)) > 1e-9) moved = true
-            i += 1
-          }
-          centroids(c) = nc
-        }
-        c += 1
-      }
-      iter += 1
-    }
-    centroids
+    rank(score(index.codes.crossJoin(q), approxCosine(adc, col("rnorm")),
+      "sq_score", roundAt), "sq_score", k, 1, refine, corpus, embCol, idCol)
   }
 
   /** Persist a built [[IvfIndex]] — the build-once/probe-many
@@ -1334,42 +1176,89 @@ object Similarity {
       rows.head.getInt(2))
   }
 
-  /** Driver-local spherical k-means (Lloyd on unit vectors, centroids
-    * re-normalized each step — assignment by max dot product == cosine).
-    * Init is k-means++ (D² sampling with cosine distance `1 - dot`):
-    * uniform init on a small sample collapses centroids into dense
-    * regions and starves recall; the D² spread matches what MLlib's
-    * kmeans‖ buys at scale. Deterministic under `seed`; empty cells
-    * keep their previous centroid; fewer distinct points than k just
-    * leaves duplicate centroids (harmless — probe ranking tie-breaks
-    * on cell id). */
-  private def sphericalKMeans(
-      points: Array[Array[Double]],
-      k: Int,
-      maxIter: Int,
-      seed: Long): Array[Array[Double]] = {
-    require(points.nonEmpty, "ivfIndex: empty fit sample")
-    val dim = points.head.length
-    def unit(v: Array[Double]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      val n = math.sqrt(s)
+  /** How [[kMeans]] measures: [[Cosine]] on unit vectors for IVF
+    * coarse cells, [[SquaredL2]] on raw PQ subvectors (which are NOT
+    * unit vectors, so cosine assignment would be wrong there). Each
+    * metric keeps its own k-means++ seeding distance, D² weighting and
+    * strict nearest-centroid rule (ties keep the lower centroid id). */
+  private sealed trait KMeansMetric {
+    /** Applied to every sample point and to every new mean. */
+    def project(v: Array[Double]): Array[Double]
+    def seedDist(a: Array[Double], b: Array[Double], dim: Int): Double
+    def weight(d: Double): Double
+    def nearest(p: Array[Double], cs: Array[Array[Double]], dim: Int): Int
+  }
+
+  /** Spherical k-means: centroids re-normalized each step, so the
+    * max-dot assignment is cosine; seeding distance `1 - dot`, squared
+    * for the D² draw. A zero vector stays as it is. */
+  private object Cosine extends KMeansMetric {
+    def project(v: Array[Double]): Array[Double] = {
+      val n = l2(v)
       if (n > 0) v.map(_ / n) else v.clone()
     }
-    val pts = points.map(unit)
-    val rng = new scala.util.Random(seed)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
+    private def dot(a: Array[Double], b: Array[Double], dim: Int): Double = {
       var s = 0.0; var i = 0
       while (i < dim) { s += a(i) * b(i); i += 1 }
       s
     }
-    // k-means++: first centroid uniform, each next ∝ squared cosine
-    // distance to the nearest already-chosen centroid
+    def seedDist(a: Array[Double], b: Array[Double], dim: Int): Double =
+      1.0 - dot(a, b, dim)
+    def weight(d: Double): Double = d * d
+    def nearest(p: Array[Double], cs: Array[Array[Double]], dim: Int): Int = {
+      var best = 0; var bestDot = Double.NegativeInfinity; var c = 0
+      while (c < cs.length) {
+        val d = dot(p, cs(c), dim)
+        if (d > bestDot) { bestDot = d; best = c }
+        c += 1
+      }
+      best
+    }
+  }
+
+  /** Plain Lloyd: squared euclidean distance, already a D² weight. */
+  private object SquaredL2 extends KMeansMetric {
+    def project(v: Array[Double]): Array[Double] = v
+    def seedDist(a: Array[Double], b: Array[Double], dim: Int): Double = {
+      var s = 0.0; var i = 0
+      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
+      s
+    }
+    def weight(d: Double): Double = d
+    def nearest(p: Array[Double], cs: Array[Array[Double]], dim: Int): Int = {
+      var best = 0; var bestD = Double.MaxValue; var c = 0
+      while (c < cs.length) {
+        val d = seedDist(p, cs(c), dim)
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+  }
+
+  /** Driver-local k-means++/Lloyd under `metric`, the one fit behind
+    * [[ivfIndex]] and [[pqIndex]]. Init is k-means++ (first centroid
+    * uniform, each next drawn ∝ the weighted distance to the nearest
+    * chosen one): uniform init on a small sample collapses centroids
+    * into dense regions and starves recall; the D² spread matches what
+    * MLlib's kmeans‖ buys at scale. Deterministic under `seed`; empty
+    * clusters keep their previous centroid; fewer distinct points than
+    * `k` leaves duplicate centroids (harmless — probe ranking and
+    * encode both tie-break on centroid id). */
+  private def kMeans(
+      points: Array[Array[Double]],
+      k: Int,
+      maxIter: Int,
+      seed: Long,
+      metric: KMeansMetric): Array[Array[Double]] = {
+    val dim = points.head.length
+    val pts = points.map(metric.project)
+    val rng = new scala.util.Random(seed)
     val chosen = scala.collection.mutable.ArrayBuffer(
       pts(rng.nextInt(pts.length)).clone())
-    val minDist = pts.map(p => 1.0 - dot(p, chosen.head))
+    val minDist = pts.map(metric.seedDist(_, chosen.head, dim))
     while (chosen.length < math.min(k, pts.length)) {
-      val weights = minDist.map(d => d * d)
+      val weights = minDist.map(metric.weight)
       val total = weights.sum
       val pick =
         if (total <= 0) rng.nextInt(pts.length)
@@ -1384,7 +1273,7 @@ object Similarity {
       chosen += pts(pick).clone()
       var i = 0
       while (i < pts.length) {
-        val d = 1.0 - dot(pts(i), chosen.last)
+        val d = metric.seedDist(pts(i), chosen.last, dim)
         if (d < minDist(i)) minDist(i) = d
         i += 1
       }
@@ -1397,14 +1286,7 @@ object Similarity {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       pts.foreach { p =>
-        var best = 0; var bestDot = Double.NegativeInfinity
-        var c = 0
-        while (c < k) {
-          var dot = 0.0; var i = 0
-          while (i < dim) { dot += p(i) * centroids(c)(i); i += 1 }
-          if (dot > bestDot) { bestDot = dot; best = c }
-          c += 1
-        }
+        val best = metric.nearest(p, centroids, dim)
         var i = 0
         while (i < dim) { sums(best)(i) += p(i); i += 1 }
         counts(best) += 1
@@ -1413,7 +1295,7 @@ object Similarity {
       var c = 0
       while (c < k) {
         if (counts(c) > 0) {
-          val nc = unit(sums(c).map(_ / counts(c)))
+          val nc = metric.project(sums(c).map(_ / counts(c)))
           var i = 0
           while (i < dim && !moved) {
             if (math.abs(nc(i) - centroids(c)(i)) > 1e-9) moved = true
@@ -1447,10 +1329,8 @@ object Similarity {
       df: DataFrame,
       embCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val normSq = aggregate(
-      transform(asDouble(col(embCol)), x => x * x), lit(0.0), (s, x) => s + x)
     df.select(col(labelCol), size(col(embCol)).as("emb_dim"),
-        round(sqrt(normSq), 6).as("n"))
+        round(sqrt(normSq(asDouble(col(embCol)))), 6).as("n"))
       .groupBy(col(labelCol))
       .agg(count(lit(1)).as("n_vecs"),
         min(col("emb_dim")).as("min_dim"),
@@ -1500,26 +1380,17 @@ object Similarity {
     require(k >= 1 && dim >= 1, s"randomProjection: bad shape k=$k dim=$dim")
     val e = asDouble(col(embCol))
     val scale = sqrt(lit(k.toDouble))
-    val projCols = (0 until k).map { j =>
-      val signs = array((0 until dim).map { i =>
-        lit(if (md5Hash60(s"$i:$j") % 2 == 1) 1.0 else -1.0)
-      }: _*)
-      val dot = aggregate(zip_with(e, signs, (x, s) => x * s),
-        lit(0.0), (s, x) => s + x)
-      round(dot / scale, 6).as(s"proj_$j")
-    }
-    val l2 = (c: Column) =>
-      sqrt(aggregate(transform(c, x => x * x), lit(0.0), (s, x) => s + x))
-    val projArr = array((0 until k).map { j =>
+    val proj = (0 until k).map { j =>
       val signs = array((0 until dim).map { i =>
         lit(if (md5Hash60(s"$i:$j") % 2 == 1) 1.0 else -1.0)
       }: _*)
       aggregate(zip_with(e, signs, (x, s) => x * s),
         lit(0.0), (s, x) => s + x) / scale
-    }: _*)
+    }
     df.filter(size(col(embCol)) === dim)
-      .select(col(idCol) +: projCols :+
-        round(l2(e), 6).as("l2_orig") :+
-        round(l2(projArr), 6).as("l2_proj"): _*)
+      .select(col(idCol) +:
+        proj.zipWithIndex.map { case (p, j) => round(p, 6).as(s"proj_$j") } :+
+        round(sqrt(normSq(e)), 6).as("l2_orig") :+
+        round(sqrt(normSq(array(proj: _*))), 6).as("l2_proj"): _*)
   }
 }

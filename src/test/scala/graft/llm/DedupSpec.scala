@@ -598,6 +598,26 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("plain-banded Hamming budget: every plain simhash entry point " +
+      "rejects -1 and `bands` and names itself; a negative budget is " +
+      "not an empty \"no duplicates\" result") {
+    val text = docs.select("doc_id", "text")
+    val fps = Dedup.simhashFingerprints(text).select("doc_id", "simhash")
+    val entryPoints = Seq[(String, Int => Any)](
+      "simhashPairs" -> (h => Dedup.simhashPairs(text, maxHamming = h,
+        bands = 4)),
+      "simhashStar" -> (h => Dedup.simhashStar(text, maxHamming = h,
+        bands = 4)),
+      "simhashPairsFromFingerprints" -> (h =>
+        Dedup.simhashPairsFromFingerprints(fps, maxHamming = h, bands = 4)),
+      "simhashStarFromFingerprints" -> (h =>
+        Dedup.simhashStarFromFingerprints(fps, maxHamming = h, bands = 4)))
+    for ((op, call) <- entryPoints; h <- Seq(-1, 4)) {
+      val e = intercept[IllegalArgumentException](call(h))
+      assert(e.getMessage.contains(op), e.getMessage)
+    }
+  }
+
   test("minhash/embeddingIncremental: the final plan reads the candidate " +
       "pairs from one cut — no batch signature derivation left in it") {
     // the candidate pairs are a lazy localCheckpoint, so the plan that

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -697,5 +698,70 @@ class SimilaritySpec extends SparkSpec {
       r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"),
       r.getAs[Double]("cosine"))).toSet
     assert(got == ref)
+  }
+
+  // The five probes over a 30-vector corpus: exhaustive IVF probes
+  // (nProbe = nCells) with nAssign = 2, so every candidate is reachable
+  // and the replica collapse is exercised. `refine` (when > 0) goes to
+  // the three quantized probes, which re-rank against `small`.
+  private lazy val small = embeddings.filter(col("vec_id") < 30)
+  private lazy val smallIvf =
+    Similarity.ivfIndex(small, nCells = 4, nAssign = 2)
+  private lazy val smallPq = Similarity.pqIndex(small, m = 16, k = 8)
+  private lazy val smallIvfPq = Similarity.ivfPqIndex(small, nCells = 4,
+    nAssign = 2, m = 16, pqK = 8)
+  private lazy val smallSq = Similarity.sqIndex(small)
+  private def fiveProbes(queries: DataFrame, k: Int,
+      refine: Int): Seq[(String, DataFrame)] = {
+    val corpus = if (refine > 0) small else null
+    Seq(
+      "cosineTopK" -> Similarity.cosineTopK(small, queries, k),
+      "ivfProbe" -> Similarity.ivfProbe(smallIvf, queries, k, nProbe = 4),
+      "pqProbe" -> Similarity.pqProbe(smallPq, queries, k, refine, corpus),
+      "ivfPqProbe" -> Similarity.ivfPqProbe(smallIvfPq, queries, k,
+        nProbe = 4, refine = refine, corpus = corpus),
+      "sqProbe" -> Similarity.sqProbe(smallSq, queries, k, refine, corpus))
+  }
+
+  test("every probe: an empty query frame gives an empty result, with " +
+      "and without refine") {
+    val none = small.filter(lit(false))
+    for (refine <- Seq(0, 20); (probe, out) <- fiveProbes(none, 10, refine))
+      assert(out.count() == 0, s"$probe refine=$refine")
+  }
+
+  test("every probe: k beyond the candidate set returns every candidate " +
+      "once per query, ranked 1..n") {
+    val ids = small.select("vec_id").collect().map(_.getLong(0)).toSet
+    val queries = small.filter(col("vec_id") < 3)
+    for (refine <- Seq(0, 200);
+        (probe, out) <- fiveProbes(queries, 100, refine)) {
+      val byQuery = out.collect().groupBy(_.getLong(0))
+      assert(byQuery.keySet == Set(0L, 1L, 2L), s"$probe refine=$refine")
+      byQuery.foreach { case (q, rows) =>
+        val neighbors = rows.map(_.getLong(1))
+        assert(neighbors.sorted.toSeq == (ids - q).toSeq.sorted,
+          s"$probe refine=$refine query=$q")
+        assert(rows.map(_.getInt(2)).sorted.toSeq == (1 to ids.size - 1),
+          s"$probe refine=$refine query=$q")
+      }
+    }
+  }
+
+  test("pqProbe, ivfPqProbe, sqProbe: reject a refine in (0, k) and a " +
+      "refine without the raw corpus") {
+    val queries = small.filter(col("vec_id") < 3)
+    val probes = Seq[(String, (Int, DataFrame) => Any)](
+      "pqProbe" -> ((r, c) => Similarity.pqProbe(smallPq, queries, k = 10,
+        refine = r, corpus = c)),
+      "ivfPqProbe" -> ((r, c) => Similarity.ivfPqProbe(smallIvfPq, queries,
+        k = 10, nProbe = 4, refine = r, corpus = c)),
+      "sqProbe" -> ((r, c) => Similarity.sqProbe(smallSq, queries, k = 10,
+        refine = r, corpus = c)))
+    for ((probe, call) <- probes; (r, c) <- Seq((1, small), (9, small),
+        (20, null))) {
+      val e = intercept[IllegalArgumentException](call(r, c))
+      assert(e.getMessage.contains("refine"), s"$probe: ${e.getMessage}")
+    }
   }
 }
