@@ -46,7 +46,7 @@ private[graft] object BenchHarness {
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     try {
       spark.range(100000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
+      graft.sources.Sources.parquetTable(spark, sfDir, "region").count()
     } catch { case e: Throwable =>
       System.err.println(s"[warmup] skipped: ${e.getMessage}")
     }

@@ -95,10 +95,14 @@ object Similarity {
     *    shortlist instead, re-joins the raw `corpus` embeddings BY ID
     *    and re-ranks by exact cosine: the exact scoring touches
     *    `|queries| × refine` rows, never the corpus, and a true
-    *    neighbor only needs to reach the shortlist. */
+    *    neighbor only needs to reach the shortlist. The query vectors
+    *    re-attach to the shortlist by `query_id` from the broadcast
+    *    `queries` (ids are unique there), so no candidate row carries
+    *    its query vector through the collapse or the window shuffle. */
   private def rank(scored: DataFrame, scoreCol: String, k: Int,
       nAssign: Int = 1, refine: Int = 0, corpus: DataFrame = null,
-      embCol: String = "", idCol: String = ""): DataFrame = {
+      queries: DataFrame = null, embCol: String = "",
+      idCol: String = ""): DataFrame = {
     require(refine == 0 || refine >= k,
       s"refine ($refine) must be 0 (off) or >= k ($k)")
     require(refine == 0 || corpus != null,
@@ -106,8 +110,7 @@ object Similarity {
     val deduped =
       if (nAssign > 1)
         scored.groupBy(col("query_id"), col("neighbor_id"))
-          .agg(max(col(scoreCol)).as(scoreCol),
-            (if (refine > 0) Seq(first(col("q_emb")).as("q_emb")) else Nil): _*)
+          .agg(max(col(scoreCol)).as(scoreCol))
       else scored
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col(scoreCol).desc, col("neighbor_id"))
@@ -115,7 +118,9 @@ object Similarity {
       df.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
     val ranked =
       if (refine == 0) top(deduped, k)
-      else top(top(deduped, refine).select("query_id", "neighbor_id", "q_emb")
+      else top(top(deduped, refine).select("query_id", "neighbor_id")
+        .join(broadcast(vectors(queries, embCol, idCol, "query_id", "q_emb")),
+          "query_id")
         .join(vectors(corpus, embCol, idCol, "neighbor_id", "c_emb"),
           "neighbor_id")
         .withColumn(scoreCol, cosine(col("q_emb"), col("c_emb"))), k)
@@ -803,7 +808,7 @@ object Similarity {
     * (assignment and probing reuse the spherical machinery — unit
     * centroids, cosine argmax), and the PQ codebook comes from
     * [[pqIndexHashInit]] under a different hash multiplier. nAssign is
-    * fixed at 1: replica-dedup's `max`/`first` aggregation is
+    * fixed at 1: replica-dedup's `max` aggregation is
     * order-insensitive here anyway, but 1 keeps the SQL twin a plain
     * argmax. Production recall shape remains [[ivfPqIndex]]. Rows
     * whose embedding has zero norm score -1 against every centroid
@@ -925,7 +930,8 @@ object Similarity {
       .where(col("lut").isNotNull))
     val adc = graft.functions.PqAdcScore(col("lut"), col("codes"), index.k)
     rank(score(index.codes.crossJoin(q), approxCosine(adc, col("norm")),
-      "pq_score", roundAt), "pq_score", k, 1, refine, corpus, embCol, idCol)
+      "pq_score", roundAt), "pq_score", k, 1, refine, corpus, queries, embCol,
+      idCol)
   }
 
   /** The composed two-level ANN index (FAISS's IVFPQ): the IVF coarse
@@ -998,7 +1004,7 @@ object Similarity {
     val adc = graft.functions.PqAdcScore(col("lut"), col("codes"), index.k)
     rank(score(index.cellCodes.join(probes, "cell"),
       approxCosine(adc, col("norm")), "pq_score", roundAt),
-      "pq_score", k, index.nAssign, refine, corpus, embCol, idCol)
+      "pq_score", k, index.nAssign, refine, corpus, queries, embCol, idCol)
   }
 
   /** A built SQ8 (scalar-quantization) index: per-dimension [min,
@@ -1132,7 +1138,8 @@ object Similarity {
     val adc = graft.functions.SqAdcDot(col("q_emb"), col("codes"),
       index.vmin, index.vdiff)
     rank(score(index.codes.crossJoin(q), approxCosine(adc, col("rnorm")),
-      "sq_score", roundAt), "sq_score", k, 1, refine, corpus, embCol, idCol)
+      "sq_score", roundAt), "sq_score", k, 1, refine, corpus, queries, embCol,
+      idCol)
   }
 
   /** Persist a built [[IvfIndex]] — the build-once/probe-many

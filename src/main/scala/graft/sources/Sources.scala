@@ -1,11 +1,24 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Data sources. The reference's only scan is a header+inferSchema CSV
   * read (reference spark_ml_features.py:27, `load_sample_data`); the
   * driver harness feeds parquet. Both are surfaced here so a reference
   * user can switch load paths without touching operator code.
+  *
+  * Parquet schema contract (every parquet table and stream read here):
+  * a single FILE's schema comes from its footer, read on the driver;
+  * a DIRECTORY's (a Spark-written `x.parquet/`, a partitioned tree)
+  * from Spark's own inference, which lists it and infers partition
+  * columns. Both give the same `StructType`; the footer read skips the
+  * one-task Spark job that inference runs to fetch one footer.
   *
   * Scale notes: parquet is the at-scale format (columnar, predicate
   * pushdown, column pruning — `.explain` shows PushedFilters/ReadSchema
@@ -14,6 +27,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 100 TB; at scale pass an explicit schema instead.
   */
 object Sources {
+
+  /** The one parquet reader behind every table and stream schema here.
+    * For a single file it reads the footer on the driver and hands the
+    * schema to the reader, so no schema-inference job runs (Spark runs
+    * one even with `mergeSchema` off). The converter is built from the
+    * session's SQLConf, so binaryAsString, int96AsTimestamp,
+    * inferTimestampNTZ and nanosAsLong apply exactly as in Spark's
+    * inference, which calls the same `readSchemaFromFooter`. A
+    * directory keeps Spark's listing and partition inference. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (status.isDirectory) spark.read.parquet(path)
+    else {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(status.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Reference `load_sample_data` parity: CSV with header + schema
     * inference (spark_ml_features.py:27). */
@@ -28,7 +64,7 @@ object Sources {
 
   /** One driver-testdata table: `$dir/$table.parquet`. */
   def parquetTable(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    readParquet(spark, s"$dir/$table.parquet")
 
   /** The reference's inline fallback dataset, verbatim (reference
     * spark_ml_features_local.py:47-55 — the `createDataFrame`-from-
@@ -181,7 +217,7 @@ object Sources {
     require(dataFiles.nonEmpty, s"compact: no parquet files under $inPath")
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(inPath)
+    val df = readParquet(spark, inPath)
     df.repartition(nOut).write.mode("overwrite").parquet(outPath)
     val outFs = new org.apache.hadoop.fs.Path(outPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -193,7 +229,7 @@ object Sources {
       }
       n
     }
-    (dataFiles.size, written, spark.read.parquet(outPath).count())
+    (dataFiles.size, written, readParquet(spark, outPath).count())
   }
 
   /** `events.parquet` has shipped with three timestamp encodings across
@@ -230,7 +266,12 @@ object Sources {
     // caller in a non-UTC default timezone silently shifts every
     // instant (round-11 ADVICE).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    eventsTs(readParquet(spark, s"$dir/events.parquet"))
+  }
+
+  /** [[eventsTable]]'s `ts` contract on a raw events frame (batch or
+    * stream): nanos-as-long → micros, NTZ → tz-aware, tz-aware as is. */
+  private def eventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // integer DIV, not `/`: epoch-nanos (~1.7e18) exceed double's
@@ -243,58 +284,43 @@ object Sources {
           .cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw
     }
-  }
+
+  /** `documents` as an unbounded file-stream source — the corpus-side
+    * twin of [[eventsStream]] (same single-file-glob landing-dir
+    * recipe) for the streaming dedup rows. */
+  def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    tableStream(spark, dir, "documents")
+
+  /** `embeddings` as an unbounded file-stream source (same
+    * landing-dir glob recipe as [[documentsStream]]) — the vector
+    * ingest feed for the streaming IVF append row. */
+  def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
+    tableStream(spark, dir, "embeddings")
 
   /** [[eventsTable]]'s STREAMING twin (round 11): the same events data
     * as an unbounded `readStream` file source, under the same ts
     * normalization contract (UTC pin, NANOS-as-long → micros, NTZ →
     * tz-aware cast) so batch and stream operators see identical
-    * instants. The file source needs an explicit schema — it is probed
-    * from a one-off batch read of the same path (a footer read, not a
-    * data scan). At deployment scale the path would be a landing
+    * instants. At deployment scale the path would be a landing
     * directory the source incrementally lists; here it is the fixture
     * file itself, which arrives as one micro-batch under
     * `Trigger.AvailableNow`. */
-  /** `documents` as an unbounded file-stream source — the corpus-side
-    * twin of [[eventsStream]] (same single-file-glob landing-dir
-    * recipe) for the streaming dedup rows. */
-  def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-  }
-
-  /** `embeddings` as an unbounded file-stream source (same
-    * landing-dir glob recipe as [[documentsStream]]) — the vector
-    * ingest feed for the streaming IVF append row. */
-  def embeddingsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-  }
-
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    // the file-stream source requires a DIRECTORY basePath (the landing
-    // dir it incrementally lists); the fixture is a single file inside
-    // the sf dir, so list the dir with a glob pinned to that file
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    eventsTs(tableStream(spark, dir, "events"))
   }
+
+  /** `$dir/$table.parquet` as a file-stream source. The source needs an
+    * explicit schema: it comes from the file's footer, read on the
+    * driver (no Spark job, no data scan). The file-stream source
+    * requires a DIRECTORY basePath (the landing dir it incrementally
+    * lists); the fixture is a single file inside the sf dir, so list
+    * the dir with a glob pinned to that file. */
+  private def tableStream(spark: SparkSession, dir: String,
+      table: String): DataFrame =
+    spark.readStream
+      .schema(readParquet(spark, s"$dir/$table.parquet").schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
 }

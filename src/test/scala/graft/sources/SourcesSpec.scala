@@ -56,6 +56,129 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.parquetTable(spark, sf0001, "region").count() == 5)
   }
 
+  /** `f` with the session confs `kv` set, restoring each one after. */
+  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
+  }
+
+  test("parquetTable: the footer schema is Spark's inferred schema, for " +
+      "every driver table and a NANOS/binary file, under the type confs") {
+    val tmp = Files.createTempDirectory("graft-footer").toString
+    try {
+      // a file Spark cannot write: TIMESTAMP(NANOS) and an unannotated
+      // binary, the two physical types whose Spark type is conf-driven
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      val schema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType("message m { required int64 id; " +
+          "optional int64 ts (TIMESTAMP(NANOS,true)); optional binary raw; }")
+      val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(
+        s"$tmp/nanos.parquet")).withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("id", 1L).append("ts", 1700000000123456000L)
+        .append("raw", "abc"))
+      finally w.close()
+      val inputs = new java.io.File(sf0001).listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).sorted
+        .map(f => sf0001 -> f.stripSuffix(".parquet")).toSeq :+
+        (tmp -> "nanos")
+      assert(inputs.size == 11, inputs)
+      for {
+        (dir, table) <- inputs
+        nanosAsLong <- Seq("false", "true")
+        binaryAsString <- Seq("false", "true")
+      } withConfs("spark.sql.legacy.parquet.nanosAsLong" -> nanosAsLong,
+          "spark.sql.parquet.binaryAsString" -> binaryAsString) {
+        val where = s"$table nanosAsLong=$nanosAsLong " +
+          s"binaryAsString=$binaryAsString"
+        val inferred = scala.util.Try(
+          spark.read.parquet(s"$dir/$table.parquet").schema)
+        val viaFooter = scala.util.Try(
+          Sources.parquetTable(spark, dir, table).schema)
+        // without nanosAsLong a NANOS column is illegal on both paths
+        assert(inferred.isSuccess == viaFooter.isSuccess,
+          s"$where: $inferred vs $viaFooter")
+        if (inferred.isSuccess) assert(inferred == viaFooter, where)
+        else assert(table == "nanos" && nanosAsLong == "false", where)
+      }
+      val nanos = withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "true",
+          "spark.sql.parquet.binaryAsString" -> "true") {
+        Sources.parquetTable(spark, tmp, "nanos").collect().toSeq
+      }
+      assert(nanos.map(_.toSeq) ==
+        Seq(Seq(1L, 1700000000123456000L, "abc")))
+    } finally rmTree(new java.io.File(tmp))
+  }
+
+  test("parquetTable: Spark-written and partitioned directories read as " +
+      "spark.read.parquet does") {
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("graft-dirs").toString
+    try {
+      val rows = Seq((1L, "x", 0), (2L, "y", 1), (3L, "z", 0))
+        .toDF("id", "v", "b")
+      rows.write.parquet(s"$tmp/plain.parquet")
+      Sources.writePartitioned(rows, s"$tmp/parted.parquet", Seq("b"))
+      assert(new java.io.File(s"$tmp/parted.parquet/b=0").isDirectory)
+      for (table <- Seq("plain", "parted")) {
+        val viaSpark = spark.read.parquet(s"$tmp/$table.parquet")
+        val viaSources = Sources.parquetTable(spark, tmp, table)
+        assert(viaSources.schema == viaSpark.schema, table)
+        assert(viaSources.collect().toSet == viaSpark.collect().toSet, table)
+      }
+      assert(Sources.parquetTable(spark, tmp, "parted").schema.fieldNames
+        .toSeq == Seq("id", "v", "b"))
+    } finally rmTree(new java.io.File(tmp))
+  }
+
+  test("parquetTable, eventsTable and the table streams build with no " +
+      "Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-sources-build", "frames under test")
+      Sources.parquetTable(spark, sf0001, "lineitem")
+      Sources.parquetTable(spark, sf0001, "orders")
+      Sources.eventsTable(spark, sf0001)
+      Sources.documentsStream(spark, sf0001)
+      Sources.embeddingsStream(spark, sf0001)
+      Sources.eventsStream(spark, sf0001)
+      // drain the asynchronous listener bus: it delivers in order, so
+      // once this marker job's start arrives every earlier one has
+      sc.setJobGroup("graft-sources-drain", "listener bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      def next() = groups.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      val before = scala.collection.mutable.ArrayBuffer.empty[String]
+      var g = next()
+      while (g != null && g != "graft-sources-drain") { before += g; g = next() }
+      assert(g != null, "the marker job's start never arrived")
+      val buildJobs = before.count(_ == "graft-sources-build")
+      assert(buildJobs == 0, s"$buildJobs Spark jobs while building frames")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("eventsTable: driver testdata normalizes to tz-aware micros and " +
       "every timestamp-arithmetic operator analyzes") {
     // Pins the fixture type to the DRIVER testdata, not an in-memory
@@ -104,12 +227,7 @@ class SourcesSpec extends SparkSpec {
           org.apache.spark.sql.functions.unix_micros(col("ts")))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(micros(viaNtz) == micros(viaTz))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(tmp))
-    }
+    } finally rmTree(new java.io.File(tmp))
   }
 
   test("driver testdata schema contract: type drift surfaces here, " +
@@ -231,12 +349,7 @@ class SourcesSpec extends SparkSpec {
         assert(mixed.filter(col("_corrupt_record").isNotNull).count() == 1)
         assert(mixed.filter(col("doc_id") === 7L).count() == 1)
       } finally mixed.unpersist()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(tmp))
-    }
+    } finally rmTree(new java.io.File(tmp))
   }
 
   test("compact: many small files rewritten to few, rows preserved") {
@@ -260,12 +373,7 @@ class SourcesSpec extends SparkSpec {
       val (_, afterSmall, rowsSmall) =
         Sources.compact(spark, s"$tmp/in", s"$tmp/out2", targetBytes = 8192)
       assert(afterSmall > 1 && rowsSmall == 5000)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(tmp))
-    }
+    } finally rmTree(new java.io.File(tmp))
   }
 
   test("writeBucketed: equi-join on the bucket key plans with zero Exchange") {

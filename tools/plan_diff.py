@@ -13,7 +13,9 @@ Normalised away:
   - expression ids `#123` / `#123L`;
   - the counters `[plan_id=N]`, `RDD[N]`, `Broadcast(N)` and the
     lambda-variable suffixes `x_N`;
-  - identity hashes of array literals an expression prints (`[D@1a2b`);
+  - identity hashes of array literals an expression prints (`[D@1a2b`)
+    and of aggregator objects (`graft.functions.BottomK@1a2b`);
+  - Spark ML stage uids (`vecAssembler_1a2b3c4d5e6f`, random per build);
   - call sites `<File>.scala:<line>` (of `localCheckpoint` leaves);
   - warehouse paths `file:/.../spark-warehouse/...` and the UUID or
     temp-directory suffix of per-invocation table names;
@@ -43,6 +45,8 @@ RULES = [
     (re.compile(r"(/tmp|/var/folders)[^\s,\]\)]*"), "<tmpdir>"),
     (re.compile(r"runId=[^\s,\]\)]*"), "runId=<id>"),
     (re.compile(r"(NoTimeout, )\d+"), r"\1<ts>"),
+    (re.compile(r"\b([A-Za-z_][\w.$]*)@[0-9a-f]{4,}\b"), r"\1@<obj>"),
+    (re.compile(r"\b([A-Za-z]\w*?)_[0-9a-f]{12}\b"), r"\1_<uid>"),
 ]
 
 
