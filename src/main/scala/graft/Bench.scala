@@ -65,8 +65,8 @@ object Bench {
       r.name -> (if (r.ok) r4(r.sec) else JInt(-1))))
     val runsJson = obj(results.map(r =>
       r.name -> JArray(r.runs.map(r4).toList)))
-    // Per-query output row counts (r16 verdict item 2): the materializing
-    // count() from the last successful run. Failed queries are omitted.
+    // Per-query output row counts (r16 verdict item 2): the observed
+    // count of the last successful run. Failed queries are omitted.
     val outRowsJson = obj(results.collect {
       case r if r.ok && r.outRows.isDefined => r.name -> JInt(r.outRows.get) })
     // State-operator metrics per stream_* row (r16 verdict item 4);

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parseOpt
 
@@ -131,11 +132,13 @@ private[graft] object BenchHarness {
     }
 
   /** One timed execution: (seconds, Some(outputRowCount) |
-    * None-on-failure). The count() it already forces to materialize
-    * the plan IS the output volume — recording it (r16 verdict item 2)
-    * lets any later round compute sec/output-row and separate "query
-    * got slower" from "fixture emits more rows" without trusting
-    * hand-written PLANS.md tables. */
+    * None-on-failure). The frame is written to the `noop` sink, so
+    * every output column is computed (a `count()` let the optimizer
+    * prune a plan down to its scan), and the row count comes from a
+    * `Dataset.observe` in the same pass. Recording it (r16 verdict
+    * item 2) lets any later round compute sec/output-row and separate
+    * "query got slower" from "fixture emits more rows" without
+    * trusting hand-written PLANS.md tables. */
   def timedRun(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame): (Double, Option[Long]) = {
     // per-query isolation: cached fold/CV blocks from one query must
@@ -146,7 +149,12 @@ private[graft] object BenchHarness {
     // stream query whose own run failed before reaching the sink
     SparkEntry.lastStreamMetrics = None
     val t0 = System.nanoTime()
-    val cnt = try { Some(fn(spark, sfDir).count()) } catch {
+    val cnt = try {
+      val rows = org.apache.spark.sql.Observation(s"bench_$name")
+      fn(spark, sfDir).observe(rows, count(lit(1)).as("n"))
+        .write.format("noop").mode("overwrite").save()
+      Some(rows.get("n").asInstanceOf[Long])
+    } catch {
       case e: Throwable =>
         System.err.println(
           s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")

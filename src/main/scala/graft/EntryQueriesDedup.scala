@@ -239,27 +239,21 @@ private[graft] object EntryQueriesDedup {
     // carried fingerprints. Unsalted multiprobe = pure Hamming
     // semantics, so the oracle is the brute-force NOT EXISTS rules
     // over the fpl fingerprint CTE — exact recall to hamming <= 7.
-    "dedup_simhash_incremental" -> ((s, dir) => {
+    "dedup_simhash_incremental" -> ((s, dir) => scratch(s) { sc =>
       val docs = documents(s, dir)
       val batch = docs.filter(col("doc_id") % 10 >= 8)
       val hist = docs.filter(col("doc_id") % 10 < 8)
-      withBucketedBands(s, "graft_sh_hist",
-        Dedup.simhashBandKeysExact(hist)) { tbl =>
-        Dedup.simhashIncremental(batch, s.table(tbl), maxHamming = 3)
-          .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_sh_hist",
+        Dedup.simhashBandKeysExact(hist), "bk")
+      Dedup.simhashIncremental(batch, s.table(tbl), maxHamming = 3)
     }),
-    "dedup_minhash_incremental" -> ((s, dir) => {
+    "dedup_minhash_incremental" -> ((s, dir) => scratch(s) { sc =>
       val docs = documentsSpread(s, dir)
       val batch = docs.filter(col("doc_id") % 10 >= 8)
       val hist = docs.filter(col("doc_id") % 10 < 8)
-      withBucketedBands(s, "graft_mh_hist", Dedup.minhashBandKeys(hist)) {
-        tbl =>
-          Dedup.minhashIncrementalStarFirst(batch, hist, minJaccard = 0.5,
-            histBands = Some(s.table(tbl)))
-            .select("doc_id")
-            .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_mh_hist", Dedup.minhashBandKeys(hist), "bk")
+      Dedup.minhashIncrementalStarFirst(batch, hist, minJaccard = 0.5,
+        histBands = Some(s.table(tbl))).select("doc_id")
     }),
     // Planted in-flight near-dup fixture (the fixture corpus has no
     // natural pair above cosine 0.51, so the row was vacuously "all
@@ -269,7 +263,7 @@ private[graft] object EntryQueriesDedup {
     // loser, larger id). Oracle = brute-force all-pairs cosine rules —
     // exact here because the seeded LSH finds every ≥0.99 pair on this
     // fixture (miss probability ~1e-8 per pair, deterministic seed).
-    "dedup_embedding_incremental" -> ((s, dir) => {
+    "dedup_embedding_incremental" -> ((s, dir) => scratch(s) { sc =>
       val base = embeddings(s, dir).select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       val hist = base.filter(col("vec_id") % 10 < 8)
@@ -290,15 +284,11 @@ private[graft] object EntryQueriesDedup {
             (x, i) => when(i === 0, -x + lit(1e-4)).otherwise(-x))
             .as("embedding")))
         .localCheckpoint(true)
-      withBucketedBands(s, "graft_emb_hist",
-        Dedup.embeddingBandKeys(hist, numTables = 4, bitsPerTable = 12)) {
-        tbl =>
-          Dedup.embeddingIncremental(batch, hist,
-            minCosine = 0.99, numHashTables = 4, bitsPerTable = 12,
-            histBands = Some(s.table(tbl)))
-            .select("vec_id")
-            .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_emb_hist",
+        Dedup.embeddingBandKeys(hist, numTables = 4, bitsPerTable = 12), "bk")
+      Dedup.embeddingIncremental(batch, hist,
+        minCosine = 0.99, numHashTables = 4, bitsPerTable = 12,
+        histBands = Some(s.table(tbl))).select("vec_id")
     }),
     // Copied-passage candidates, hash-EXACT since r9: the gear-hash
     // CDC arithmetic is re-implemented in DuckDB SQL (splitmix64 gear
@@ -343,7 +333,7 @@ private[graft] object EntryQueriesDedup {
     // dedup_passage_pairs recursive-CTE chunker (boundary constants
     // 8/16) over hist∪batch with the same per-side df pruning and
     // both loser rules.
-    "dedup_passage_incremental" -> ((s, dir) => {
+    "dedup_passage_incremental" -> ((s, dir) => scratch(s) { sc =>
       val docs = documentsSpread(s, dir)
       val hist = docs.filter(col("doc_id") % 10 < 8)
       val planted = hist.filter(col("doc_id") === 0L)
@@ -354,14 +344,10 @@ private[graft] object EntryQueriesDedup {
       val batch = docs.filter(col("doc_id") % 10 >= 8)
         .select(col("doc_id"), col("text"))
         .unionByName(planted)
-      withBucketedTables(s, "graft_psg_hist",
-        Seq((Dedup.passageChunkKeys(hist, avgChunkBits = 4, window = 8),
-          "chunk"))) { ns =>
-        Dedup.passageIncremental(batch, s.table(ns.head),
-            avgChunkBits = 4, window = 8)
-          .select("doc_id")
-          .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_psg_hist",
+        Dedup.passageChunkKeys(hist, avgChunkBits = 4, window = 8), "chunk")
+      Dedup.passageIncremental(batch, s.table(tbl),
+        avgChunkBits = 4, window = 8).select("doc_id")
     }),
     // Embedding near-dup via seeded sign-LSH. The fixture corpus has no
     // natural near pairs (max pairwise cosine 0.51 — documented), so a
@@ -435,7 +421,7 @@ private[graft] object EntryQueriesDedup {
     // 900003 = 900002 nudged → within dup, larger id). nCells derives
     // from the HISTORY count (the frozen-quantizer contract); the
     // oracle restates draw, assignment, and both pair rules in SQL.
-    "dedup_semantic_incremental" -> ((s, dir) => {
+    "dedup_semantic_incremental" -> ((s, dir) => scratch(s) { sc =>
       val base = embeddings(s, dir).select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       val histWf = base.filter(col("vec_id") % 10 < 8)
@@ -457,13 +443,11 @@ private[graft] object EntryQueriesDedup {
         .localCheckpoint(true)
       val nc = Dedup.semanticKnobs(histWf.count(), nCells = 0)
       val index = Similarity.ivfIndexHashInit(histWf, nc)
-      withBucketedTables(s, "graft_sem_hist",
-        Seq((Dedup.semanticHistCells(index), "cell"))) { ns =>
-        Dedup.semanticIncremental(batch, index, s.table(ns.head),
-            minCosine = 0.8, dim = Some(64))
-          .withColumn("cell", col("cell").cast("int"))
-          .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_sem_hist",
+        Dedup.semanticHistCells(index), "cell")
+      Dedup.semanticIncremental(batch, index, s.table(tbl),
+          minCosine = 0.8, dim = Some(64))
+        .withColumn("cell", col("cell").cast("int"))
     }),
 
     // ------------------------------------------- §7 line-level dedup

@@ -174,7 +174,7 @@ private[graft] object EntryQueriesMultimodal {
     // drop within (larger id); natural near-dups drop per the same
     // <= 2 bar. Oracle = brute-force all-pairs NOT EXISTS rules —
     // exact because multiprobe recall is guaranteed to hamming <= 7.
-    "multimodal_phash_incremental" -> ((s, dir) => {
+    "multimodal_phash_incremental" -> ((s, dir) => scratch(s) { sc =>
       val all =
         Multimodal.bmpDHash(phashFixture(documents(s, dir)), "payload")
           .localCheckpoint(true)
@@ -182,11 +182,8 @@ private[graft] object EntryQueriesMultimodal {
         col("doc_id") % 10 >= 8 || col("doc_id") >= 3000000L)
       val hist = all.filter(
         col("doc_id") % 10 < 8 && col("doc_id") < 3000000L)
-      withBucketedBands(s, "graft_ph_hist", Multimodal.dHashBandKeys(hist)) {
-        tbl =>
-          Multimodal.dHashIncremental(batch, s.table(tbl), maxHamming = 2)
-            .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_ph_hist", Multimodal.dHashBandKeys(hist), "bk")
+      Multimodal.dHashIncremental(batch, s.table(tbl), maxHamming = 2)
     }),
     // Round 13: the third real-decode codec, and the second MODALITY —
     // 16-bit PCM WAV audio (wavFixture — byte-correct RIFF with a
@@ -241,7 +238,7 @@ private[graft] object EntryQueriesMultimodal {
     // Same split/planting rules as multimodal_phash_incremental;
     // oracle = brute-force all-pairs NOT EXISTS, exact by the
     // multiprobe recall guarantee (hamming <= 7 covers the <= 2 bar).
-    "multimodal_audio_incremental" -> ((s, dir) => {
+    "multimodal_audio_incremental" -> ((s, dir) => scratch(s) { sc =>
       val all =
         Multimodal.wavDHash(audioCloneFixture(documents(s, dir)), "payload")
           .localCheckpoint(true)
@@ -249,11 +246,8 @@ private[graft] object EntryQueriesMultimodal {
         col("doc_id") % 10 >= 8 || col("doc_id") >= 3000000L)
       val hist = all.filter(
         col("doc_id") % 10 < 8 && col("doc_id") < 3000000L)
-      withBucketedBands(s, "graft_au_hist", Multimodal.dHashBandKeys(hist)) {
-        tbl =>
-          Multimodal.dHashIncremental(batch, s.table(tbl), maxHamming = 2)
-            .localCheckpoint(true)
-      }
+      val tbl = sc.bucketed("graft_au_hist", Multimodal.dHashBandKeys(hist), "bk")
+      Multimodal.dHashIncremental(batch, s.table(tbl), maxHamming = 2)
     }),
   )
 }

@@ -131,20 +131,15 @@ private[graft] object EntryQueriesOps {
     // row prices write+filtered-read honestly (the layout_bucketed_
     // join ingest convention); the oracle is the plain filtered
     // aggregate — physical layout is correctness-invisible.
-    "layout_partition_prune" -> ((s, dir) => {
+    "layout_partition_prune" -> ((s, dir) => scratch(s) { sc =>
       val ev = events(s, dir).select(col("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_pprune_").toString
-      try {
-        Sources.writePartitioned(ev, path, Seq("event_type"))
-        s.read.parquet(path)
-          .filter(col("event_type") === "purchase")
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_events"),
-            countDistinct(col("user_id")).as("n_users"))
-          .localCheckpoint(true)
-      } finally deleteRecursively(new java.io.File(path))
+      Sources.writePartitioned(ev, s"${sc.dir}/ev", Seq("event_type"))
+      s.read.parquet(s"${sc.dir}/ev")
+        .filter(col("event_type") === "purchase")
+        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
+        .agg(count(lit(1)).as("n_events"),
+          countDistinct(col("user_id")).as("n_users"))
     }),
 
     // Co-located fact-fact join over ingest-time bucketing: lineitem
@@ -155,20 +150,17 @@ private[graft] object EntryQueriesOps {
     // the shape; the oracle is the plain join+group-by, bucketing-
     // invisible by construction. The registered row's cost is honest:
     // it INCLUDES the two bucketed writes (the ingest-side price).
-    "layout_bucketed_join" -> ((s, dir) => {
+    "layout_bucketed_join" -> ((s, dir) => scratch(s) { sc =>
       val li = lineitem(s, dir)
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
       val ord = Sources.parquetTable(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority")
-      withBucketedTables(s, "graft_bjoin",
-        Seq((li, "l_orderkey"), (ord, "o_orderkey"))) { names =>
-        operators.Relational.orderPrioritySummary(
-          s.table(names(0)), s.table(names(1)))
-          .localCheckpoint(true)
-      }
+      val tl = sc.bucketed("graft_bjoin", li, "l_orderkey")
+      val to = sc.bucketed("graft_bjoin", ord, "o_orderkey")
+      operators.Relational.orderPrioritySummary(s.table(tl), s.table(to))
     }),
     // ... and the STEADY-STATE twin: same join, but over bucketed
-    // tables written once per (dir) — the cost a 100 TB deployment
+    // tables written once per session and dir — the cost a 100 TB deployment
     // actually pays per query once ingest has bucketed the facts
     // (the text_bm25_write / text_bm25_persisted split applied to
     // layout). Shares layout_bucketed_join's oracle verbatim.
@@ -289,26 +281,22 @@ private[graft] object EntryQueriesOps {
     // must be EXACT. The estimate has no SQL twin (DataSketches), so
     // the driver-visible row is the gate plus the exactly-checkable
     // volume — the similarity_ivf_recall gated-number pattern.
-    "events_cardinality_sketch" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hll")
-      try {
-        val ev = events(s, dir)
-        val hist = Events.cardinalitySketch(
-          ev.filter(col("event_id") % 2 === 0))
-        hist.write.mode("overwrite").parquet(s"$tmp/sk")
-        val reloaded = s.read.parquet(s"$tmp/sk")
-        val fresh = Events.cardinalitySketch(
-          ev.filter(col("event_id") % 2 === 1))
-        val est = Events.cardinalityEstimate(
-          Events.cardinalityMerge(reloaded.unionByName(fresh)))
-        val exact = ev.groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("n_exact"))
-        est.join(exact, Seq("event_type"))
-          .select(col("event_type"), col("n_events"), col("n_exact"),
-            (abs(col("n_users_est") - col("n_exact")) <=
-              col("n_exact") * lit(0.03)).as("within_tol"))
-          .localCheckpoint(true) // cut lineage into tmp pre-delete
-      } finally deleteRecursively(tmp.toFile)
+    "events_cardinality_sketch" -> ((s, dir) => scratch(s) { sc =>
+      val ev = events(s, dir)
+      val hist = Events.cardinalitySketch(
+        ev.filter(col("event_id") % 2 === 0))
+      hist.write.mode("overwrite").parquet(s"${sc.dir}/sk")
+      val reloaded = s.read.parquet(s"${sc.dir}/sk")
+      val fresh = Events.cardinalitySketch(
+        ev.filter(col("event_id") % 2 === 1))
+      val est = Events.cardinalityEstimate(
+        Events.cardinalityMerge(reloaded.unionByName(fresh)))
+      val exact = ev.groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      est.join(exact, Seq("event_type"))
+        .select(col("event_type"), col("n_events"), col("n_exact"),
+          (abs(col("n_users_est") - col("n_exact")) <=
+            col("n_exact") * lit(0.03)).as("within_tol"))
     }),
 
     // The SAME persisted split/round-trip/merge workflow on the KMV
@@ -320,26 +308,22 @@ private[graft] object EntryQueriesOps {
     // raw rows ((k−1)·2⁶⁰/h₍ₖ₎ over the repo's md5 hash recipe). k=64
     // keeps sf0.01 (150 users/type) in the approximate regime — the
     // estimator is what's pinned, not the exact fallback.
-    "events_cardinality_kmv" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kmv")
-      try {
-        val ev = events(s, dir)
-        val hist = Sketches.kmvSketch(
-          ev.filter(col("event_id") % 2 === 0), "event_type", "user_id")
-        hist.write.mode("overwrite").parquet(s"$tmp/sk")
-        val fresh = Sketches.kmvSketch(
-          ev.filter(col("event_id") % 2 === 1), "event_type", "user_id")
-        val merged = Sketches.kmvMerge(
-          s.read.parquet(s"$tmp/sk").unionByName(fresh), "event_type")
-        val exact = ev.filter(col("user_id").isNotNull)
-          .groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("n_exact"))
-        Sketches.kmvEstimate(merged, "event_type")
-          .join(exact, Seq("event_type"))
-          .select(col("event_type"), col("n_rows").as("n_events"),
-            col("n_distinct_est").as("n_users_est"), col("n_exact"))
-          .localCheckpoint(true) // cut lineage into tmp pre-delete
-      } finally deleteRecursively(tmp.toFile)
+    "events_cardinality_kmv" -> ((s, dir) => scratch(s) { sc =>
+      val ev = events(s, dir)
+      val hist = Sketches.kmvSketch(
+        ev.filter(col("event_id") % 2 === 0), "event_type", "user_id")
+      hist.write.mode("overwrite").parquet(s"${sc.dir}/sk")
+      val fresh = Sketches.kmvSketch(
+        ev.filter(col("event_id") % 2 === 1), "event_type", "user_id")
+      val merged = Sketches.kmvMerge(
+        s.read.parquet(s"${sc.dir}/sk").unionByName(fresh), "event_type")
+      val exact = ev.filter(col("user_id").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      Sketches.kmvEstimate(merged, "event_type")
+        .join(exact, Seq("event_type"))
+        .select(col("event_type"), col("n_rows").as("n_events"),
+          col("n_distinct_est").as("n_users_est"), col("n_exact"))
     }),
 
     // KMV set algebra (round 14): |click ∩ view| estimated from two

@@ -88,7 +88,7 @@ private[graft] object EntryQueriesSimilarity {
     // the DuckDB oracle — hash-EXACT. The production Lloyd fit
     // (ivfIndex, nAssign=2) keeps its recall specs; the exhaustive
     // Lloyd probe stays oracle-pinned as similarity_ivf_exhaustive.
-    // Round 11 (VERDICT item 5): probes the per-JVM cached index —
+    // Round 11 (VERDICT item 5): probes the per-session cached index —
     // steady-state probe cost under the timer; the build cost has its
     // own oracle row + timer below (similarity_ivf_build). Rows are
     // identical to a fresh build (hash-init is deterministic).
@@ -131,31 +131,20 @@ private[graft] object EntryQueriesSimilarity {
     // build), so identical rows to probing the in-memory index —
     // SimilaritySpec asserts the round-trip equality and the
     // Exchange-free cells scan. The table name is minted per invocation
-    // (concurrent sessions must not collide on one catalog entry) and
-    // both artifacts are dropped before returning: the probe result is
-    // eagerly localCheckpoint'ed — the real bucketed-scan plan executes
-    // at that point — so the returned frame no longer references the
-    // table and repeated runs leave no orphan dirs or catalog entries.
+    // (concurrent sessions must not collide on one catalog entry); the
+    // scratch scope drops both artifacts after the probe has run.
     // Round 10: the persisted round-trip now carries the hash-init
     // index, so "write → reload → probe == in-memory probe" graduates
     // from a spec-only equality to a hash-EXACT oracle row (same
     // DuckDB twin as similarity_ivf — persistence must be identity).
-    "similarity_ivf_persisted" -> ((s, dir) => {
+    "similarity_ivf_persisted" -> ((s, dir) => scratch(s) { sc =>
       val emb = embeddings(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivf")
-      val table = "graft_ivf_cells_" +
-        tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
-      try {
-        Similarity.writeIndex(Similarity.ivfIndexHashInit(emb),
-          table, s"$tmp/centroids")
-        val loaded = Similarity.readIndex(s, table, s"$tmp/centroids")
-        Similarity.ivfProbe(loaded, emb.filter(col("vec_id") < 10),
-          k = 10, nProbe = 4, roundAt = 6)
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS `$table`")
-        deleteRecursively(tmp.toFile)
-      }
+      val table = sc.table("graft_ivf_cells")
+      Similarity.writeIndex(Similarity.ivfIndexHashInit(emb),
+        table, s"${sc.dir}/centroids")
+      val loaded = Similarity.readIndex(s, table, s"${sc.dir}/centroids")
+      Similarity.ivfProbe(loaded, emb.filter(col("vec_id") < 10),
+        k = 10, nProbe = 4, roundAt = 6)
     }),
     // Driver-visible ANN recall (round 14, VERDICT item 3): recall@10
     // of the hash-init IVF probe (nProbe=4) against the exact cosine

@@ -132,14 +132,13 @@ private[graft] object EntryQueriesStreaming {
     // scores answer text_perplexity_cross's oracle VERBATIM — the
     // scorer-artifact families (IVF, BM25, CMS, now the LM) each have
     // a hash-verified streaming ingest leg.
-    "stream_perplexity" -> ((s, dir) =>
-      withReloadedLm(s, dir) { (loaded, lv) =>
-        runAvailableNow(s,
-          LanguageModel.perplexityAggregates(
-            Sources.documentsStream(s, dir), loaded, lv),
-          outputMode = "complete", sinkWriteMode = "overwrite")(aggs =>
-          LanguageModel.perplexityShape(documents(s, dir), aggs))
-      }),
+    "stream_perplexity" -> ((s, dir) => scratch(s) { sc =>
+      val (loaded, lv) = reloadedLm(sc, dir)
+      LanguageModel.perplexityShape(documents(s, dir), availableNow(sc,
+        LanguageModel.perplexityAggregates(
+          Sources.documentsStream(s, dir), loaded, lv),
+        outputMode = "complete", sinkWriteMode = "overwrite"))
+    }),
 
     // Round 11 (VERDICT item 6): the FIRST streaming query under the
     // driver's CORRECTNESS gate — a REAL readStream file source over the
@@ -348,14 +347,14 @@ private[graft] object EntryQueriesStreaming {
     // assignment, so append-then-probe answers the SAME DuckDB oracle
     // as build-then-probe (similarity_ivf) — the stream leg is
     // hash-verified, not just shape-checked.
-    "stream_ivf_append" -> ((s, dir) => {
+    "stream_ivf_append" -> ((s, dir) => scratch(s) { sc =>
       val index = cachedIvfHashInit(s, dir)
       val base = index.cells.filter(col("neighbor_id") % 2 === 0)
-      val delta = runAvailableNow(s,
+      val delta = availableNow(sc,
         Similarity.ivfAssign(index,
           Sources.embeddingsStream(s, dir)
             .filter(col("vec_id") % 2 === 1)),
-        outputMode = "append", sinkWriteMode = "append")(identity)
+        outputMode = "append", sinkWriteMode = "append")
       val qs = embeddings(s, dir).filter(col("vec_id") < 10)
       Similarity.ivfProbe(index.copy(cells = base.unionByName(delta)),
         qs, k = 10, nProbe = 4, roundAt = 6)
@@ -369,13 +368,13 @@ private[graft] object EntryQueriesStreaming {
     // and the probe answers text_bm25's oracle — the stream_ivf_append
     // recipe applied to retrieval: append-then-score == build-then-
     // score, hash-verified.
-    "stream_bm25_append" -> ((s, dir) => {
+    "stream_bm25_append" -> ((s, dir) => scratch(s) { sc =>
       val docs = documents(s, dir)
       val base = TextFeatures.bm25Index(docs.filter(col("doc_id") % 2 === 0))
-      val delta = runAvailableNow(s,
+      val delta = availableNow(sc,
         TextFeatures.bm25PostingsStateless(
           Sources.documentsStream(s, dir).filter(col("doc_id") % 2 === 1)),
-        outputMode = "append", sinkWriteMode = "append")(identity)
+        outputMode = "append", sinkWriteMode = "append")
       val grown = TextFeatures.bm25MergePostings(base, delta)
       TextFeatures.bm25Probe(grown,
         docs.filter(col("doc_id") < 5)

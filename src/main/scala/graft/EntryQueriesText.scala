@@ -118,11 +118,10 @@ private[graft] object EntryQueriesText {
     // nightly-scoring deployment. Shares text_perplexity_cross's
     // oracle verbatim (the round-trip must be the identity), so model
     // persistence is hash-verified like the IVF/BM25 index round-trips.
-    "text_perplexity_persisted" -> ((s, dir) =>
-      withReloadedLm(s, dir) { (loaded, lv) =>
-        LanguageModel.perplexityAgainst(documents(s, dir), loaded, lv)
-          .localCheckpoint(true)
-      }),
+    "text_perplexity_persisted" -> ((s, dir) => scratch(s) { sc =>
+      val (loaded, lv) = reloadedLm(sc, dir)
+      LanguageModel.perplexityAgainst(documents(s, dir), loaded, lv)
+    }),
     // ------------------------------------ §7 boilerplate line removal
     // C4-style frequent-line filter on a planted multi-line fixture:
     // every 3rd doc gets a shared subscribe-banner header, every doc a
@@ -175,7 +174,7 @@ private[graft] object EntryQueriesText {
     // per query batch). Shares text_bm25's oracle — the round-trip
     // must be the identity, so persistence is hash-verified.
     // Round 11 (VERDICT item 5): the postings artifact is written once
-    // per JVM (cachedBm25IndexDir); the registered invocation measures
+    // per session (cachedBm25IndexDir); the registered invocation measures
     // the steady-state reload + probe a nightly deployment pays. The
     // write half gets its own timer + oracle row (text_bm25_write).
     // Result rows are unchanged — write → reload is the identity the r10
@@ -196,19 +195,14 @@ private[graft] object EntryQueriesText {
     // total term frequency, corpus doc count) — the aggregates force the
     // full tokenize+postings job AND the parquet write is timed in-line;
     // the profile is hash-EXACT against the oracle's re-derived postings.
-    "text_bm25_write" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_w")
-      try {
-        TextFeatures.writeBm25Index(
-          TextFeatures.bm25Index(documents(s, dir)), tmp.toString)
-        val postings = s.read.parquet(s"$tmp/tf")
-        postings.agg(
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_postings"),
-          sum(col("tf")).as("tf_sum"),
-          countDistinct(col("doc_id")).as("n_docs"))
-          .localCheckpoint(true)
-      } finally deleteRecursively(tmp.toFile)
+    "text_bm25_write" -> ((s, dir) => scratch(s) { sc =>
+      TextFeatures.writeBm25Index(
+        TextFeatures.bm25Index(documents(s, dir)), sc.dir)
+      s.read.parquet(s"${sc.dir}/tf").agg(
+        countDistinct(col("term")).as("n_terms"),
+        count(lit(1)).as("n_postings"),
+        sum(col("tf")).as("tf_sum"),
+        countDistinct(col("doc_id")).as("n_docs"))
     }),
     // BM25 living index, batch leg (round 15, r14 verdict item 5):
     // index HALF the corpus, append the other half's postings without
@@ -306,24 +300,20 @@ private[graft] object EntryQueriesText {
     // events_cardinality_kmv round-trip applied to the sample face
     // of the sketch; with it both KMV faces have a persisted-merge
     // row).
-    "text_sample_quantiles_merged" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kmv_sq")
-      try {
-        val docs = documents(s, dir)
-        val vcol = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-        val h1 = Sketches.sampleSketch(
-          docs.filter(col("doc_id") % 2 === 0), "source", "doc_id",
-          vcol, m = 16)
-        h1.write.mode("overwrite").parquet(s"$tmp/sk")
-        val h2 = Sketches.sampleSketch(
-          docs.filter(col("doc_id") % 2 === 1), "source", "doc_id",
-          vcol, m = 16)
-        val merged = Sketches.kmvMerge(
-          s.read.parquet(s"$tmp/sk").unionByName(h2), "source", k = 16)
-        Sketches.sampleQuantilesFromSketches(merged, docs, "source",
-            vcol, probs = Seq(0.5, 0.9))
-          .localCheckpoint(true) // cut lineage into tmp pre-delete
-      } finally deleteRecursively(tmp.toFile)
+    "text_sample_quantiles_merged" -> ((s, dir) => scratch(s) { sc =>
+      val docs = documents(s, dir)
+      val vcol = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
+      val h1 = Sketches.sampleSketch(
+        docs.filter(col("doc_id") % 2 === 0), "source", "doc_id",
+        vcol, m = 16)
+      h1.write.mode("overwrite").parquet(s"${sc.dir}/sk")
+      val h2 = Sketches.sampleSketch(
+        docs.filter(col("doc_id") % 2 === 1), "source", "doc_id",
+        vcol, m = 16)
+      val merged = Sketches.kmvMerge(
+        s.read.parquet(s"${sc.dir}/sk").unionByName(h2), "source", k = 16)
+      Sketches.sampleQuantilesFromSketches(merged, docs, "source",
+        vcol, probs = Seq(0.5, 0.9))
     }),
 
     // BPE vocabulary learning, 3 merge steps unrolled under the
@@ -354,15 +344,11 @@ private[graft] object EntryQueriesText {
     // FrequentItems/IVF persisted-workflow pattern applied to the
     // tokenizer. Shares text_bpe_encode's oracle verbatim: a lossless
     // round-trip is the whole claim.
-    "text_bpe_encode_persisted" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bpe")
-      try {
-        val docs = documents(s, dir)
-        Bpe.learn(docs, steps = 3, topWords = 200)._2
-          .write.mode("overwrite").parquet(s"$tmp/vocab")
-        Bpe.encodeTokenCounts(docs, s.read.parquet(s"$tmp/vocab"))
-          .localCheckpoint(true) // cut lineage into tmp pre-delete
-      } finally deleteRecursively(tmp.toFile)
+    "text_bpe_encode_persisted" -> ((s, dir) => scratch(s) { sc =>
+      val docs = documents(s, dir)
+      Bpe.learn(docs, steps = 3, topWords = 200)._2
+        .write.mode("overwrite").parquet(s"${sc.dir}/vocab")
+      Bpe.encodeTokenCounts(docs, s.read.parquet(s"${sc.dir}/vocab"))
     }),
 
     // Corpus-level heavy hitters: exact top-50 word bigrams.
@@ -435,31 +421,25 @@ private[graft] object EntryQueriesText {
     // the WHOLE corpus (mergeable-summaries exactness composes: both
     // halves stayed exact and the union fits the capacity, so the
     // merge is a plain sum). Same oracle SQL as the one-shot sketch.
-    "text_heavy_hitters_incremental" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hhi")
-      try {
-        def grams(d: DataFrame) = d
-          .select(explode(
-            graft.functions.WordNgrams(col("text"), 2,
-              strictFallback = false)).as("gram"))
-          .filter(size(split(col("gram"), " ")) === 2)
-        val docs = documents(s, dir)
-        val hist = graft.functions.FrequentItems.sketch(
-          grams(docs.filter(col("doc_id") % 2 === 0)), "gram",
-          graft.functions.FrequentItems.DefaultCapacity)
-        graft.functions.FrequentItems.writeSketch(s, hist, s"$tmp/sk")
-        val reloaded = graft.functions.FrequentItems.readSketch(s, s"$tmp/sk")
-        val fresh = graft.functions.FrequentItems.sketch(
-          grams(docs.filter(col("doc_id") % 2 === 1)), "gram",
-          graft.functions.FrequentItems.DefaultCapacity)
-        val merged = graft.functions.FrequentItems
-          .merge(reloaded, fresh,
-            graft.functions.FrequentItems.DefaultCapacity)
-        // topK is a driver-local relation (readSketch/merge collect the
-        // bounded states), so nothing here has lineage into tmp — no
-        // checkpoint needed before the finally deletes it
-        graft.functions.FrequentItems.topK(s, merged, 50)
-      } finally deleteRecursively(tmp.toFile)
+    "text_heavy_hitters_incremental" -> ((s, dir) => scratch(s) { sc =>
+      def grams(d: DataFrame) = d
+        .select(explode(
+          graft.functions.WordNgrams(col("text"), 2,
+            strictFallback = false)).as("gram"))
+        .filter(size(split(col("gram"), " ")) === 2)
+      val docs = documents(s, dir)
+      val hist = graft.functions.FrequentItems.sketch(
+        grams(docs.filter(col("doc_id") % 2 === 0)), "gram",
+        graft.functions.FrequentItems.DefaultCapacity)
+      graft.functions.FrequentItems.writeSketch(s, hist, s"${sc.dir}/sk")
+      val reloaded =
+        graft.functions.FrequentItems.readSketch(s, s"${sc.dir}/sk")
+      val fresh = graft.functions.FrequentItems.sketch(
+        grams(docs.filter(col("doc_id") % 2 === 1)), "gram",
+        graft.functions.FrequentItems.DefaultCapacity)
+      graft.functions.FrequentItems.topK(s,
+        graft.functions.FrequentItems.merge(reloaded, fresh,
+          graft.functions.FrequentItems.DefaultCapacity), 50)
     }),
 
     // Count-Min sketch point-query estimates (the fourth sketch
@@ -504,30 +484,26 @@ private[graft] object EntryQueriesText {
     // full-corpus exact side is the two count frames re-summed by
     // term (group-sums of the parity split equal the totals), so no
     // third corpus pass exists anywhere in the plan.
-    "text_count_min_merged" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cms")
-      try {
-        val docs = documents(s, dir)
-        def counts(d: DataFrame) = tokenTerms(d)
-          .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
-        val histCounts = counts(docs.filter(col("doc_id") % 2 === 0))
-        val freshCounts = counts(docs.filter(col("doc_id") % 2 === 1))
-        val hist = graft.operators.CountMin.sketchWeighted(
-          histCounts, col("term"), col("n_exact"), depth = 4, width = 128)
-        hist.write.mode("overwrite").parquet(s"$tmp/sk")
-        val fresh = graft.operators.CountMin.sketchWeighted(
-          freshCounts, col("term"), col("n_exact"), depth = 4, width = 128)
-        val merged = graft.operators.CountMin.merge(
-          s.read.parquet(s"$tmp/sk").unionByName(fresh))
-        val exact = histCounts.unionByName(freshCounts)
-          .groupBy(col("term")).agg(sum(col("n_exact")).as("n_exact"))
-        val probes = exact.orderBy(col("n_exact").desc, col("term")).limit(20)
-        graft.operators.CountMin.estimate(merged, probes, "term",
-            depth = 4, width = 128)
-          .withColumn("overcount", col("cm_est") - col("n_exact"))
-          .orderBy(col("n_exact").desc, col("term"))
-          .localCheckpoint(true) // cut lineage into tmp pre-delete
-      } finally deleteRecursively(tmp.toFile)
+    "text_count_min_merged" -> ((s, dir) => scratch(s) { sc =>
+      val docs = documents(s, dir)
+      def counts(d: DataFrame) = tokenTerms(d)
+        .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
+      val histCounts = counts(docs.filter(col("doc_id") % 2 === 0))
+      val freshCounts = counts(docs.filter(col("doc_id") % 2 === 1))
+      val hist = graft.operators.CountMin.sketchWeighted(
+        histCounts, col("term"), col("n_exact"), depth = 4, width = 128)
+      hist.write.mode("overwrite").parquet(s"${sc.dir}/sk")
+      val fresh = graft.operators.CountMin.sketchWeighted(
+        freshCounts, col("term"), col("n_exact"), depth = 4, width = 128)
+      val merged = graft.operators.CountMin.merge(
+        s.read.parquet(s"${sc.dir}/sk").unionByName(fresh))
+      val exact = histCounts.unionByName(freshCounts)
+        .groupBy(col("term")).agg(sum(col("n_exact")).as("n_exact"))
+      val probes = exact.orderBy(col("n_exact").desc, col("term")).limit(20)
+      graft.operators.CountMin.estimate(merged, probes, "term",
+          depth = 4, width = 128)
+        .withColumn("overcount", col("cm_est") - col("n_exact"))
+        .orderBy(col("n_exact").desc, col("term"))
     }),
   )
 }

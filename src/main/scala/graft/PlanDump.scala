@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.{CommandResultExec, ExplainMode,
+  ExplainUtils, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Measurement tool (optimization guide §1.2 / §7.2): write
@@ -22,14 +24,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * broadcast vs sort-merge joins, ReusedExchange on self-joins,
   * WholeStageCodegen span width, no CartesianProduct outside declared
   * broadcast-bounded cross joins. Stream queries build their plan
-  * inside runAvailableNow; their dump is the post-run read-back.
+  * inside availableNow; their dump is the post-run read-back.
   *
   * Building a frame may itself run SQL jobs: a quantile or bounds
   * `collect`/`head`, a count, an eager `localCheckpoint`, a table
   * write. A `QueryExecutionListener` is registered while the row is
   * built, and after the returned frame's plan each captured job's
-  * formatted plan follows under a `-- build-time job <i>` header, in
-  * completion order. Invisible still: jobs run on the RDD API
+  * formatted plan follows under a `-- build-time job <i>` header. Each
+  * job is dumped in its initial (pre-AQE) form: the AQE-final form
+  * picks build sides and numbers codegen stages by which query stage
+  * finished first. The jobs are
+  * listed sorted by their plan text with run-to-run counters, paths
+  * and call sites blanked, not in completion order, which concurrent
+  * jobs (CrossValidator's fits) swap from run to run. Invisible still: jobs run on the RDD API
   * (`takeSample`'s own jobs; only the plan of the frame it samples
   * shows), a stream's micro-batches (they run in the stream's own
   * session) and the sub-plan behind a lazy `localCheckpoint(false)`.
@@ -73,10 +80,10 @@ object PlanDump {
         // run THIS QueryExecution via its RDD: count()/write each build
         // a separate plan and leave this one's AdaptiveSparkPlan unrun
         if (finalPlan) qe.toRdd.foreachPartition(_ => ())
+        val jobs = built.asScala.toSeq.map(initialForm)
         val plan = qe.explainString(formatted) +
-          built.asScala.zipWithIndex.map { case (b, i) =>
-            s"\n-- build-time job $i\n${b.explainString(formatted)}"
-          }.mkString
+          jobs.sortBy(j => volatile.foldLeft(j)(_.replaceAll(_, ""))).zipWithIndex
+            .map { case (j, i) => s"\n-- build-time job $i\n$j" }.mkString
         val header = s"-- query: $n\n-- sfDir: $sfDir  cpus: " +
           s"${spark.sparkContext.defaultParallelism}\n" +
           (if (n.startsWith("stream_"))
@@ -94,4 +101,24 @@ object PlanDump {
   }
 
   private val formatted = ExplainMode.fromString("formatted")
+
+  /** `explain("formatted")` of an executed job with every adaptive plan
+    * shown as it was before its first query stage ran. */
+  private def initialForm(qe: QueryExecution): String = {
+    val root = qe.executedPlan match {
+      case c: CommandResultExec => c.commandPhysicalPlan
+      case p => p
+    }
+    val out = new StringBuilder("== Physical Plan ==\n")
+    ExplainUtils.processPlan[SparkPlan](
+      root.transformDown { case a: AdaptiveSparkPlanExec => a.initialPlan },
+      s => out.append(s))
+    out.toString
+  }
+  // what differs between two runs of one plan: expression ids, plan /
+  // RDD / broadcast counters, object hashes, temp paths and the
+  // per-invocation suffixes of table names, call-site line numbers
+  private val volatile = Seq("#\\d+L?", "(?<=plan_id=|RDD\\[|Broadcast\\()\\d+",
+    "@[0-9a-f]{4,}", "\\.scala:\\d+", "(/tmp|file:)[^\\s,\\]\\)]*",
+    "[0-9a-f]{8}([-_][0-9a-f]{4}){3}[-_][0-9a-f]{12}", "\\d{6,}")
 }

@@ -354,203 +354,168 @@ object SparkEntry {
     ValidationCurves.foldAssignments(customerFeatures(s, dir), custkey, 3)
   }
 
-  /** Best-effort recursive delete for the per-invocation artifacts of
-    * `similarity_ivf_persisted` (temp centroid dir). */
+  /** Best-effort recursive delete of a [[Scratch]] dir or table location. */
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
 
-  // ---- steady-state ANN/BM25 amortization (round 11, VERDICT item 5).
-  // The hash-init indexes and the BM25 postings are deterministic pure
-  // functions of the corpus dir, so a deployment builds them ONCE and
-  // probes many times; rebuilding inside every registered invocation made
-  // BENCH_r10 time build+probe (the two r10 `weak` flags). One build per
-  // (dir) per JVM: the probe-side frames are eagerly localCheckpoint'ed,
-  // so repeat probes scan materialized blocks (RDD-level checkpoint
-  // blocks survive Bench's per-query `catalog.clearCache()`, which only
-  // drains the CacheManager registry — the similarity_ivf_persisted
-  // precedent). Result rows are IDENTICAL to a fresh build (the indexes
-  // are deterministic), so the oracle rows are unchanged; the build cost
-  // stays observable under its own named timers (`similarity_ivf_build`
-  // / `similarity_ivfpq_build` / `text_bm25_write`, each a fresh
-  // UNCACHED build with its own hash-EXACT oracle row).
-  // keyed by (SparkContext, dir): the cached index holds a
-  // localCheckpoint'ed DataFrame whose RDD blocks die with the context
-  // that built it — a dir-only key would serve dead plans to a second
-  // SparkSession in the same JVM (e.g. Verify then Bench in one
-  // process, or any probe harness)
-  private[graft] def annCacheKey(s: SparkSession, dir: String): String =
-    s"${s.sparkContext.applicationId}|$dir"
-  // entries of DEAD contexts are dropped on access (a session-cycling
-  // harness would otherwise grow the maps monotonically, each stale
-  // entry pinning plans of a stopped context). getOrElseUpdate is not
-  // atomic for the expensive build — a racing first probe may build
-  // twice and abandon one checkpointed copy; benign (GC'd with the
-  // context) and cheaper than locking every steady-state hit.
-  private[graft] def pruneStale[T](
-      cache: scala.collection.concurrent.TrieMap[String, T],
-      appId: String): Unit =
-    cache.keys.filterNot(_.startsWith(appId + "|"))
-      .foreach(cache.remove)
-  private[graft] val ivfHashInitCache =
-    new scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]
-  private[graft] def cachedIvfHashInit(s: SparkSession, dir: String) = {
-    pruneStale(ivfHashInitCache, s.sparkContext.applicationId)
-    ivfHashInitCache.getOrElseUpdate(annCacheKey(s, dir), {
-      val idx = Similarity.ivfIndexHashInit(embeddings(s, dir))
-      idx.copy(cells = idx.cells.localCheckpoint(true))
-    })
-  }
-  private[graft] val ivfPqHashInitCache =
-    new scala.collection.concurrent.TrieMap[String, Similarity.IvfPqIndex]
-  private[graft] def cachedIvfPqHashInit(s: SparkSession, dir: String) = {
-    pruneStale(ivfPqHashInitCache, s.sparkContext.applicationId)
-    ivfPqHashInitCache.getOrElseUpdate(annCacheKey(s, dir), {
-      val idx = Similarity.ivfPqIndexHashInit(embeddings(s, dir))
-      idx.copy(cellCodes = idx.cellCodes.localCheckpoint(true))
-    })
-  }
-  // BM25: write the postings artifact once per (dir) per JVM; the
-  // registered text_bm25_persisted then measures the steady-state
-  // reload + probe (the nightly-deployment shape), not write+reload+probe.
-  // The JVM-exit hook reclaims the temp dirs.
-  private[graft] val bm25IndexDirCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private[graft] def cachedBm25IndexDir(s: SparkSession, dir: String): String =
-    bm25IndexDirCache.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_idx")
-      TextFeatures.writeBm25Index(
-        TextFeatures.bm25Index(documents(s, dir)), tmp.toString)
-      sys.addShutdownHook(deleteRecursively(tmp.toFile))
-      tmp.toString
-    })
+  /** What a registry run writes and reads back, owned in one place: a
+    * temp dir (created on first use), uniquely named tables with their
+    * warehouse locations, and eagerly checkpointed frames. [[release]]
+    * drops the tables (deletes their locations instead once the owning
+    * session is stopped), deletes the dir and unpersists the frames.
+    *
+    * Lifecycle contract. A row that writes and reads back runs in
+    * [[scratch]]: its result is materialized once with
+    * `localCheckpoint(true)` BEFORE the scope is released, so the
+    * returned frame never references a dropped table or a deleted dir
+    * lazily. A steady-state artifact (an index or table pair built once
+    * and probed by many queries) is built in [[steady]]'s scope, which
+    * lives as long as the application that built it. */
+  private[graft] final class Scratch(val session: SparkSession) {
+    private var tmp: Option[java.io.File] = None
+    private val tables =
+      scala.collection.mutable.ArrayBuffer.empty[(String, java.io.File)]
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Write `bands` as a uniquely-named bucketed band-key table, run
-    * `body` against it, drop the table before returning. The registered
-    * incremental twins use this to demonstrate the at-scale persisted-
-    * history shape (candidate join against an ingest-time-bucketed
-    * table — zero history-side Exchange) while staying re-entrant:
-    * unique name per invocation, no catalog entry survives the call.
-    * `body` must materialize its result (localCheckpoint) — the frame
-    * it returns may not reference the dropped table lazily. */
-  private[graft] def withBucketedBands(s: SparkSession, prefix: String,
-      bands: DataFrame)(body: String => DataFrame): DataFrame =
-    withBucketedTables(s, prefix, Seq((bands, "bk")))(ns => body(ns.head))
+    def dir: String = synchronized {
+      if (tmp.isEmpty) tmp = Some(
+        java.nio.file.Files.createTempDirectory("graft_scratch").toFile)
+      tmp.get.toString
+    }
 
-  /** [[withBucketedBands]] generalized to several (frame, bucket key)
-    * pairs — the co-located-join demonstration needs BOTH fact sides
-    * ingest-bucketed on their join key. Same re-entrancy contract:
-    * unique names per invocation, tables dropped before returning,
-    * `body` must materialize its result. */
-  private[graft] def withBucketedTables(s: SparkSession, prefix: String,
-      tables: Seq[(DataFrame, String)])(
-      body: Seq[String] => DataFrame): DataFrame = {
-    val names = tables.map(_ =>
-      prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "_"))
-    try {
-      tables.zip(names).foreach { case ((df, key), n) =>
-        Sources.writeBucketed(df, n, key)
+    /** A fresh `<prefix>_<uuid>` table name, dropped on release. */
+    def table(prefix: String): String = synchronized {
+      val n = prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "_")
+      val catalog = session.sessionState.catalog
+      tables += n -> new java.io.File(catalog.defaultTablePath(
+        session.sessionState.sqlParser.parseTableIdentifier(n)))
+      n
+    }
+
+    /** `df` written as a fresh table bucketed by `key`; its name. */
+    def bucketed(prefix: String, df: DataFrame, key: String): String = {
+      val n = table(prefix)
+      Sources.writeBucketed(df, n, key)
+      n
+    }
+
+    /** `df` eagerly checkpointed; its blocks go with the scope. */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      synchronized(frames += c)
+      c
+    }
+
+    def release(): Unit = synchronized {
+      val live = !session.sparkContext.isStopped
+      tables.foreach { case (t, loc) =>
+        try if (live) session.sql(s"DROP TABLE IF EXISTS `$t`")
+        catch { case _: Throwable => () }
+        if (loc.exists()) deleteRecursively(loc)
       }
-      body(names)
-    } finally names.foreach(n => s.sql(s"DROP TABLE IF EXISTS `$n`"))
+      tmp.foreach(deleteRecursively)
+      if (live) frames.foreach(_.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false): Unit
+        case _ => ()
+      })
+      tables.clear(); frames.clear(); tmp = None
+    }
   }
 
-  // Co-located join STEADY-STATE tables: write the bucketed lineitem +
-  // orders pair once per (dir) per session, so the registered steady
-  // row measures the repeated query (the Exchange-free join) and not
-  // the one-time ingest the _ingest twin prices — the text_bm25_write /
-  // text_bm25_persisted split applied to physical layout. Keyed by
-  // (SparkContext, dir) like the ANN caches: managed tables live in the
-  // session's in-memory catalog, so a dir-only key would serve dead
-  // table names to a second SparkSession in the same JVM (Verify then
-  // Bench in one sbt shell). The JVM-exit hook drops the catalog
-  // entries with a file-delete fallback.
-  // Each entry carries everything its cleanup needs: the owning session
-  // (for a catalog DROP while it is still alive), the table names, and
-  // the managed warehouse locations captured at CREATE time (file delete
-  // as the fallback once the session is stopped). Cleanup runs in two
-  // places — immediately when a stale entry is pruned on access, and
-  // from ONE JVM-exit hook that drains whatever is left in the map.
-  // (Previously a hook was registered per cache entry, each capturing
-  // its SparkSession: a long-lived multi-session harness accumulated
-  // hooks and retained stopped sessions, and pruned entries' tables
-  // stayed on disk until JVM exit.)
-  private[graft] case class BucketedJoinTables(session: SparkSession,
-      tables: Seq[String], locations: Seq[java.io.File])
-  private[graft] val bucketedJoinTableCache =
-    new scala.collection.concurrent.TrieMap[String, BucketedJoinTables]
-  private[graft] def cleanupBucketed(e: BucketedJoinTables): Unit = {
-    e.tables.foreach { t =>
-      try {
-        if (!e.session.sparkContext.isStopped)
-          e.session.sql(s"DROP TABLE IF EXISTS `$t`")
-      } catch { case _: Throwable => () }
-    }
-    e.locations.foreach(f => if (f.exists()) deleteRecursively(f))
+  /** Run `body` in a fresh [[Scratch]], materialize its result, then
+    * release the scope, also when `body` throws. */
+  private[graft] def scratch(s: SparkSession)(body: Scratch => DataFrame)
+      : DataFrame = {
+    val sc = new Scratch(s)
+    try body(sc).localCheckpoint(true) finally sc.release()
   }
-  // lazy val ⇒ registered exactly once per JVM, holds no session itself
-  private[graft] lazy val bucketedCleanupHookOnce: Unit = {
-    sys.addShutdownHook {
-      bucketedJoinTableCache.keys.foreach(k =>
-        bucketedJoinTableCache.remove(k).foreach(cleanupBucketed))
-    }
+
+  // Steady-state artifacts (the hash-init ANN indexes, the BM25
+  // postings dir, the bucketed join tables) are deterministic functions
+  // of the corpus dir, so a session builds each once and its later
+  // queries probe it; the `*_build`/`_write`/`_ingest` rows price the
+  // build. Checkpointed index frames survive Bench's per-query
+  // `catalog.clearCache()`, which drains only the CacheManager. Keyed by
+  // application id as well: checkpoint blocks and catalog tables die
+  // with the context that made them, so a second SparkContext in one
+  // JVM builds its own.
+  private[graft] case class SteadyKey(app: String, kind: String, dir: String)
+  private[graft] val steadyCache =
+    new scala.collection.concurrent.TrieMap[SteadyKey, (Scratch, Any)]
+  private lazy val steadyExitHook: Unit = {
+    sys.addShutdownHook(steadyCache.keys.foreach(k =>
+      steadyCache.remove(k).foreach(_._1.release())))
     ()
   }
-  private[graft] def cachedBucketedJoinTables(
-      s: SparkSession, dir: String): (String, String) = {
-    // prune stale-appId entries AND reclaim their tables now — a second
-    // session reusing the warehouse dir must not double disk usage
-    // until JVM exit
-    bucketedJoinTableCache.keys
-      .filterNot(_.startsWith(s.sparkContext.applicationId + "|"))
-      .foreach(k => bucketedJoinTableCache.remove(k).foreach(cleanupBucketed))
-    bucketedCleanupHookOnce
-    // NOT getOrElseUpdate: its get-then-update window lets a racing
-    // first probe build twice, and with cleanup now keyed off the map
-    // the LOSING build's tables would leak forever (the old
-    // hook-per-build shape covered abandoned builds; this restores
-    // that property by cleaning the loser at the atomic putIfAbsent).
-    val e = bucketedJoinTableCache.get(annCacheKey(s, dir)).getOrElse {
-      val suffix = java.util.UUID.randomUUID.toString.replace("-", "_")
-      val (tl, to) = (s"graft_bjs_l_$suffix", s"graft_bjs_o_$suffix")
-      Sources.writeBucketed(lineitem(s, dir)
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
-        tl, "l_orderkey")
-      Sources.writeBucketed(Sources.parquetTable(s, dir, "orders")
-        .select("o_orderkey", "o_orderpriority"), to, "o_orderkey")
-      val locs = Seq(tl, to).map(t => new java.io.File(
-        s.sessionState.catalog.defaultTablePath(
-          s.sessionState.sqlParser.parseTableIdentifier(t))))
-      val built = BucketedJoinTables(s, Seq(tl, to), locs)
-      bucketedJoinTableCache.putIfAbsent(annCacheKey(s, dir), built) match {
-        case Some(winner) => cleanupBucketed(built); winner
+
+  /** The per-session cache: `build` runs in its own [[Scratch]] at most
+    * once per (application, kind, dir) that wins. Entries of stopped
+    * applications are released on the next access; when two first
+    * calls race, the `putIfAbsent` winner is kept and the loser's scope
+    * released; one JVM-exit hook releases what is left. */
+  private[graft] def steady[T](s: SparkSession, kind: String, dir: String)(
+      build: Scratch => T): T = {
+    steadyExitHook
+    val app = s.sparkContext.applicationId
+    steadyCache.keys.filter(_.app != app).foreach(k =>
+      steadyCache.remove(k).foreach(_._1.release()))
+    val key = SteadyKey(app, kind, dir)
+    steadyCache.getOrElse(key, {
+      val sc = new Scratch(s)
+      val built = try (sc, build(sc)) catch {
+        case e: Throwable => sc.release(); throw e
+      }
+      steadyCache.putIfAbsent(key, built) match {
+        case Some(winner) => sc.release(); winner
         case None => built
       }
-    }
-    (e.tables(0), e.tables(1))
+    })._2.asInstanceOf[T]
   }
 
-  /** Train the bigram LM on the English slice, persist the artifact,
-    * reload it, and run `body` against the (model, vocabSize) pair —
-    * the shared train/persist/reload preamble of
+  private[graft] def cachedIvfHashInit(s: SparkSession, dir: String) =
+    steady(s, "ivf", dir) { sc =>
+      val idx = Similarity.ivfIndexHashInit(embeddings(s, dir))
+      idx.copy(cells = sc.checkpoint(idx.cells))
+    }
+  private[graft] def cachedIvfPqHashInit(s: SparkSession, dir: String) =
+    steady(s, "ivfpq", dir) { sc =>
+      val idx = Similarity.ivfPqIndexHashInit(embeddings(s, dir))
+      idx.copy(cellCodes = sc.checkpoint(idx.cellCodes))
+    }
+  private[graft] def cachedBm25IndexDir(s: SparkSession, dir: String): String =
+    steady(s, "bm25", dir) { sc =>
+      TextFeatures.writeBm25Index(TextFeatures.bm25Index(documents(s, dir)),
+        sc.dir)
+      sc.dir
+    }
+  /** The bucketed (lineitem, orders) pair of the steady co-located join. */
+  private[graft] def cachedBucketedJoinTables(
+      s: SparkSession, dir: String): (String, String) =
+    steady(s, "bucketed_join", dir) { sc =>
+      (sc.bucketed("graft_bjs_l", lineitem(s, dir)
+        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
+        "l_orderkey"),
+      sc.bucketed("graft_bjs_o", Sources.parquetTable(s, dir, "orders")
+        .select("o_orderkey", "o_orderpriority"), "o_orderkey"))
+    }
+
+  /** Train the bigram LM on the English slice, persist it under the
+    * scope's dir and reload it: the (model, vocabSize) pair shared by
     * text_perplexity_persisted and its streaming leg (one copy, so the
-    * vocab tokenizer and artifact layout can never desynchronize
-    * between the two rows that share an oracle). */
-  private[graft] def withReloadedLm(s: SparkSession, dir: String)(
-      body: (DataFrame, Long) => DataFrame): DataFrame = {
-    val train = documents(s, dir).filter(col("lang") === "en")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lm")
-    try {
-      val model = LanguageModel.bigramModel(train)
-      val v = train
-        .select(explode(regexp_extract_all(lower(col("text")),
-          lit("[\\p{L}]+"), lit(0))).as("w"))
-        .agg(countDistinct(col("w"))).head().getLong(0)
-      LanguageModel.writeModel(model, v, tmp.toString)
-      val (loaded, lv) = LanguageModel.readModel(s, tmp.toString)
-      body(loaded, lv)
-    } finally deleteRecursively(tmp.toFile)
+    * vocab tokenizer and artifact layout cannot desynchronize between
+    * the two rows that share an oracle). */
+  private[graft] def reloadedLm(sc: Scratch, dir: String): (DataFrame, Long) = {
+    val train = documents(sc.session, dir).filter(col("lang") === "en")
+    val model = LanguageModel.bigramModel(train)
+    val v = train
+      .select(explode(regexp_extract_all(lower(col("text")),
+        lit("[\\p{L}]+"), lit(0))).as("w"))
+      .agg(countDistinct(col("w"))).head().getLong(0)
+    LanguageModel.writeModel(model, v, sc.dir)
+    LanguageModel.readModel(sc.session, sc.dir)
   }
 
   /** Project ML Vector columns to scalar element columns `name_0..name_{n-1}`
@@ -640,7 +605,7 @@ object SparkEntry {
     probed.crossJoin(broadcast(best)).crossJoin(broadcast(splitScore))
   }
 
-  /** State-operator metrics of the LAST [[runAvailableNow]] stream in
+  /** State-operator metrics of the LAST [[availableNow]] stream in
     * this JVM, as one JSON object — the r16 verdict item 4
     * side-channel: Bench attaches it to each stream_* row so the
     * committed artifact itself shows whether a keeper is
@@ -672,33 +637,27 @@ object SparkEntry {
       }
   }
 
-  /** Per-run scratch for the streaming harness (checkpoint + sink).
-    * r19 measured-and-rejected (guide §1 honesty): moving this scratch
-    * to RAM-backed /dev/shm — the r18 verdict's "single checkpoint FS"
-    * suspicion — changed the 15-row streaming subtotal 32.17 → 31.88 s
-    * (noise): the state-store delta/commit-log writes land in the page
-    * cache either way on this local FS, so the per-row ~1-2 s of
+  /** The streaming-oracle harness: run `stream` to completion under
+    * Trigger.AvailableNow with foreachBatch writing each micro-batch to
+    * a parquet sink under the scope's dir, and return the sink read
+    * back (lazily: the enclosing [[scratch]] materializes it).
+    * `tagBatchId` appends the micro-batch id column the CDC snapshot
+    * row resolves last-writer-wins with.
+    * r19 measured-and-rejected: moving the sink and checkpoint to
+    * RAM-backed /dev/shm changed the 15-row streaming subtotal
+    * 32.17 → 31.88 s (noise): the state-store delta/commit-log writes
+    * land in the page cache either way, so the per-row ~1-2 s of
     * streaming machinery is query start/stop + per-store commit CPU,
-    * not disk latency. Kept on the default tmpdir. */
-  private[graft] def streamScratchDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream")
-
-  /** The shared streaming-oracle harness: run `stream` to completion
-    * under Trigger.AvailableNow with foreachBatch materializing each
-    * micro-batch to a temp parquet sink, read the sink back through
-    * `readBack`, and LOCALCHECKPOINT before the finally-block deletes
-    * the temp dir (the returned frame must not reference the deleted
-    * sink lazily — load-bearing, stated once here instead of five
-    * times). `tagBatchId` appends the micro-batch id column the CDC
-    * snapshot row resolves last-writer-wins with. */
-  private[graft] def runAvailableNow(
-      s: SparkSession,
+    * not disk latency. */
+  private[graft] def availableNow(
+      sc: Scratch,
       stream: DataFrame,
       outputMode: String,
       sinkWriteMode: String,
-      tagBatchId: Boolean = false)(
-      readBack: DataFrame => DataFrame): DataFrame = {
-    val tmp = streamScratchDir()
+      tagBatchId: Boolean = false): DataFrame = {
+    val s = sc.session
+    // one subdir per stream: a scope may run several
+    val tmp = s"${sc.dir}/stream_${java.util.UUID.randomUUID}"
     // Round 13 (r12 verdict item 7): a stateful streaming query runs
     // ONE state store per shuffle partition, and every micro-batch
     // commits a delta file per store — at the fixture volumes the 32
@@ -715,8 +674,8 @@ object SparkEntry {
     // 21.2 s (state update work loses more parallelism than commit
     // count saves) — 8 stays the local sweet spot.
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    val sink = s"$tmp/out"
     try {
-      val sink = s"$tmp/out"
       val writeBatch = (batch: DataFrame, bid: Long) => {
         val b = if (tagBatchId) batch.withColumn("batch_id", lit(bid))
                 else batch
@@ -740,13 +699,21 @@ object SparkEntry {
         .start()
       q.awaitTermination()
       recordStreamMetrics(q)
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      readBack(s.read.parquet(sink)).localCheckpoint(true)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(tmp.toFile)
-    }
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    s.read.parquet(sink)
   }
+
+  /** A stream row's whole scope: [[availableNow]], then `readBack` over
+    * the sink, materialized before the scope is released. */
+  private[graft] def runAvailableNow(
+      s: SparkSession,
+      stream: DataFrame,
+      outputMode: String,
+      sinkWriteMode: String,
+      tagBatchId: Boolean = false)(
+      readBack: DataFrame => DataFrame): DataFrame =
+    scratch(s)(sc => readBack(
+      availableNow(sc, stream, outputMode, sinkWriteMode, tagBatchId)))
 
   /** One entry per implemented operator from SURVEY.md §2 + §7 —
     * assembled from the per-family EntryQueries* slices (r16 verdict

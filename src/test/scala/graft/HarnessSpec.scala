@@ -3,11 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, udf}
 
-/** The tool mains' shared JSON and query-selection code
-  * ([[BenchHarness]], [[Verify.oracleJson]]); no session needed. */
-class HarnessSpec extends AnyFunSuite {
+/** The tool mains' shared JSON, query-selection and timing code
+  * ([[BenchHarness]], [[Verify.oracleJson]]); only the timing case
+  * starts the session. */
+class HarnessSpec extends SparkSpec {
   private def artifact(name: String): String =
     Files.readString(Paths.get(name))
 
@@ -58,5 +59,17 @@ class HarnessSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       BenchHarness.queryNames(Seq("dedup_exact", "no_such_query")))
     assert(e.getMessage.contains("no_such_query"))
+  }
+
+  test("timedRun computes every output column: a throwing column fails") {
+    // under count() the optimizer pruned the column and the run passed
+    val boom = udf((x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom") else x)
+    val (_, failed) = BenchHarness.timedRun(spark, sf0001, "boom",
+      (s, _) => s.range(10).withColumn("b", boom(col("id"))))
+    assert(failed.isEmpty)
+    val (_, ok) = BenchHarness.timedRun(spark, sf0001, "ok",
+      (s, _) => s.range(10).withColumn("b", col("id") + 1))
+    assert(ok.contains(10L))
   }
 }
