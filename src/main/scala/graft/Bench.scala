@@ -48,33 +48,32 @@ object Bench {
     case class QueryResult(name: String, sec: Double, ok: Boolean,
       runs: Seq[Double], outRows: Option[Long], streamState: Option[JObject])
     def obj(fs: Seq[(String, JValue)]): JObject = JObject(fs.toList)
-    val results = names.map { name =>
-      val nRuns = if (baselineSet(name)) 3 else 2
-      val runs = (1 to nRuns).map(_ =>
+    // r16 verdict item 4: the state-operator metrics of the last stream
+    // of the query's last run ride into the artifact — state rows vs
+    // distinct docs and commit/update time vs wall time,
+    // machine-checkable. Only the numbers are kept: a record's SQL
+    // executions would pin their shuffle files for the whole bench.
+    def timed(name: String, nRuns: Int): QueryResult = {
+      val rs = (1 to nRuns).map(_ =>
         timedRun(spark, sfDir, name, SparkEntry.queries(name)))
-      // r16 verdict item 4: the state-operator metrics of the query's
-      // last stream run ride into the artifact — state rows vs distinct
-      // docs and commit/update time vs wall time, machine-checkable
-      val streamState =
-        if (name.startsWith("stream_")) SparkEntry.lastStreamMetrics
-        else None
-      QueryResult(name, runs.map(_._1).min, runs.forall(_._2.isDefined),
-        runs.map(_._1), runs.flatMap(_._2).lastOption, streamState)
+      QueryResult(name, rs.map(_.sec).min, rs.forall(_.result.isSuccess),
+        rs.map(_.sec), rs.flatMap(_.result.toOption).lastOption,
+        rs.last.streams.lastOption)
     }
+    val results = names.map(n => timed(n, if (baselineSet(n)) 3 else 2))
     val qs = obj(results.map(r =>
       r.name -> (if (r.ok) r4(r.sec) else JInt(-1))))
     val runsJson = obj(results.map(r =>
       r.name -> JArray(r.runs.map(r4).toList)))
     // Per-query output row counts (r16 verdict item 2): the observed
     // count of the last successful run. Failed queries are omitted.
-    val outRowsJson = obj(results.collect {
-      case r if r.ok && r.outRows.isDefined => r.name -> JInt(r.outRows.get) })
+    val outRowsJson = obj(results.filter(_.ok)
+      .flatMap(r => r.outRows.map(n => r.name -> JInt(n))))
     // State-operator metrics per stream_* row (r16 verdict item 4);
     // gated on ok like out_rows — a query whose stream completed but
     // whose read-back failed must not ship metrics next to passing rows
-    val streamStateJson = obj(results.collect {
-      case r if r.ok && r.streamState.isDefined =>
-        r.name -> r.streamState.get })
+    val streamStateJson = obj(results.filter(_.ok)
+      .flatMap(r => r.streamState.map(r.name -> _)))
     val failed =
       JArray(results.collect { case r if !r.ok => JString(r.name) }.toList)
     val total = results.collect { case r if r.ok => r.sec }.sum
@@ -210,9 +209,8 @@ object Bench {
     // failure sentinel the queries map uses
     val soloRuns: Seq[(String, Double)] = drifted.take(soloCap).map {
       case (n, _) =>
-        val rs = (1 to 2).map(_ =>
-          timedRun(spark, sfDir, n, SparkEntry.queries(n)))
-        n -> (if (rs.forall(_._2.isDefined)) rs.map(_._1).min else -1.0)
+        val r = timed(n, 2)
+        n -> (if (r.ok) r.sec else -1.0)
     }
     val driftJson = priorUsable.fold[JValue](JNull) { f =>
       obj(Seq("vs" -> JString(f.getName),

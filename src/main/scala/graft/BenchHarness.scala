@@ -6,11 +6,11 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods.parseOpt
 
 /** What every tool main ([[Bench]], [[Verify]], [[PlanDump]],
-  * [[StageProfile]], [[StateProbe]]) and the test session share: one
-  * session config, one warm-up and one timed run. There is one
-  * definition of each, so a dumped plan, a stage profile and a probe
-  * describe the session [[Bench]] timed, and the committed BENCH_*
-  * artifacts stay comparable (a protocol change lands in all or none).
+  * [[StageProfile]]) and the test session share: one session config,
+  * one warm-up and one timed run. There is one definition of each, so a
+  * dumped plan and a stage profile describe the session [[Bench]]
+  * timed, and the committed BENCH_* artifacts stay comparable (a
+  * protocol change lands in all or none).
   * The one knob is `SPARK_GRAFT_CPUS`; any other Spark conf is passed
   * as a `-Dspark.*` system property, which the session's `SparkConf`
   * loads. */
@@ -131,35 +131,28 @@ private[graft] object BenchHarness {
       case _ => Map.empty
     }
 
-  /** One timed execution: (seconds, Some(outputRowCount) |
-    * None-on-failure). The frame is written to the `noop` sink, so
-    * every output column is computed (a `count()` let the optimizer
-    * prune a plan down to its scan), and the row count comes from a
-    * `Dataset.observe` in the same pass. Recording it (r16 verdict
-    * item 2) lets any later round compute sec/output-row and separate
-    * "query got slower" from "fixture emits more rows" without
+  /** One timed execution, as its [[QueryRun]] record: the result is
+    * the output row count, or the failure. The frame is written to the
+    * `noop` sink, so every output column is computed (a `count()` let
+    * the optimizer prune a plan down to its scan), and the row count
+    * comes from a `Dataset.observe` in the same pass. Recording it (r16
+    * verdict item 2) lets any later round compute sec/output-row and
+    * separate "query got slower" from "fixture emits more rows" without
     * trusting hand-written PLANS.md tables. */
   def timedRun(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => DataFrame): (Double, Option[Long]) = {
+      fn: (SparkSession, String) => DataFrame): QueryRun[Long] = {
     // per-query isolation: cached fold/CV blocks from one query must
     // not occupy (or re-register, cf. the r4 "block already exists"
     // churn) block-manager state while a later query is timed
     spark.catalog.clearCache()
-    // ... and stale stream metrics must not attribute to a later
-    // stream query whose own run failed before reaching the sink
-    SparkEntry.lastStreamMetrics = None
-    val t0 = System.nanoTime()
-    val cnt = try {
+    val run = QueryRun(spark) {
       val rows = org.apache.spark.sql.Observation(s"bench_$name")
       fn(spark, sfDir).observe(rows, count(lit(1)).as("n"))
         .write.format("noop").mode("overwrite").save()
-      Some(rows.get("n").asInstanceOf[Long])
-    } catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        None
+      rows.get("n").asInstanceOf[Long]
     }
-    ((System.nanoTime() - t0) / 1e9, cnt)
+    run.result.failed.foreach(e => System.err.println(
+      s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}"))
+    run
   }
 }

@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.execution.{CommandResultExec, ExplainMode,
   ExplainUtils, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Measurement tool (optimization guide §1.2 / §7.2): write
   * `explain("formatted")` of registered queries to files — the
@@ -28,9 +23,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Building a frame may itself run SQL jobs: a quantile or bounds
   * `collect`/`head`, a count, an eager `localCheckpoint`, a table
-  * write. A `QueryExecutionListener` is registered while the row is
-  * built, and after the returned frame's plan each captured job's
-  * formatted plan follows under a `-- build-time job <i>` header. Each
+  * write. The row is built inside a [[QueryRun]], and after the
+  * returned frame's plan each SQL execution of that record follows,
+  * formatted, under a `-- build-time job <i>` header. Each
   * job is dumped in its initial (pre-AQE) form: the AQE-final form
   * picks build sides and numbers codegen stages by which query stage
   * finished first. The jobs are
@@ -57,32 +52,14 @@ object PlanDump {
       val out = new java.io.File(outDir, s"${n}_$suffix.txt")
       try {
         spark.catalog.clearCache()
-        val built = new ConcurrentLinkedQueue[QueryExecution]
-        val listener = new QueryExecutionListener {
-          override def onSuccess(f: String, qe: QueryExecution,
-              ns: Long): Unit = built.add(qe)
-          override def onFailure(f: String, qe: QueryExecution,
-              e: Exception): Unit = built.add(qe)
-        }
-        spark.listenerManager.register(listener)
-        val qe =
-          try SparkEntry.queries(n)(spark, sfDir).queryExecution
-          finally {
-            // the listener bus delivers in order: once a marker job's
-            // callback arrives, every build job's has arrived
-            val marker = spark.range(1)
-            marker.collect()
-            val deadline = System.nanoTime() + 10000000000L
-            while (!built.remove(marker.queryExecution) &&
-                System.nanoTime() < deadline) Thread.sleep(5)
-            spark.listenerManager.unregister(listener)
-          }
+        val build =
+          QueryRun(spark)(SparkEntry.queries(n)(spark, sfDir).queryExecution)
+        val qe = build.result.get
         // run THIS QueryExecution via its RDD: count()/write each build
         // a separate plan and leave this one's AdaptiveSparkPlan unrun
         if (finalPlan) qe.toRdd.foreachPartition(_ => ())
-        val jobs = built.asScala.toSeq.map(initialForm)
-        val plan = qe.explainString(formatted) +
-          jobs.sortBy(j => volatile.foldLeft(j)(_.replaceAll(_, ""))).zipWithIndex
+        val plan = qe.explainString(formatted) + build.sql.map(initialForm)
+          .sortBy(j => volatile.foldLeft(j)(_.replaceAll(_, ""))).zipWithIndex
             .map { case (j, i) => s"\n-- build-time job $i\n$j" }.mkString
         val header = s"-- query: $n\n-- sfDir: $sfDir  cpus: " +
           s"${spark.sparkContext.defaultParallelism}\n" +
@@ -90,8 +67,7 @@ object PlanDump {
             "-- NOTE: stream row; this is the plan of the post-run " +
               "sink read-back, the batch plan runs inside the stream\n"
           else "")
-        java.nio.file.Files.write(out.toPath,
-          (header + plan).getBytes("UTF-8"))
+        java.nio.file.Files.writeString(out.toPath, header + plan)
         println(s"[plandump] wrote ${out.getPath}")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")

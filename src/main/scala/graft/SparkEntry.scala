@@ -8,7 +8,6 @@ import graft.llm._
 import graft.operators.{Events, Profile, RangeJoin, Relational, Sketches, Skew}
 import graft.sources.Sources
 import graft.streaming.StreamOps
-import org.json4s.{JInt, JObject}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -605,38 +604,6 @@ object SparkEntry {
     probed.crossJoin(broadcast(best)).crossJoin(broadcast(splitScore))
   }
 
-  /** State-operator metrics of the LAST [[availableNow]] stream in
-    * this JVM, as one JSON object — the r16 verdict item 4
-    * side-channel: Bench attaches it to each stream_* row so the
-    * committed artifact itself shows whether a keeper is
-    * state-store-bound (state rows ≈ distinct docs, commit + update
-    * time vs wall time) instead of that claim living in prose.
-    * A registered query that runs several streams (e.g. the CDC
-    * snapshot's two-phase ingest) reports its LAST stream's run.
-    * None when no stream has run, or the last run had no progress. */
-  @volatile private[graft] var lastStreamMetrics: Option[JObject] = None
-  private[graft] def recordStreamMetrics(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val ps = q.recentProgress.toSeq
-    lastStreamMetrics =
-      if (ps.isEmpty) None
-      else {
-        val ops = ps.flatMap(_.stateOperators.toSeq)
-        val base = List("batches" -> JInt(ps.size),
-          "batch_duration_ms" -> JInt(ps.map(_.batchDuration).sum))
-        Some(JObject(if (ops.isEmpty) base else base ++ List(
-          // rows-total from the FINAL batch (it is a gauge, not a
-          // counter); the time fields are per-batch costs, summed
-          "state_rows_total" ->
-            JInt(ps.last.stateOperators.map(_.numRowsTotal).sum),
-          "state_rows_updated" -> JInt(ops.map(_.numRowsUpdated).sum),
-          "commit_ms" -> JInt(ops.map(_.commitTimeMs).sum),
-          "updates_ms" -> JInt(ops.map(_.allUpdatesTimeMs).sum),
-          "removals_ms" -> JInt(ops.map(_.allRemovalsTimeMs).sum),
-          "state_memory_bytes" -> JInt(ops.map(_.memoryUsedBytes).max))))
-      }
-  }
-
   /** The streaming-oracle harness: run `stream` to completion under
     * Trigger.AvailableNow with foreachBatch writing each micro-batch to
     * a parquet sink under the scope's dir, and return the sink read
@@ -691,14 +658,13 @@ object SparkEntry {
         // same single output file per batch.
         b.repartition(1).write.mode(sinkWriteMode).parquet(sink)
       }
-      val q = stream.writeStream
+      stream.writeStream
         .outputMode(outputMode)
         .option("checkpointLocation", s"$tmp/chk")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch(writeBatch)
         .start()
-      q.awaitTermination()
-      recordStreamMetrics(q)
+        .awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     s.read.parquet(sink)
   }

@@ -65,11 +65,47 @@ class HarnessSpec extends SparkSpec {
     // under count() the optimizer pruned the column and the run passed
     val boom = udf((x: Long) =>
       if (x >= 0) throw new IllegalStateException("boom") else x)
-    val (_, failed) = BenchHarness.timedRun(spark, sf0001, "boom",
-      (s, _) => s.range(10).withColumn("b", boom(col("id"))))
+    val failed = BenchHarness.timedRun(spark, sf0001, "boom",
+      (s, _) => s.range(10).withColumn("b", boom(col("id")))).result.toOption
     assert(failed.isEmpty)
-    val (_, ok) = BenchHarness.timedRun(spark, sf0001, "ok",
-      (s, _) => s.range(10).withColumn("b", col("id") + 1))
+    val ok = BenchHarness.timedRun(spark, sf0001, "ok",
+      (s, _) => s.range(10).withColumn("b", col("id") + 1)).result.toOption
     assert(ok.contains(10L))
+  }
+
+  test("query run: robust_scaling's record holds its build-time quantile " +
+      "collect and its jobs") {
+    val build = QueryRun(spark)(
+      SparkEntry.queries("robust_scaling")(spark, sf0001))
+    assert(build.result.isSuccess)
+    assert(build.sql.nonEmpty, "no SQL execution ran while the frame was built")
+    assert(build.jobs.nonEmpty)
+    val run = BenchHarness.timedRun(spark, sf0001, "robust_scaling",
+      SparkEntry.queries("robust_scaling"))
+    // the build-time collect plus the timed write itself
+    assert(run.sql.size == build.sql.size + 1, run.sql)
+    assert(run.stages.nonEmpty)
+  }
+
+  test("query run: two consecutive timed runs share no job id") {
+    val runs = Seq("dedup_exact", "robust_scaling").map(n =>
+      BenchHarness.timedRun(spark, sf0001, n, SparkEntry.queries(n)))
+    val Seq(a, b) = runs.map(_.jobs.map(_.id).toSet)
+    assert(a.nonEmpty && b.nonEmpty)
+    assert((a & b).isEmpty, s"shared job ids ${a & b}")
+    // a job counts once, in the run whose window it started in
+    assert(runs.forall(r => r.jobs.map(_.id).distinct.size == r.jobs.size))
+  }
+
+  test("query run: a throwing row right after a stream row has no stream " +
+      "summary") {
+    val stream = BenchHarness.timedRun(spark, sf0001, "stream_dedup_near",
+      SparkEntry.queries("stream_dedup_near"))
+    assert(stream.result.isSuccess)
+    assert(stream.streams.nonEmpty)
+    val thrown = BenchHarness.timedRun(spark, sf0001, "throws",
+      (_, _) => throw new IllegalStateException("before any stream"))
+    assert(thrown.result.isFailure)
+    assert(thrown.streams.isEmpty, thrown.streams)
   }
 }

@@ -231,6 +231,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(shuffles(p) == 1, s"expected only the bin_id aggregate:\n${p.take(800)}")
   }
 
+  test("llm_global_shuffle, llm_shuffle_pack: the one un-partitioned " +
+      "window runs over per-bkt subtotals (<= 65536 rows), not the corpus") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the offsets prefix sum orders 16-bit md5 buckets in one task; the
+    // rows that reach that task are the bucket aggregate's output
+    Seq("llm_global_shuffle", "llm_shuffle_pack").foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sf0001).queryExecution
+        .executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case other => other
+        }
+      val global = p.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w }
+      assert(global.size == 1, s"$q:\n$p")
+      val single = global.head.collect {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning == SinglePartition => e }
+      assert(single.size == 1, s"$q:\n$p")
+      val aggKeys = single.head.child.collect {
+        case a: HashAggregateExec => a.groupingExpressions.map(_.name) }
+      assert(aggKeys.nonEmpty && aggKeys.forall(_ == Seq("bkt")),
+        s"$q: the single-partition exchange is not above the bkt " +
+          s"aggregate ($aggKeys):\n$p")
+    }
+  }
+
   test("llm_merge_upsert: one shuffle, map-side WindowGroupLimit") {
     // MERGE as union + keyed window: the whole snapshot + updates
     // stream through ONE hash exchange on the key, and the rank-1

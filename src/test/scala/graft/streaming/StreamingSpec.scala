@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.json4s.{JInt, jvalue2monadic}
+import org.json4s.{JInt, JObject, jvalue2monadic}
 
 /** The same StreamOps code path must produce identical results whether
   * driven as a batch DataFrame or as a Structured Streaming source —
@@ -1145,10 +1145,17 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  /** A numeric field of the state metrics the last stream run recorded. */
-  private def streamMetric(k: String): Long = {
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
+  /** The state summary of the last stream a timed run of the
+    * registered query `name` started, from the run's record. */
+  private def streamState(name: String): JObject = {
+    val run = graft.BenchHarness.timedRun(spark, sf0001, name,
+      graft.SparkEntry.queries(name))
+    run.result.get
+    run.streams.lastOption.getOrElse(fail("no stream metrics recorded"))
+  }
+
+  /** A numeric field of a stream state summary. */
+  private def streamMetric(js: JObject, k: String): Long = {
     js \ k match {
       case JInt(v) => v.toLong
       case _ => fail(s"field $k missing in $js")
@@ -1159,26 +1166,25 @@ class StreamingSpec extends SparkSpec {
       "side-channel: state rows bounded by bands x docs, commit/update " +
       "times recorded (r16 verdict item 4)") {
     // Runs the REGISTERED stream_dedup_near query end-to-end and reads
-    // the JSON the harness recorded from StreamingQueryProgress — the
-    // same field Bench attaches to every stream_* row. The hard
+    // the stream summary its timed run's record built from
+    // StreamingQueryProgress — the same field Bench attaches to every
+    // stream_* row. The hard
     // at-scale numbers live in the committed sf1 artifacts; this pins
     // the capture contract so the artifact can never silently go empty.
-    graft.SparkEntry.queries("stream_dedup_near")(spark, sf0001).count()
-    val js = graft.SparkEntry.lastStreamMetrics
-      .getOrElse(fail("no stream metrics recorded"))
+    val js = streamState("stream_dedup_near")
     val nDocs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id").distinct().count()
-    assert(streamMetric("batches") >= 1)
-    assert(streamMetric("batch_duration_ms") > 0)
-    val stateRows = streamMetric("state_rows_total")
+    assert(streamMetric(js, "batches") >= 1)
+    assert(streamMetric(js, "batch_duration_ms") > 0)
+    val stateRows = streamMetric(js, "state_rows_total")
     // one keeper per occupied band bucket: > 0, and never more than
     // bands (<= 64 by minhashKnobs' clamp) per distinct doc
     assert(stateRows > 0, js)
     assert(stateRows <= 64L * nDocs, js)
-    assert(streamMetric("state_rows_updated") >= stateRows, js)
-    assert(streamMetric("commit_ms") >= 0, js)
-    assert(streamMetric("updates_ms") >= 0, js)
-    assert(streamMetric("state_memory_bytes") > 0, js)
+    assert(streamMetric(js, "state_rows_updated") >= stateRows, js)
+    assert(streamMetric(js, "commit_ms") >= 0, js)
+    assert(streamMetric(js, "updates_ms") >= 0, js)
+    assert(streamMetric(js, "state_memory_bytes") > 0, js)
   }
 
   test("Hamming keeper state-growth LAW, exactly: state rows == distinct " +
@@ -1189,8 +1195,8 @@ class StreamingSpec extends SparkSpec {
     // row count must EQUAL the batch-side distinct count of exact band
     // keys. This is the "state linear in distinct fingerprints"
     // contract as an equality, not a bound.
-    graft.SparkEntry.queries("stream_phash_near")(spark, sf0001).count()
-    val stateRows = streamMetric("state_rows_total")
+    val stateRows =
+      streamMetric(streamState("stream_phash_near"), "state_rows_total")
     import org.apache.spark.sql.functions.col
     val expected = graft.llm.Multimodal.dHashStreamBanded(
         graft.llm.Multimodal.bmpDHash(
@@ -1208,8 +1214,8 @@ class StreamingSpec extends SparkSpec {
     // only read), the cosine keeper installs a keeper in EVERY bucket
     // any row lands in — so state rows must equal the batch-side
     // distinct band-key count of the same fixture.
-    graft.SparkEntry.queries("stream_embed_near")(spark, sf0001).count()
-    val stateRows = streamMetric("state_rows_total")
+    val stateRows =
+      streamMetric(streamState("stream_embed_near"), "state_rows_total")
     import org.apache.spark.sql.functions._
     // the registration's fixture, batch-side: corpus + the three
     // in-flight plants, banded under the same knobs
@@ -1248,8 +1254,8 @@ class StreamingSpec extends SparkSpec {
     // banding knobs — the "state linear in distinct docs × bands"
     // scaladoc contract as a CI equality, matching the Hamming and
     // cosine keepers' law tests above.
-    graft.SparkEntry.queries("stream_dedup_near")(spark, sf0001).count()
-    val stateRows = streamMetric("state_rows_total")
+    val stateRows =
+      streamMetric(streamState("stream_dedup_near"), "state_rows_total")
     import org.apache.spark.sql.functions.col
     val expected = graft.llm.Dedup.minhashBandedShingles(
         spark.read.parquet(s"$sf0001/documents.parquet")
@@ -1269,8 +1275,8 @@ class StreamingSpec extends SparkSpec {
     // micro-batch split and the final-batch state gauge must EQUAL the
     // batch-side distinct key count — the last of the four keepers'
     // state laws as an equality (r17 verdict item 6).
-    graft.SparkEntry.queries("stream_dedup_keys")(spark, sf0001).count()
-    val stateRows = streamMetric("state_rows_total")
+    val stateRows =
+      streamMetric(streamState("stream_dedup_keys"), "state_rows_total")
     val expected = spark.read.parquet(s"$sf0001/events.parquet")
       .select("user_id", "event_type").distinct().count()
     assert(stateRows === expected,
