@@ -166,6 +166,59 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("Tokens: letters and whitespace equal both old spellings of each " +
+    "rule on the corpus and on edge strings") {
+    val s = spark
+    import s.implicits._
+    val spaces = "a\tb\nc\u000Bd\u000Ce\rf  g"
+    val accents = "caf\u00E9 na\u00EFve \u00C6R\u00D8 \u03A9\u03BC\u03AD\u03B3\u03B1"
+    val nonBmp = "\uD835\uDC00\uD835\uDC01x \uD840\uDC00z \uD83D\uDE00 \uD835\uDD38"
+    val marks = "e\u0301te\u0301 n\u0303o \u0301lead"
+    val edge = Seq[String](null, "", " \t\n\u000B\u000C\r ", " ,;!?- ",
+      "  lead, and trail!  ", spaces, accents, nonBmp, marks,
+      "abc123def 4x4 x1 99 Mixed-CASE_words")
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("text")).unionByName(edge.toDF("text"))
+    val t = col("text")
+    // the spellings the operators used before Tokens held each rule
+    val forms = docs.select(
+      Tokens.letters(t),
+      filter(split(lower(t), "[^\\p{L}]+"), w => length(w) > 0),
+      regexp_extract_all(lower(t), lit("[\\p{L}]+"), lit(0)),
+      Tokens.whitespace(t),
+      filter(split(t, "\\s+"), w => w =!= ""),
+      regexp_extract_all(t, lit("\\S+"), lit(0)),
+      Tokens.words(t),
+      filter(split(lower(t), "[^\\p{L}\\p{N}]+"), w => length(w) > 0))
+      .collect().map(r => r.toSeq.map(Option(_).map(_.asInstanceOf[
+        scala.collection.Seq[String]].toSeq)))
+    assert(forms.length > edge.length)
+    forms.foreach { case Seq(l, l1, l2, ws, ws1, ws2, w, w1) =>
+      assert(l == l1 && l == l2, (l, l1, l2))
+      assert(ws == ws1 && ws == ws2, (ws, ws1, ws2))
+      assert(w == w1, (w, w1))
+    }
+    // the edge rows exercise what they claim to
+    def byText(text: String) = forms.takeRight(edge.length)(edge.indexOf(text))
+    assert(byText(null).forall(_.isEmpty))
+    assert(byText("").forall(_.contains(Seq.empty)))
+    assert(byText(" \t\n\u000B\u000C\r ").forall(_.contains(Seq.empty)))
+    assert(byText(" ,;!?- ") == Seq.fill(3)(Some(Seq.empty)) ++
+      Seq.fill(3)(Some(Seq(",;!?-"))) ++ Seq.fill(2)(Some(Seq.empty)))
+    assert(byText("  lead, and trail!  ")(3) ==
+      Some(Seq("lead,", "and", "trail!")))
+    assert(byText(accents).head ==
+      Some(Seq("caf\u00E9", "na\u00EFve", "\u00E6r\u00F8", "\u03C9\u03BC\u03AD\u03B3\u03B1")))
+    assert(byText(spaces)(3) == Some(Seq("a", "b", "c", "d", "e", "f", "g")))
+    // non-BMP letters stay whole (surrogate pairs), an emoji separates
+    assert(byText(nonBmp).head == Some(Seq(
+      "\uD835\uDC00\uD835\uDC01x", "\uD840\uDC00z", "\uD835\uDD38")))
+    // a combining mark is not a letter: it splits the letter run
+    assert(byText(marks).head == Some(Seq("e", "te", "n", "o", "lead")))
+    assert(byText("abc123def 4x4 x1 99 Mixed-CASE_words").head ==
+      Some(Seq("abc", "def", "x", "x", "mixed", "case", "words")))
+  }
+
   test("packBins: hand-computed bin assignment; independent per group") {
     val s = spark
     import s.implicits._
