@@ -20,6 +20,18 @@ import graft.SparkEntry._
   * not change; [[SparkEntry.queries]] assembles the slices and pins
   * key-disjointness. */
 private[graft] object EntryQueriesCurate {
+  /** The decontamination rows' (train, bench) pair: every 41st doc is
+    * the benchmark, and the train side also holds a copy of each
+    * benchmark doc behind the text prefix `zz planted <what> `, id
+    * shifted by 10^6. The oracle SQL plants the same rows. */
+  private def planted(docs: DataFrame, what: String): (DataFrame, DataFrame) = {
+    val base = docs.select(col("doc_id"), col("text"))
+    val bench = base.filter(col("doc_id") % 41 === 0)
+    (base.filter(col("doc_id") % 41 =!= 0).unionByName(
+      bench.select((col("doc_id") + lit(1000000L)).as("doc_id"),
+        concat(lit(s"zz planted $what "), col("text")).as("text"))), bench)
+  }
+
   // Seq, not Map (r17 advice #5): a key accidentally registered twice
   // in ONE literal would silently last-wins inside a Map before any
   // disjointness check could see it; as a Seq the duplicate survives
@@ -154,12 +166,7 @@ private[graft] object EntryQueriesCurate {
     // flagged with shared_ngrams == its source's distinct-8-gram count;
     // every real doc must be absent. Oracle-EXACT.
     "llm_decontaminate" -> ((s, dir) => {
-      val base = documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.filter(col("doc_id") % 41 === 0)
-      val train = base.filter(col("doc_id") % 41 =!= 0).unionByName(
-        bench.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zz planted contamination prefix "), col("text"))
-            .as("text")))
+      val (train, bench) = planted(documents(s, dir), "contamination prefix")
       Curate.contamination(train, bench)
     }),
     // The keep-side anti-join twin — the artifact a pipeline actually
@@ -167,12 +174,7 @@ private[graft] object EntryQueriesCurate {
     // flipped to NOT IN. Every real doc survives, every planted copy
     // (and short-doc whole-sequence match) is dropped.
     "llm_decontaminate_kept" -> ((s, dir) => {
-      val base = documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.filter(col("doc_id") % 41 === 0)
-      val train = base.filter(col("doc_id") % 41 =!= 0).unionByName(
-        bench.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zz planted contamination prefix "), col("text"))
-            .as("text")))
+      val (train, bench) = planted(documents(s, dir), "contamination prefix")
       Curate.decontaminate(train, bench).select("doc_id")
     }),
     // NEAR-duplicate decontamination: banded-minhash candidates between
@@ -183,11 +185,7 @@ private[graft] object EntryQueriesCurate {
     // into the train side; the oracle is brute-force cross-corpus
     // Jaccard, so banding recall is under the hash too.
     "llm_decontaminate_near" -> ((s, dir) => {
-      val base = documentsSpread(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.filter(col("doc_id") % 41 === 0)
-      val train = base.filter(col("doc_id") % 41 =!= 0).unionByName(
-        bench.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zz planted near copy "), col("text")).as("text")))
+      val (train, bench) = planted(documentsSpread(s, dir), "near copy")
       Curate.decontaminateNear(train, bench).select("doc_id")
     }),
 
@@ -197,12 +195,7 @@ private[graft] object EntryQueriesCurate {
     // prefilter only changes WHERE non-matching grams die: inside the
     // scan stage instead of at the join).
     "llm_decontaminate_bloom" -> ((s, dir) => {
-      val base = documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.filter(col("doc_id") % 41 === 0)
-      val train = base.filter(col("doc_id") % 41 =!= 0).unionByName(
-        bench.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zz planted contamination prefix "), col("text"))
-            .as("text")))
+      val (train, bench) = planted(documents(s, dir), "contamination prefix")
       Curate.decontaminateBloom(train, bench).select("doc_id")
     }),
 

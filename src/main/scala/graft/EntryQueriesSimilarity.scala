@@ -253,11 +253,7 @@ private[graft] object EntryQueriesSimilarity {
     "retrieval_hybrid" -> ((s, dir) => {
       val docs = documents(s, dir)
       val emb = embeddings(s, dir)
-      val bm = TextFeatures.bm25(docs,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
+      val bm = bm25FirstFive(TextFeatures.bm25Index(docs), docs)
       val cos = Similarity.cosineTopK(emb,
         emb.filter(col("vec_id") < 5), k = 10, roundAt = 6)
         .withColumnRenamed("neighbor_id", "doc_id")

@@ -224,7 +224,7 @@ private[graft] object EntryQueriesStreaming {
       runAvailableNow(s,
         StreamOps.countMinStream(Sources.documentsStream(s, dir)),
         outputMode = "complete", sinkWriteMode = "overwrite") { sk =>
-        val exact = tokenTerms(documents(s, dir))
+        val exact = Tokens.terms(documents(s, dir), "text")
           .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
         val probes = exact.orderBy(col("n_exact").desc, col("term"))
           .limit(20)
@@ -376,11 +376,7 @@ private[graft] object EntryQueriesStreaming {
           Sources.documentsStream(s, dir).filter(col("doc_id") % 2 === 1)),
         outputMode = "append", sinkWriteMode = "append")
       val grown = TextFeatures.bm25MergePostings(base, delta)
-      TextFeatures.bm25Probe(grown,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
+      bm25FirstFive(grown, docs)
     }),
   )
 }

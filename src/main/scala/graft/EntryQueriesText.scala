@@ -143,7 +143,7 @@ private[graft] object EntryQueriesText {
 
     // Sliding-window chunking for context packing: 32-token windows,
     // stride 24 (8-token overlap). chunk_idx = start/stride in both
-    // engines; ws tokenization matches text_token_stats.
+    // engines; Tokens.whitespace tokens, as in text_token_stats.
     "text_chunk" -> ((s, dir) =>
       TextAnalysis.chunk(documents(s, dir).select("doc_id", "text"),
         chunkTokens = 32, stride = 24)
@@ -163,11 +163,7 @@ private[graft] object EntryQueriesText {
     // the oracle.
     "text_bm25" -> ((s, dir) => {
       val docs = documents(s, dir)
-      TextFeatures.bm25(docs,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
+      bm25FirstFive(TextFeatures.bm25Index(docs), docs)
     }),
     // Build → persist postings → reload → probe: the retrieval
     // deployment shape (tokenize the corpus once per ingest, not once
@@ -182,12 +178,7 @@ private[graft] object EntryQueriesText {
     "text_bm25_persisted" -> ((s, dir) => {
       val docs = documents(s, dir)
       val loaded = TextFeatures.readBm25Index(s, cachedBm25IndexDir(s, dir))
-      TextFeatures.bm25Probe(loaded,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
-        .localCheckpoint(true)
+      bm25FirstFive(loaded, docs).localCheckpoint(true)
     }),
     // The build/write half under its own named timer (round 11): fresh
     // postings build + write to a per-invocation temp dir, summarized by
@@ -226,22 +217,14 @@ private[graft] object EntryQueriesText {
       val pruned = TextFeatures.bm25Delete(
         TextFeatures.bm25Index(docs),
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")))
-      TextFeatures.bm25Probe(pruned,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
+      bm25FirstFive(pruned, docs)
     }),
     "text_bm25_append" -> ((s, dir) => {
       val docs = documents(s, dir)
       val base = TextFeatures.bm25Index(docs.filter(col("doc_id") % 2 === 0))
       val grown = TextFeatures.bm25Append(base,
         docs.filter(col("doc_id") % 2 === 1))
-      TextFeatures.bm25Probe(grown,
-        docs.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("query_id"),
-            col("text").as("query_text")),
-        topK = 10, excludeSelf = true)
+      bm25FirstFive(grown, docs)
     }),
 
     // Sequence packing: concatenate-and-split bin assignment — each
@@ -288,7 +271,7 @@ private[graft] object EntryQueriesText {
     // docs/source at sf0.01 keeps the sample a real subset.
     "text_sample_quantiles" -> ((s, dir) =>
       Sketches.sampleQuantiles(documents(s, dir), "source", "doc_id",
-        size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))),
+        size(Tokens.whitespace(col("text"))),
         m = 16, probs = Seq(0.5, 0.9))),
 
     // The quantile-artifact LIFECYCLE (round 15): two batch halves
@@ -302,7 +285,7 @@ private[graft] object EntryQueriesText {
     // row).
     "text_sample_quantiles_merged" -> ((s, dir) => scratch(s) { sc =>
       val docs = documents(s, dir)
-      val vcol = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
+      val vcol = size(Tokens.whitespace(col("text")))
       val h1 = Sketches.sampleSketch(
         docs.filter(col("doc_id") % 2 === 0), "source", "doc_id",
         vcol, m = 16)
@@ -460,7 +443,7 @@ private[graft] object EntryQueriesText {
     // of re-exploding the corpus; the term-count subtree canonicalizes
     // once and the scan + regex split run a single time per execution.
     "text_count_min" -> ((s, dir) => {
-      val exact = tokenTerms(documents(s, dir))
+      val exact = Tokens.terms(documents(s, dir), "text")
         .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
       val probes = exact.orderBy(col("n_exact").desc, col("term")).limit(20)
       val sk = graft.operators.CountMin.sketchWeighted(
@@ -486,7 +469,7 @@ private[graft] object EntryQueriesText {
     // third corpus pass exists anywhere in the plan.
     "text_count_min_merged" -> ((s, dir) => scratch(s) { sc =>
       val docs = documents(s, dir)
-      def counts(d: DataFrame) = tokenTerms(d)
+      def counts(d: DataFrame) = Tokens.terms(d, "text")
         .groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
       val histCounts = counts(docs.filter(col("doc_id") % 2 === 0))
       val freshCounts = counts(docs.filter(col("doc_id") % 2 === 1))

@@ -68,14 +68,15 @@ object SparkEntry {
   private[graft] def documentsSpread(s: SparkSession, dir: String): DataFrame =
     spreadScan(documents(s, dir))
 
-  /** One (term) row per token of the corpus — the repo-standard
-    * tokenization (lowercase, split on non-alphanumeric, drop
-    * empties; the text_tfidf_exact recipe) shared by the Count-Min
-    * rows and their oracles. */
-  private[graft] def tokenTerms(docs: DataFrame): DataFrame =
-    docs.select(explode(
-      filter(split(lower(col("text")), "[^\\p{L}\\p{N}]+"),
-        w => length(w) > 0)).as("term"))
+  /** BM25 more-like-this probe of the text_bm25 family: the first 5
+    * documents act as queries over `index`, top 10 per query,
+    * self-matches excluded pre-rank. */
+  private[graft] def bm25FirstFive(
+      index: TextFeatures.Bm25Index, docs: DataFrame): DataFrame =
+    TextFeatures.bm25Probe(index,
+      docs.filter(col("doc_id") < 5)
+        .select(col("doc_id").as("query_id"), col("text").as("query_text")),
+      topK = 10, excludeSelf = true)
 
   /** documents plus three in-flight planted PII rows (the corpus has
     * none naturally — same planting trick as llm_decontaminate). The
@@ -509,9 +510,7 @@ object SparkEntry {
   private[graft] def reloadedLm(sc: Scratch, dir: String): (DataFrame, Long) = {
     val train = documents(sc.session, dir).filter(col("lang") === "en")
     val model = LanguageModel.bigramModel(train)
-    val v = train
-      .select(explode(regexp_extract_all(lower(col("text")),
-        lit("[\\p{L}]+"), lit(0))).as("w"))
+    val v = train.select(explode(Tokens.letters(col("text"))).as("w"))
       .agg(countDistinct(col("w"))).head().getLong(0)
     LanguageModel.writeModel(model, v, sc.dir)
     LanguageModel.readModel(sc.session, sc.dir)

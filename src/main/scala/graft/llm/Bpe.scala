@@ -38,11 +38,10 @@ import org.apache.spark.sql.functions._
 object Bpe {
 
   /** Corpus word table, bounded: top `topWords` by (count DESC, word
-    * ASC). Words are the repo-standard `[\p{L}]+` lowercase tokens. */
+    * ASC). Words are [[Tokens.letters]]. */
   def wordTable(df: DataFrame, topWords: Int,
       textCol: String = "text"): DataFrame =
-    df.select(explode(regexp_extract_all(lower(col(textCol)),
-        lit("[\\p{L}]+"), lit(0))).as("word"))
+    df.select(explode(Tokens.letters(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word")) // TakeOrdered, no sort
       .limit(topWords)
@@ -146,9 +145,7 @@ object Bpe {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val vocab = segmentation(finalSyms)
       .select(col("word"), size(split(col("seg"), " ")).as("n_syms"))
-    df.select(col(idCol),
-        explode(regexp_extract_all(lower(col(textCol)),
-          lit("[\\p{L}]+"), lit(0))).as("word"))
+    df.select(col(idCol), explode(Tokens.letters(col(textCol))).as("word"))
       .join(broadcast(vocab), Seq("word"), "left")
       .groupBy(col(idCol))
       .agg(sum(coalesce(col("n_syms"), length(col("word"))))

@@ -18,6 +18,46 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
+  /** The 16-bit md5 bucket of a row id as four lowercase hex chars —
+    * fixed-width, so lexicographic compare IS numeric compare. */
+  private def md5Bucket(id: Column): Column =
+    substring(md5(id.cast("string")), 1, 4)
+
+  /** The numeric 16-bit bucket of an md5 `shuffle_key`. */
+  private def keyBucket(shuffleKey: Column): Column =
+    conv(substring(shuffleKey, 1, 4), 16, 10).cast("long")
+
+  /** Running sum of `n_tokens` in md5 order within `parts`, without a
+    * single-partition window ([[globalShuffleOrder]]'s two-phase
+    * recipe): per-(parts, bkt) subtotals — at most 65536 per `parts`
+    * group, broadcast — cumulate into bucket offsets, and each row adds
+    * its within-bucket running sum. `keyed` carries `shuffle_key`,
+    * `bkt` and `n_tokens`; the sum lands in `outCol`, counting the
+    * current row only when `inclusive`. One corpus shuffle on
+    * (parts, bkt). */
+  private def bucketedTokenSum(
+      keyed: DataFrame,
+      parts: Seq[String],
+      idCol: String,
+      inclusive: Boolean,
+      outCol: String): DataFrame = {
+    val keys = parts :+ "bkt"
+    val offsets = keyed.groupBy(keys.map(col): _*)
+      .agg(sum("n_tokens").as("bucket_toks"))
+      .withColumn("offset",
+        coalesce(sum("bucket_toks").over(
+          Window.partitionBy(parts.map(col): _*).orderBy("bkt").rowsBetween(
+            Window.unboundedPreceding, -1)), lit(0L)))
+      .select((keys :+ "offset").map(col): _*)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("shuffle_key"), col(idCol))
+      .rowsBetween(Window.unboundedPreceding, if (inclusive) 0 else -1)
+    val within = sum(col("n_tokens")).over(w)
+    keyed.join(broadcast(offsets), keys)
+      .withColumn(outCol, col("offset") +
+        (if (inclusive) within else coalesce(within, lit(0L))))
+  }
+
   def apply(
       docs: DataFrame,
       minQuality: Double = 0.1,
@@ -131,9 +171,7 @@ object Curate {
     }
     val thrMap = map(
       thresholds.toSeq.flatMap { case (s, t) => Seq(lit(s), lit(t)) }: _*)
-    docs.filter(
-      substring(md5(col(idCol).cast("string")), 1, 4) <
-        element_at(thrMap, col(sourceCol)))
+    docs.filter(md5Bucket(col(idCol)) < element_at(thrMap, col(sourceCol)))
   }
 
   /** Repeat-factor UP-sampling — the other half of corpus mixing:
@@ -196,8 +234,7 @@ object Curate {
       weightCol: String = "n_chars",
       idCol: String = "doc_id"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val bucket = conv(substring(md5(col(idCol).cast("string")), 1, 4),
-      16, 10).cast("double")
+    val bucket = conv(md5Bucket(col(idCol)), 16, 10).cast("double")
     val u = (bucket + lit(0.5)) / lit(65536.0)
     val w = greatest(col(weightCol).cast("double"), lit(1e-9))
     docs
@@ -283,7 +320,7 @@ object Curate {
     }
     val thresholds = cumBuckets.init
       .map(c => f"${math.min(65535L, c).toInt}%04x")
-    val bucket = substring(md5(col(idCol).cast("string")), 1, 4)
+    val bucket = md5Bucket(col(idCol))
     val label = thresholds.zip(weights.map(_._1)).foldRight(
       lit(weights.last._1)) { case ((thr, name), els) =>
       when(bucket < lit(thr), lit(name)).otherwise(els)
@@ -550,8 +587,7 @@ object Curate {
     val w = Window.partitionBy(col(sourceCol))
       .orderBy(col("sample_key"), col(idCol))
     docs
-      .withColumn("sample_key",
-        substring(md5(col(idCol).cast("string")), 1, 4))
+      .withColumn("sample_key", md5Bucket(col(idCol)))
       .withColumn("sample_rank", row_number().over(w))
       .filter(col("sample_rank") <= k)
       .select(col(idCol), col(sourceCol), col("sample_key"),
@@ -660,8 +696,7 @@ object Curate {
     val key = md5(col(idCol).cast("string"))
     val withKey = docs.select(col(idCol))
       .withColumn("shuffle_key", key)
-      .withColumn("bkt", conv(substring(col("shuffle_key"), 1, 4), 16, 10)
-        .cast("long"))
+      .withColumn("bkt", keyBucket(col("shuffle_key")))
     val offsets = withKey.groupBy("bkt").count()
       .withColumn("offset",
         coalesce(sum("count").over(
@@ -685,12 +720,10 @@ object Curate {
     * where `tokens_before` is the exact global running token total in
     * shuffle order.
     *
-    * The global prefix sum reuses [[globalShuffleOrder]]'s two-phase
-    * 16-bit-bucket recipe — per-bucket token SUBTOTALS (≤ 65536 rows,
-    * driver-scale by construction) cumulate into bucket offsets, each
-    * row adds its within-bucket running sum — so the naive
-    * formulation's single-partition global-order window never appears;
-    * one corpus shuffle on the bucket, 65536-way-parallel windows.
+    * The global prefix sum is [[bucketedTokenSum]] over no partition
+    * column, so the naive formulation's single-partition global-order
+    * window never appears; one corpus shuffle on the bucket,
+    * 65536-way-parallel windows.
     * Equals `SUM(n_tokens) OVER (ORDER BY md5(id), id ROWS UNBOUNDED
     * PRECEDING TO 1 PRECEDING)` exactly — the oracle. */
   def shufflePackBins(
@@ -701,24 +734,10 @@ object Curate {
     require(binTokens > 0, s"binTokens must be positive: $binTokens")
     val withKey = docs.select(col(idCol), col(textCol))
       .withColumn("shuffle_key", md5(col(idCol).cast("string")))
-      .withColumn("bkt", conv(substring(col("shuffle_key"), 1, 4), 16, 10)
-        .cast("long"))
-      .withColumn("n_tokens",
-        size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0))))
+      .withColumn("bkt", keyBucket(col("shuffle_key")))
+      .withColumn("n_tokens", size(Tokens.whitespace(col(textCol))))
       .drop(textCol)
-    val offsets = withKey.groupBy("bkt")
-      .agg(sum("n_tokens").as("bucket_toks"))
-      .withColumn("offset",
-        coalesce(sum("bucket_toks").over(
-          Window.orderBy("bkt").rowsBetween(
-            Window.unboundedPreceding, -1)), lit(0L)))
-      .select("bkt", "offset")
-    val w = Window.partitionBy("bkt")
-      .orderBy(col("shuffle_key"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    withKey.join(broadcast(offsets), "bkt")
-      .withColumn("tokens_before",
-        col("offset") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+    bucketedTokenSum(withKey, Nil, idCol, inclusive = false, "tokens_before")
       .withColumn("bin_id", (col("tokens_before") / binTokens).cast("long"))
       .withColumn("bin_offset", col("tokens_before") % binTokens)
       .select(col(idCol), col("shuffle_key"), col("n_tokens"),
@@ -742,14 +761,11 @@ object Curate {
     * tokens_through) where `tokens_through` is the source's inclusive
     * running total at this doc (≤ the source budget by construction).
     *
-    * Scale shape: the per-source running sum reuses
-    * [[globalShuffleOrder]]'s two-phase 16-bit-bucket recipe — without
-    * it the window is one partition per SOURCE, a cliff when a source
-    * is half the corpus. Per-(source, bucket) subtotals (≤ 65536 ×
-    * sources rows, broadcast) cumulate into offsets; each row adds its
-    * within-bucket inclusive running sum. One corpus shuffle on
-    * (source, bucket); the budget filter is a literal CASE fused into
-    * the final projection. Equals `SUM(n_tokens) OVER (PARTITION BY
+    * Scale shape: the per-source running sum is [[bucketedTokenSum]]
+    * partitioned by source — a plain window would be one partition per
+    * SOURCE, a cliff when a source is half the corpus. One corpus
+    * shuffle on (source, bucket); the budget filter is a literal CASE
+    * fused into the final projection. Equals `SUM(n_tokens) OVER (PARTITION BY
     * source ORDER BY md5(id), id)` exactly — the oracle. */
   def tokenBudgetMix(
       docs: DataFrame,
@@ -767,24 +783,10 @@ object Curate {
       .withColumn("__budget", budgetCol)
       .filter(col("__budget").isNotNull)
       .withColumn("shuffle_key", md5(col(idCol).cast("string")))
-      .withColumn("bkt",
-        conv(substring(col("shuffle_key"), 1, 4), 16, 10).cast("long"))
-      .withColumn("n_tokens",
-        size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0)))
-          .cast("long"))
-    val offsets = withKey.groupBy(col(sourceCol), col("bkt"))
-      .agg(sum("n_tokens").as("bucket_toks"))
-      .withColumn("offset",
-        coalesce(sum("bucket_toks").over(
-          Window.partitionBy(col(sourceCol)).orderBy("bkt").rowsBetween(
-            Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(sourceCol), col("bkt"), col("offset"))
-    val w = Window.partitionBy(col(sourceCol), col("bkt"))
-      .orderBy(col("shuffle_key"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, 0) // inclusive
-    withKey.join(broadcast(offsets), Seq(sourceCol, "bkt"))
-      .withColumn("tokens_through",
-        col("offset") + sum(col("n_tokens")).over(w))
+      .withColumn("bkt", keyBucket(col("shuffle_key")))
+      .withColumn("n_tokens", size(Tokens.whitespace(col(textCol))).cast("long"))
+    bucketedTokenSum(withKey, Seq(sourceCol), idCol, inclusive = true,
+        "tokens_through")
       .filter(col("tokens_through") <= col("__budget"))
       .select(col(idCol), col(sourceCol), col("n_tokens"),
         col("tokens_through"))

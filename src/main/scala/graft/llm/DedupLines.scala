@@ -27,8 +27,9 @@ trait DedupLines { self: Dedup.type =>
     * row per input doc; a doc whose every line was a later repeat
     * comes back with empty text, not dropped.
     *
-    * Scale shape: explode to (doc, line_idx, line) ONCE; first
-    * occurrence is a rank-1 filter over a window keyed by the line,
+    * Scale shape: explode to (doc, line_idx, line) ONCE
+    * ([[Tokens.keepPieces]]); first occurrence is a rank-1 filter over
+    * a window keyed by the line,
     * which Spark rewrites to a map-side WindowGroupLimit — each map
     * task forwards at most ONE occurrence per distinct line, so a
     * pathologically hot line (the 10^9-copy banner) reaches its
@@ -40,37 +41,17 @@ trait DedupLines { self: Dedup.type =>
   def lineDedup(
       df: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val lines = df
-      .select(col(idCol), posexplode(split(col(textCol), "\n"))
-        .as(Seq("line_idx", "line")))
-    val w = Window.partitionBy(col("line"))
-      .orderBy(col(idCol), col("line_idx"))
-    val keptNonblank = lines
-      .filter(trim(col("line")) =!= "")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col(idCol), col("line_idx"), col("line"))
-    val keptBlank = lines.filter(trim(col("line")) === "")
-      .select(col(idCol), col("line_idx"), col("line"))
-    val rebuilt = keptNonblank.unionByName(keptBlank)
-      .groupBy(col(idCol))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("line_idx"), col("line")))),
-            s => s.getField("line")),
-          "\n").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    df.select(col(idCol),
-        size(split(col(textCol), "\n")).cast("long").as("n_lines"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as(textCol),
-        col("n_lines"),
-        (col("n_lines") - coalesce(col("n_kept"), lit(0L)))
-          .as("n_removed"))
-  }
+      idCol: String = "doc_id"): DataFrame =
+    Tokens.keepPieces(df, split(col(textCol), "\n"), "\n", "n_lines",
+        textCol, idCol) { lines =>
+      val w = Window.partitionBy(col("piece")).orderBy(col(idCol), col("idx"))
+      val blank = trim(col("piece")) === ""
+      lines.filter(!blank)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col(idCol), col("idx"), col("piece"))
+        .unionByName(lines.filter(blank))
+    }
 
   // ------------------------------------------------- substring dedup
 
@@ -116,9 +97,8 @@ trait DedupLines { self: Dedup.type =>
       idCol: String = "doc_id",
       hashKeys: Boolean = true): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens: $k")
-    val ws = filter(split(col(textCol), "\\s+"), t => t =!= "")
-    val toks = df.select(col(idCol), ws.as("ws"))
-    val wins = toks.filter(size(col("ws")) >= k)
+    val wins = df.select(col(idCol), Tokens.whitespace(col(textCol)).as("ws"))
+      .filter(size(col("ws")) >= k)
       .select(col(idCol), explode(expr(
         s"transform(sequence(0, size(ws) - $k), " +
           s"i -> struct(i AS pos, array_join(slice(ws, i + 1, $k), ' ') AS gram))"))
@@ -130,24 +110,8 @@ trait DedupLines { self: Dedup.type =>
     val covered = wins.join(firsts, "g")
       .filter(col(idCol) =!= col(s"f.$idCol") || col("pos") =!= col("f.pos"))
       .select(col(idCol),
-        explode(sequence(col("pos"), col("pos") + lit(k - 1))).as("tokpos"))
-    val rebuilt = toks
-      .select(col(idCol), posexplode(col("ws")).as(Seq("tokpos", "tok")))
-      .join(covered, Seq(idCol, "tokpos"), "left_anti")
-      .groupBy(col(idCol))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("tokpos"), col("tok")))),
-            s => s.getField("tok")),
-          " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    df.select(col(idCol), size(ws).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as(textCol),
-        col("n_tokens"),
-        (col("n_tokens") - coalesce(col("n_kept"), lit(0L)))
-          .as("n_removed"))
+        explode(sequence(col("pos"), col("pos") + lit(k - 1))).as("idx"))
+    Tokens.keepPieces(df, Tokens.whitespace(col(textCol)), " ", "n_tokens",
+      textCol, idCol)(_.join(covered, Seq(idCol, "idx"), "left_anti"))
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * the model was trained on.
   *
   * Model definition (stated once, mirrored exactly by the DuckDB
-  * oracle): tokens are `[\p{L}]+` runs of lower-cased text (the same
-  * tokenization as languageId/qualityScore); a document's bigrams are
+  * oracle): tokens are [[Tokens.letters]] (as in languageId and
+  * qualityScore); a document's bigrams are
   * its adjacent token pairs; the context count c(w1) counts w1's
   * occurrences AS A CONTEXT (i.e. over bigrams, not raw tokens — no
   * sentence-boundary bookkeeping); V is the corpus-wide distinct token
@@ -35,16 +35,13 @@ import org.apache.spark.sql.functions._
   */
 object LanguageModel {
 
-  private def tokens(textCol: String) =
-    regexp_extract_all(lower(col(textCol)), lit("[\\p{L}]+"), lit(0))
-
   /** (doc_id, w1, w2) — one row per adjacent token pair, multiplicity
     * kept; built with an index transform over the token array so the
     * corpus is tokenized ONCE (no per-bigram regex re-evaluation). */
   private def docBigrams(
       docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs
-      .select(col(idCol), tokens(textCol).as("ws"))
+      .select(col(idCol), Tokens.letters(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col(idCol), explode(expr(
         "transform(sequence(1, size(ws) - 1), " +
@@ -63,7 +60,7 @@ object LanguageModel {
     val bigrams = docBigrams(docs, textCol, idCol)
     val contexts = bigrams.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val vocab = docs
-      .select(explode(tokens(textCol)).as("w"))
+      .select(explode(Tokens.letters(col(textCol))).as("w"))
       .agg(countDistinct(col("w")).as("v"))
     val pairs = bigrams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
@@ -150,7 +147,7 @@ object LanguageModel {
       idCol: String = "doc_id",
       k: Double = 0.5): DataFrame = {
     val model = bigramModel(trainDocs, textCol, idCol, k)
-    val v = trainDocs.select(explode(tokens(textCol)).as("w"))
+    val v = trainDocs.select(explode(Tokens.letters(col(textCol))).as("w"))
       .agg(countDistinct(col("w"))).head().getLong(0)
     perplexityAgainst(scoreDocs, model, v, textCol, idCol, k)
   }
@@ -191,7 +188,7 @@ object LanguageModel {
       idCol: String = "doc_id",
       k: Double = 0.5): DataFrame = {
     val model = bigramModel(docs, textCol, idCol, k)
-    val v = docs.select(explode(tokens(textCol)).as("w"))
+    val v = docs.select(explode(Tokens.letters(col(textCol))).as("w"))
       .agg(countDistinct(col("w"))).head().getLong(0)
     perplexityAgainst(docs, model, v, textCol, idCol, k)
   }

@@ -34,8 +34,7 @@ object TextAnalysis {
     val t = col(textCol)
     df
       .withColumn("n_chars_calc", length(t))
-      .withColumn("ws_token_count",
-        size(regexp_extract_all(t, lit("\\S+"), lit(0))))
+      .withColumn("ws_token_count", size(Tokens.whitespace(t)))
       .withColumn("bpe_token_count",
         size(regexp_extract_all(t,
           lit("[\\p{L}]+|[\\p{N}]+|[^\\p{L}\\p{N}\\s]"), lit(0))))
@@ -60,8 +59,7 @@ object TextAnalysis {
     val digits = length(t) - length(regexp_replace(t, "[0-9]", ""))
     val upper = length(t) - length(regexp_replace(t, "[A-Z]", ""))
     df
-      .withColumn(tmpWords,
-        filter(split(lower(t), "[^\\p{L}]+"), w => length(w) > 0))
+      .withColumn(tmpWords, Tokens.letters(t))
       .withColumn("n_words", size(words))
       .withColumn("mean_word_len",
         (length(regexp_replace(lower(t), "[^\\p{L}]", "")).cast("double") / nWords))
@@ -151,8 +149,7 @@ object TextAnalysis {
     val pairs = array(scored.map { case (l, s) =>
       struct(s.as("score"), lit(l).as("lang")) }: _*)
     val best = sort_array(pairs, asc = false).getItem(0)
-    df.withColumn(tmpWords,
-        filter(split(lower(col(textCol)), "[^\\p{L}]+"), w => length(w) > 0))
+    df.withColumn(tmpWords, Tokens.letters(col(textCol)))
       .withColumn(outputCol,
         when(best.getField("score") >= minScore, best.getField("lang"))
           .otherwise(lit("und")))
@@ -232,8 +229,8 @@ object TextAnalysis {
   /** Gopher-style repetition signals (Rae et al. 2021, §A1.1): the
     * duplicate-2-gram fraction and the character share of the single
     * most frequent 2-gram — the standard "templated / boilerplate
-    * document" quality filters for LLM training corpora. Tokenization
-    * matches the dedup family (lowercase, split on non-alphanumeric).
+    * document" quality filters for LLM training corpora. Tokens are
+    * [[Tokens.words]].
     *
     * Shuffle-free: per-doc 2-gram counts come from `array_sort` + one
     * run-length fold (the [[charEntropy]] trick), NOT explode+groupBy —
@@ -243,19 +240,19 @@ object TextAnalysis {
     * the lexicographically smallest (first in sorted order, strict `>`
     * in the fold), so the output is deterministic across engines. */
   def repetitionStats(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
-    // _toks/_grams bound as attributes first: a HOF lambda body inlines
+    val Seq(tmpToks, tmpGrams, tmpRep) =
+      Seq("_toks", "_grams", "_rep").map(freshCol(df, _))
+    val (toks, grams, rep) = (col(tmpToks), col(tmpGrams), col(tmpRep))
+    // tokens/grams bound as attributes first: a HOF lambda body inlines
     // any OUTER expression it references and re-evaluates it per
     // element — referencing the split/regex tree inside `transform`
     // would turn this into O(n²) regex work per row.
     val bound = df
-      .withColumn("_toks", toks)
-      .withColumn("_grams", array_sort(
-        when(size(col("_toks")) >= 2,
-          transform(sequence(lit(1), size(col("_toks")) - 1),
-            i => concat_ws(" ",
-              element_at(col("_toks"), i), element_at(col("_toks"), i + 1))))
+      .withColumn(tmpToks, Tokens.words(col(textCol)))
+      .withColumn(tmpGrams, array_sort(
+        when(size(toks) >= 2,
+          transform(sequence(lit(1), size(toks) - 1),
+            i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
           .otherwise(array().cast("array<string>"))))
     // One left-fold over the sorted grams: run lengths count distinct
     // grams and track the longest run (= max multiplicity) plus its
@@ -264,7 +261,7 @@ object TextAnalysis {
     val zero = struct(lit("").as("prev"), lit(0).as("run"),
       lit(0).as("nDistinct"), lit(0).as("best"), lit("").as("bestGram"))
     val folded = aggregate(
-      col("_grams"),
+      grams,
       zero,
       (st, x) => {
         val isNew = st.getField("prev") =!= x
@@ -276,22 +273,22 @@ object TextAnalysis {
           when(isBetter, run).otherwise(st.getField("best")).as("best"),
           when(isBetter, x).otherwise(st.getField("bestGram")).as("bestGram"))
       })
-    val total = size(col("_grams")).cast("double")
+    val total = size(grams).cast("double")
     val nChars = greatest(length(col(textCol)), lit(1)).cast("double")
     bound
-      .withColumn("_rep", folded) // bound once: 4 output columns read it
-      .withColumn("ngram_total", size(col("_grams")))
-      .withColumn("ngram_distinct", col("_rep").getField("nDistinct"))
+      .withColumn(tmpRep, folded) // bound once: 4 output columns read it
+      .withColumn("ngram_total", size(grams))
+      .withColumn("ngram_distinct", rep.getField("nDistinct"))
       .withColumn("dup_ngram_frac",
         when(col("ngram_total") === 0, lit(0.0))
           .otherwise(lit(1.0) - col("ngram_distinct").cast("double") / total))
-      .withColumn("top_ngram", col("_rep").getField("bestGram"))
-      .withColumn("top_ngram_count", col("_rep").getField("best"))
+      .withColumn("top_ngram", rep.getField("bestGram"))
+      .withColumn("top_ngram_count", rep.getField("best"))
       .withColumn("top_ngram_char_frac",
         when(col("ngram_total") === 0, lit(0.0))
           .otherwise(col("top_ngram_count").cast("double") *
             length(col("top_ngram")).cast("double") / nChars))
-      .drop("_toks", "_grams", "_rep")
+      .drop(tmpToks, tmpGrams, tmpRep)
   }
 
   /** PII detection patterns. Kept lookaround-free and alternation-free
@@ -350,7 +347,7 @@ object TextAnalysis {
     * becomes ⌈n/stride⌉ chunks of up to `chunkTokens` whitespace
     * tokens, successive chunks starting `stride` tokens apart (stride <
     * chunkTokens ⇒ overlapping windows, the usual boundary-context
-    * trick). Tokens are `\S+` runs (the [[tokenStats]] ws tokenization,
+    * trick). Tokens are [[Tokens.whitespace]] runs (as in [[tokenStats]],
     * so chunk token counts and ws_token_count agree). Documents with no
     * tokens produce no chunks.
     *
@@ -374,21 +371,21 @@ object TextAnalysis {
       stride: Int = 48): DataFrame = {
     require(chunkTokens > 0 && stride > 0,
       s"chunkTokens/stride must be positive: $chunkTokens/$stride")
-    val toks = regexp_extract_all(col(textCol), lit("\\S+"), lit(0))
+    val Seq(tmpToks, tmpStarts, tmpStart) =
+      Seq("_toks", "_starts", "_start").map(freshCol(df, _))
+    val (toks, start) = (col(tmpToks), col(tmpStart))
     val bound = df
-      .withColumn("_toks", toks)
-      .withColumn("_starts",
-        when(size(col("_toks")) > 0,
-          sequence(lit(0), size(col("_toks")) - 1, lit(stride)))
+      .withColumn(tmpToks, Tokens.whitespace(col(textCol)))
+      .withColumn(tmpStarts,
+        when(size(toks) > 0, sequence(lit(0), size(toks) - 1, lit(stride)))
           .otherwise(array().cast("array<int>")))
     bound
       .select(col("*"),
-        posexplode(col("_starts")).as(Seq("chunk_idx", "_start")))
-      .withColumn("chunk_tokens",
-        least(lit(chunkTokens), size(col("_toks")) - col("_start")))
+        posexplode(col(tmpStarts)).as(Seq("chunk_idx", tmpStart)))
+      .withColumn("chunk_tokens", least(lit(chunkTokens), size(toks) - start))
       .withColumn("chunk",
-        array_join(slice(col("_toks"), col("_start") + 1, lit(chunkTokens)), " "))
-      .drop("_toks", "_starts", "_start")
+        array_join(slice(toks, start + 1, lit(chunkTokens)), " "))
+      .drop(tmpToks, tmpStarts, tmpStart)
   }
 
   /** Sequence-packing bin assignment — the "concatenate-and-split"
@@ -396,7 +393,7 @@ object TextAnalysis {
     * fixed order per group, concatenated, and cut into
     * `binTokens`-sized training sequences): each document is assigned
     * the bin its FIRST token lands in. Emits per doc: `n_tokens`
-    * (whitespace tokens, the [[tokenStats]] tokenization),
+    * ([[Tokens.whitespace]] tokens, as in [[tokenStats]]),
     * `tokens_before` (running total of earlier docs in the group),
     * `bin_id` (= tokens_before / binTokens), and `bin_offset`
     * (= tokens_before % binTokens, the doc's start position inside its
@@ -422,8 +419,7 @@ object TextAnalysis {
       .partitionBy(col(groupCol)).orderBy(col(idCol))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     df
-      .withColumn("n_tokens",
-        size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0))))
+      .withColumn("n_tokens", size(Tokens.whitespace(col(textCol))))
       .withColumn("tokens_before",
         coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .withColumn("bin_id", (col("tokens_before") / binTokens).cast("long"))
@@ -448,8 +444,7 @@ object TextAnalysis {
       textCol: String = "text",
       exact: Boolean = true,
       accuracy: Int = 10000): DataFrame = {
-    val nToks = size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0)))
-      .cast("double")
+    val nToks = size(Tokens.whitespace(col(textCol))).cast("double")
     val probs = "array(0.25D, 0.5D, 0.75D, 0.95D)"
     val q =
       if (exact) expr(s"percentile(n_tokens, $probs)")
@@ -478,49 +473,29 @@ object TextAnalysis {
     * n_removed) — one row per input document, docs whose every line was
     * boilerplate come back with empty text, not dropped.
     *
-    * Scale shape: explode to (doc, line) once; the line-frequency table
-    * is a distinct + partial-agg count whose result is Zipf-bounded
-    * (boilerplate is by definition few DISTINCT strings repeated many
-    * times), so after the `minDf` filter the boilerplate set is small
-    * enough to broadcast — the removal anti-join costs no shuffle on
-    * the corpus side. Reassembly is one groupBy(doc) of (index, line)
-    * structs, sorted in-array — no window, no SinglePartition. Three
-    * corpus-sized shuffle boundaries total (df-count, its distinct,
-    * reassembly), each partial-aggregated. */
+    * Scale shape: explode to (doc, line) once ([[Tokens.keepPieces]]);
+    * the line-frequency table is a distinct + partial-agg count whose
+    * result is Zipf-bounded (boilerplate is by definition few DISTINCT
+    * strings repeated many times), so after the `minDf` filter the
+    * boilerplate set is small enough to broadcast — the removal
+    * anti-join costs no shuffle on the corpus side. Three corpus-sized
+    * shuffle boundaries total (df-count, its distinct, reassembly),
+    * each partial-aggregated. */
   def removeBoilerplate(
       df: DataFrame,
       minDf: Long,
       textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val lines = df
-      .select(col(idCol), posexplode(split(col(textCol), "\n"))
-        .as(Seq("line_idx", "line")))
-    val boiler = lines
-      .filter(trim(col("line")) =!= "")
-      .select(col(idCol), col("line")).distinct()
-      .groupBy(col("line")).agg(count(lit(1)).as("line_df"))
-      .filter(col("line_df") >= minDf)
-      .select(col("line"))
-    val kept = lines.join(broadcast(boiler), Seq("line"), "left_anti")
-    val rebuilt = kept
-      .groupBy(col(idCol))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("line_idx"), col("line")))),
-            s => s.getField("line")),
-          "\n").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    df.select(col(idCol),
-        // long, not int: the cross-engine twin (DuckDB len()) is BIGINT
-        size(split(col(textCol), "\n")).cast("long").as("n_lines"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as(textCol),
-        col("n_lines"),
-        (col("n_lines") - coalesce(col("n_kept"), lit(0L)))
-          .as("n_removed"))
-  }
+      idCol: String = "doc_id"): DataFrame =
+    Tokens.keepPieces(df, split(col(textCol), "\n"), "\n", "n_lines",
+        textCol, idCol) { lines =>
+      val boiler = lines
+        .filter(trim(col("piece")) =!= "")
+        .select(col(idCol), col("piece")).distinct()
+        .groupBy(col("piece")).agg(count(lit(1)).as("line_df"))
+        .filter(col("line_df") >= minDf)
+        .select(col("piece"))
+      lines.join(broadcast(boiler), Seq("piece"), "left_anti")
+    }
 
   /** Corpus-level heavy hitters: the `k` most frequent word `n`-grams
     * across the whole corpus with their exact counts — the
@@ -528,10 +503,9 @@ object TextAnalysis {
     * query every curation run starts with ([[repetitionStats]] is the
     * per-DOC view; this is the per-CORPUS one).
     *
-    * Grams come from the same codegen [[graft.functions.WordNgrams]]
-    * tokenization as the dedup family (`[^\p{L}\p{N}]+` split,
-    * lowercased), so "top grams" and "dedup shingles" agree on what a
-    * gram is. Short docs (< n tokens) contribute nothing: the
+    * Grams come from the codegen [[graft.functions.WordNgrams]]
+    * kernel, whose tokens are [[Tokens.words]] as in the dedup family,
+    * so "top grams" and "dedup shingles" agree on what a gram is. Short docs (< n tokens) contribute nothing: the
     * single-token fallback grams are dropped by the exact
     * `size(split) = n` guard — tokens can never contain a space, so a
     * true n-gram has exactly n-1 of them.
@@ -654,10 +628,7 @@ object TextAnalysis {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docTerms = df.select(col(idCol).as("doc"), explode(
-        filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-          w => length(w) > 0)).as("term"))
-      .distinct()
+    val docTerms = Tokens.terms(df, textCol, col(idCol).as("doc")).distinct()
     val nDocs = df.select(col(idCol)).distinct().count()
     val head = docTerms.groupBy(col("term"))
       .agg(count(lit(1)).as("df_docs"))

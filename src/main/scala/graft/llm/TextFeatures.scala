@@ -23,7 +23,7 @@ object TextFeatures {
       outputCol: String = "tfidf"): DataFrame = {
     val tokens = new RegexTokenizer()
       .setInputCol(textCol).setOutputCol("tokens")
-      .setPattern("[^\\p{L}\\p{N}]+")
+      .setPattern(Tokens.WordSeparator)
       .transform(docs.select(col(idCol), col(textCol)))
     val tf = new HashingTF()
       .setInputCol("tokens").setOutputCol("tf").setNumFeatures(numFeatures)
@@ -37,8 +37,8 @@ object TextFeatures {
   /** Exact (un-hashed) TF-IDF with per-document top-k terms — the
     * keyword-extraction / doc-signature query. Unlike [[tfidf]]'s
     * fixed hash space this keeps real terms, so results are
-    * SQL-oracle-checkable and human-readable. Tokenization matches the
-    * dedup/repetition family (lowercase, split on non-alphanumeric).
+    * SQL-oracle-checkable and human-readable. Terms are
+    * [[Tokens.words]], as in the dedup/repetition family.
     * `tfidf = tf · (ln((N+1)/(df+1)) + 1)` — the standard smoothed-idf
     * formulation (sklearn TfidfTransformer semantics, public).
     *
@@ -65,10 +65,7 @@ object TextFeatures {
       topK: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nDocs = docs.count()
-    val toks = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
-    val tf = docs
-      .select(col(idCol), explode(toks).as("term"))
+    val tf = Tokens.terms(docs, textCol, col(idCol))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df_docs"))
@@ -90,9 +87,9 @@ object TextFeatures {
     * document against each query and keep the top `topK` per query.
     * Query terms are the DISTINCT tokens of the query text (set
     * semantics — the common simplification when queries are short or,
-    * as in more-like-this retrieval, whole documents). Tokenization
-    * matches [[tfidfExact]] (lowercase, split on non-alphanumeric), so
-    * postings built for one are valid for the other.
+    * as in more-like-this retrieval, whole documents). Terms are
+    * [[Tokens.words]], as in [[tfidfExact]], so postings built for one
+    * are valid for the other.
     *
     * `excludeSelf` drops doc rows whose id equals the query id BEFORE
     * ranking — the more-like-this form where queries are drawn from
@@ -166,10 +163,8 @@ object TextFeatures {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): Bm25Index = {
-    val toks = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     val termRows = docs
-      .select(col(idCol), toks.as("ws"))
+      .select(col(idCol), Tokens.words(col(textCol)).as("ws"))
       .select(col(idCol), size(col("ws")).as("dl"),
         explode_outer(col("ws")).as("term"))
       .groupBy(col(idCol), col("dl"), col("term"))
@@ -202,16 +197,14 @@ object TextFeatures {
       queryIdCol: String = "query_id",
       queryTextCol: String = "query_text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qToks = filter(split(lower(col(queryTextCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     val idf = log(lit(1.0) +
       (lit(index.nDocs.toDouble) - col("df_docs") + lit(0.5)) /
         (col("df_docs") + lit(0.5)))
-    val qTerms = broadcast(queries
-      .select(col(queryIdCol).as("query_id"), explode(qToks).as("term"))
-      .distinct()
-      .join(index.df, "term")
-      .withColumn("idf", idf))
+    val qTerms = broadcast(
+      Tokens.terms(queries, queryTextCol, col(queryIdCol).as("query_id"))
+        .distinct()
+        .join(index.df, "term")
+        .withColumn("idf", idf))
     val pairs = qTerms.join(index.tf, "term").join(index.docLen, idCol)
     val filtered =
       if (excludeSelf) pairs.filter(col(idCol) =!= col("query_id"))
@@ -244,9 +237,7 @@ object TextFeatures {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val toks = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
-    docs.select(col(idCol), toks.as("ws"))
+    docs.select(col(idCol), Tokens.words(col(textCol)).as("ws"))
       .select(col(idCol), size(col("ws")).as("dl"),
         explode_outer(expr(
           "transform(array_distinct(ws), " +

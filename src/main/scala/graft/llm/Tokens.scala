@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The word tokenizer rules of the text operators, each written once,
   * and the split-keep-rejoin stage of the line and substring removers.
   * Every pattern is lookaround-free, so the DuckDB oracle's RE2 regex
-  * spells the same rule. [[graft.functions.WordNgrams]] keeps its own
-  * compiled copy of the [[words]] rule. */
+  * spells the same rule (RE2's `\s`, unlike Java's, lacks U+000B).
+  * [[graft.functions.WordNgrams]] keeps its own compiled copy of the
+  * [[words]] rule. */
 private[graft] object Tokens {
 
   /** Separator of [[words]]: any run of chars that is neither a letter

@@ -79,10 +79,7 @@ object Regression {
       textCol: String = "text",
       topN: Int = 500): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val terms = docs.select(explode(
-      filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-        w => length(w) > 0)).as("term"))
-    val head = terms.groupBy(col("term"))
+    val head = graft.llm.Tokens.terms(docs, textCol).groupBy(col("term"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("term"))
       .limit(topN)

@@ -249,10 +249,7 @@ object StreamOps {
       width: Int = 128,
       textCol: String = "text"): DataFrame =
     graft.operators.CountMin.sketch(
-      docs.select(explode(
-        filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-          w => length(w) > 0)).as("term")),
-      col("term"), depth, width)
+      graft.llm.Tokens.terms(docs, textCol), col("term"), depth, width)
 
   /** Live retention: an event STREAM joined against a STATIC cohort
     * table (user_id → cohort_ts, e.g. the landed output of

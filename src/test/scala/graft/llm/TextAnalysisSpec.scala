@@ -166,6 +166,30 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("repetitionStats/chunk: caller columns named like staging columns " +
+    "survive and leave the metrics unchanged") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "click here buy now click here buy now"),
+      (2L, "the quick brown fox jumps over the lazy dog"), (3L, ""))
+      .toDF("doc_id", "text")
+    val extra = docs.withColumn("_toks", lit("mine"))
+      .withColumn("_start", lit(7))
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).orderBy(cols.map(col): _*)
+        .collect().map(_.toSeq).toSeq
+    val rep = Seq("doc_id", "ngram_total", "ngram_distinct",
+      "dup_ngram_frac", "top_ngram", "top_ngram_count", "top_ngram_char_frac")
+    val repOut = TextAnalysis.repetitionStats(extra)
+    assert(rows(repOut, rep) == rows(TextAnalysis.repetitionStats(docs), rep))
+    assert(rows(repOut, Seq("_toks", "_start")).distinct == Seq(Seq("mine", 7)))
+    val chk = Seq("doc_id", "chunk_idx", "chunk_tokens", "chunk")
+    val chkOut = TextAnalysis.chunk(extra, chunkTokens = 3, stride = 2)
+    assert(rows(chkOut, chk) ==
+      rows(TextAnalysis.chunk(docs, chunkTokens = 3, stride = 2), chk))
+    assert(rows(chkOut, Seq("_toks", "_start")).distinct == Seq(Seq("mine", 7)))
+  }
+
   test("Tokens: letters and whitespace equal both old spellings of each " +
     "rule on the corpus and on edge strings") {
     val s = spark
