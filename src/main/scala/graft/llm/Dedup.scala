@@ -204,6 +204,28 @@ object Dedup extends DedupPassages with DedupLines {
     batch.join(losers.reduce(_ unionByName _).distinct(), Seq(idCol),
       "left_anti")
 
+  /** The verify join: `pairs` with each side's `payload` attached by
+    * id, `a` joined on id_a then `b` on id_b, as `<payload>_a` and
+    * `<payload>_b`. */
+  private[llm] def pairSides(pairs: DataFrame, idCol: String,
+      payload: String, a: DataFrame, b: DataFrame): DataFrame = {
+    def side(df: DataFrame, s: String) =
+      df.select(col(idCol).as(s"id_$s"), col(payload).as(s"${payload}_$s"))
+    pairs.join(side(a, "a"), "id_a").join(side(b, "b"), "id_b")
+  }
+
+  /** The rows of `docs` named in `pairs` (either side): a verify's input,
+    * so its per-doc work scales with the candidates, not the corpus. No
+    * broadcast HINT: the candidate count is data-dependent (a
+    * boilerplate-heavy corpus can band into millions of pairs) and a
+    * forced broadcast would hit the 8 GB broadcast ceiling exactly when
+    * it matters; AQE picks broadcast at runtime whenever the id set is
+    * actually small. */
+  private[llm] def candidateRows(docs: DataFrame, pairs: DataFrame,
+      idCol: String): DataFrame =
+    docs.join(pairs.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+      .distinct(), Seq(idCol), "left_semi")
+
   /** A persisted `histBands` table is only comparable under the exact
     * knobs that built it, so it requires them explicit. */
   private def requireExplicitKnobs(histBands: Option[DataFrame],
@@ -542,8 +564,8 @@ object Dedup extends DedupPassages with DedupLines {
     * contracts in O(log n) rounds — the per-round plan here (equi-join
     * + min-groupBy, both on the node key) is unchanged.
     *
-    * Each round's labels are eagerly `localCheckpoint`ed — in an
-    * iterative algorithm the plan tree otherwise GROWS by one
+    * Each round's labels are `localCheckpoint`ed ([[iterateRounds]]) —
+    * in an iterative algorithm the plan tree otherwise GROWS by one
     * join+agg per round and Catalyst re-optimizes the whole history
     * every iteration (quadratic planning, the classic Spark iterative
     * trap; GraphX checkpoints for the same reason). The checkpoint
@@ -563,8 +585,14 @@ object Dedup extends DedupPassages with DedupLines {
     * If the label propagation has not converged after `maxIter` rounds
     * (rounds needed = graph diameter), the call falls back to
     * [[connectedComponentsStar]], whose round count is O(log n)
-    * regardless of diameter — set `starFallback = false` to get the
-    * fail-fast IllegalStateException instead.
+    * regardless of diameter. Both algorithms stay because neither wins
+    * everywhere: on the dedup graphs (duplicate clusters) propagation
+    * converges in 2-3 rounds, and routing this call to the star loop
+    * instead made the dedup rows slower (graft.Bench, sf0.1, 4 cores,
+    * medians of 3 alternating pairs: dedup_components 2.28 → 2.61 s,
+    * dedup_minhash_clusters 2.21 → 3.45 s, dedup_minhash_clusters_best
+    * 2.35 → 3.32 s), while the star loop bounds the rounds of a
+    * long-diameter graph.
     *
     * Lifecycle: the RETURNED frame is backed by the final round's
     * checkpoint blocks (its lineage is truncated — that is what makes
@@ -576,67 +604,33 @@ object Dedup extends DedupPassages with DedupLines {
     * the context cleaner reclaim them as rounds are unpersisted, or
     * delete the directory after the job. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None,
-      starFallback: Boolean = true): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     val edges = persistRound(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       checkpointDir)
-    // the initial label frame goes through an exchange, so its
-    // materialized partition count is the AQE-coalesced, bytes-derived
-    // value withIterLoopConf scales the loop rounds to (`edges` itself
-    // is a shuffle-free union whose partition count just sums the
-    // inputs' — not data-representative)
     val labels0 = persistRound(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id")),
       checkpointDir)
-    val (labels, changed) =
-      withIterLoopConf(pairs.sparkSession, labels0) {
-    var labels = labels0
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val propagated = edges
-        .join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("component"))
-      // LAZY round checkpoint + ONE count() job per round (r18
-      // optimization, the connectedComponentsStar recipe): the changed-
-      // label count's inner join consumes every partition of `next`
-      // (caching them, and the lazy local checkpoint truncates lineage
-      // at that job's end), so `labels` is only unpersisted after the
-      // new round is fully materialized — the safety the old eager
-      // comment pinned, now provided by the convergence job itself
-      // instead of a second driver job.
-      val next = persistRound(
-        labels.select("id", "component").union(propagated)
-          .groupBy("id").agg(min("component").as("component")),
-        checkpointDir, eager = false)
-      changed = next
-        .join(labels.withColumnRenamed("component", "prev"), "id")
-        .filter(col("component") =!= col("prev")).count()
-      labels.unpersist() // previous round's checkpoint blocks
-      labels = next
-      iter += 1
-    }
-    (labels, changed)
-      }
+    val (labels, converged) = iterateRounds(labels0, maxIter, checkpointDir)(
+      cur => cur.select("id", "component")
+        .union(edges.join(cur, edges("src") === cur("id"))
+          .select(col("dst").as("id"), col("component")))
+        .groupBy("id").agg(min("component").as("component")),
+      // the changed labels: an inner join that reads every row of `next`
+      (next, cur) => next
+        .join(cur.withColumnRenamed("component", "prev"), "id")
+        .filter(col("component") =!= col("prev")))
     edges.unpersist()
-    if (changed > 0) {
+    if (converged) labels
+    else {
       // a silent non-converged result would KEEP duplicates downstream
-      // (one cluster labeled as several components) with no signal.
-      // Free the abandoned propagation labels first — on the fallback
-      // path nothing ever consumes them again, and leaving the blocks
-      // pinned would leak one corpus-node-sized cache per fallback
+      // (one cluster labeled as several components). Free the abandoned
+      // propagation labels first: nothing consumes them again
       labels.unpersist()
-      if (starFallback)
-        return connectedComponentsStar(pairs, checkpointDir = checkpointDir)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing); the graph diameter exceeds " +
-          "maxIter — raise it, or use connectedComponentsStar")
+      connectedComponentsStar(pairs, checkpointDir = checkpointDir)
     }
-    labels
   }
 
   /** Connected components by alternating large-star/small-star
@@ -666,52 +660,30 @@ object Dedup extends DedupPassages with DedupLines {
     * checkpoint-backed; `.unpersist()` it when consumed. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
-    var edges = persistRound(
+    val edges = persistRound(
       pairs.select(greatest(col("id_a"), col("id_b")).as("src"),
           least(col("id_a"), col("id_b")).as("dst"))
         .where(col("src") =!= col("dst")).distinct(),
       checkpointDir)
-    var converged = edges.isEmpty
-    var iter = 0
-    withIterLoopConf(pairs.sparkSession, edges) {
-    while (!converged && iter < maxIter) {
-      // ONE driver job per round (r18 optimization): the round's frame
-      // is checkpointed LAZILY and the convergence count() both
-      // materializes it (caching all partitions — `except` scans every
-      // partition of both legs, and the lazy local checkpoint truncates
-      // lineage when that first job completes, so the unpersist of the
-      // previous round below stays safe) and decides the fixpoint. The
-      // previous `persist-then-two-isEmpty` form ran 2-3 driver jobs per
-      // round — and on the ~20-round cluster rows per-JOB overhead, not
-      // the tiny shuffles, was the measured cost (isEmpty's incremental
-      // take(1) added scale-up rounds of its own on the converged
-      // check). Canonical + distinct on both sides ⇒ set equality is
-      // "no row only-in-one-side" either way; the union of the two
-      // excepts states it in one exact, countable frame.
-      val next = persistRound(smallStar(largeStar(edges)), checkpointDir,
-        eager = false)
+    val (stars, converged) = iterateRounds(edges, maxIter, checkpointDir)(
+      cur => smallStar(largeStar(cur)),
       // set equality of two CANONICAL DISTINCT edge frames, one
-      // exchange: a pair group counts 2 iff it sits in both sides
-      // (each side contributes ≤ 1 row), so "no group with count ≠ 2"
-      // ⟺ next == edges, exactly — where the two-except form paid
-      // 4-5 AQE stage-jobs per round, this pays ~2
-      converged = next.unionByName(edges)
+      // exchange: a pair group counts 2 iff it sits in both sides (each
+      // side contributes ≤ 1 row), so "no group with count ≠ 2" ⟺
+      // next == cur, exactly (two excepts paid 4-5 AQE stage-jobs per
+      // round, this pays ~2)
+      (next, cur) => next.unionByName(cur)
         .groupBy("src", "dst").count()
-        .where(col("count") =!= 2).count() == 0L
-      edges.unpersist()
-      edges = next
-      iter += 1
-    }
-    }
+        .where(col("count") =!= 2))
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds — " +
           "O(log n) rounds should always suffice; raise maxIter")
     // at the fixpoint edges are stars (v, root): label leaves with the
     // root and each root with itself
-    val labelled = edges
+    val labelled = stars
       .select(col("src").as("id"), col("dst").as("component"))
-      .union(edges.select(col("dst").as("id"), col("dst").as("component")))
+      .union(stars.select(col("dst").as("id"), col("dst").as("component")))
       .distinct()
     // self-pairs (id_a == id_b) were dropped by the canonicalization
     // above, but [[connectedComponents]] labels such a node with itself
@@ -728,7 +700,7 @@ object Dedup extends DedupPassages with DedupLines {
     val result = persistRound(
       labelled.union(selfOnly.select(col("id"), col("id").as("component"))),
       checkpointDir)
-    edges.unpersist()
+    stars.unpersist()
     result
   }
 
@@ -785,44 +757,34 @@ object Dedup extends DedupPassages with DedupLines {
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
       df.checkpoint(eager)
     // eager = false defers materialization to the caller's next action
-    // over the FULL frame (the CC loops' convergence count) — one
-    // driver job does both. Callers passing eager = false must consume
-    // every partition before unpersisting the frame this one derives
-    // from (see the loop comments).
+    // over the FULL frame ([[iterateRounds]]' convergence count)
     case None => df.localCheckpoint(eager)
   }
 
-  /** Session conf scope for the CC loops' rounds (r19, the VERDICT's
-    * "cap the CC loop's per-round partitioning"): inside the loop
-    * `spark.sql.shuffle.partitions` is set from the MATERIALIZED
-    * initial frame's partition count — which the session's AQE already
-    * coalesced by actual bytes, so the value is data-derived, not a
-    * local constant: a corpus-scale edge frame materializes as many
-    * partitions and the loop keeps that parallelism, while a KB-scale
-    * frame yields 1-2 and the ~5-20 tiny rounds stop fanning every
-    * exchange into `defaultParallelism` near-empty tasks. Measured
-    * (quiet box, 32 cores, min-of-2): cold-plan wall of
-    * multimodal_phash_clusters 13.6 s → 7.8 s (63 → 18 driver jobs),
-    * warm within noise (4.46 → 3.99 s). AQE stays ON inside the loop —
-    * an A/B with it off regressed every clusters row ~0.8 s warm (the
-    * runtime broadcast-join conversion on the tiny round frames is
-    * worth more than the per-stage materialization jobs it costs).
-    * Results are partitioning-independent (equi-joins + min
-    * aggregates); the conf is restored in finally. */
-  private def withIterLoopConf[T](
-      spark: org.apache.spark.sql.SparkSession,
-      materialized: DataFrame)(body: => T): T = {
-    val conf = spark.conf
-    val prevParts = conf.get("spark.sql.shuffle.partitions")
-    val p = math.max(1, materialized.rdd.getNumPartitions)
-    try {
-      conf.set("spark.sql.shuffle.partitions",
-        math.min(p, spark.sparkContext.defaultParallelism).toString)
-      body
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", prevParts)
+  /** The round loop under both CC algorithms: each round checkpoints
+    * `step(cur)` LAZILY, runs ONE `diff(next, cur).count()` job (zero
+    * rows ⇒ fixpoint) and then unpersists `cur`. Contract: `diff` must
+    * read every partition of `next`. That count then materializes the
+    * whole round (the lazy checkpoint truncates lineage when the job
+    * ends), so freeing `cur` afterwards loses nothing, and one Spark
+    * job per round both builds the round and tests convergence — on
+    * the ~20-round cluster rows per-job overhead, not the tiny
+    * shuffles, is the cost. Returns the last round's frame and whether
+    * it converged within `maxIter` rounds; the first round also
+    * unpersists the initial frame. Rounds run under the session's own
+    * conf. */
+  @annotation.tailrec
+  private def iterateRounds(cur: DataFrame, maxIter: Int,
+      checkpointDir: Option[String])(step: DataFrame => DataFrame,
+      diff: (DataFrame, DataFrame) => DataFrame): (DataFrame, Boolean) =
+    if (maxIter <= 0) (cur, false)
+    else {
+      val next = persistRound(step(cur), checkpointDir, eager = false)
+      val converged = diff(next, cur).count() == 0L
+      cur.unpersist()
+      if (converged) (next, true)
+      else iterateRounds(next, maxIter - 1, checkpointDir)(step, diff)
     }
-  }
 
   /** MinHash dedup by connected components: drops every doc whose
     * component has a smaller member — the transitive-closure-correct
@@ -1877,27 +1839,16 @@ object Dedup extends DedupPassages with DedupLines {
       n: Int = 3,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    // shingle ONLY docs that appear in a candidate pair: a left_semi
-    // against the pair-id set, so the expensive word_ngrams
-    // tokenization runs on candidates, not the whole corpus — after
-    // LSH banding the candidate set is orders of magnitude smaller
-    // than the corpus, and verification must scale with IT, not with
-    // corpus size. No broadcast HINT: the candidate count is
-    // data-dependent (a boilerplate-heavy corpus can band into
-    // millions of pairs) and a forced broadcast would hit the 8 GB
-    // broadcast ceiling / driver memory exactly when it matters; AQE
-    // picks broadcast at runtime whenever the id set is actually small
-    val candidateIds = pairs
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .distinct()
-    val candidates = docs.select(col(idCol), col(textCol))
-      .join(candidateIds, Seq(idCol), "left_semi")
-    // same shingling (incl. the tiny-doc single-token fallback) as the
-    // candidate generators — otherwise a sub-n-token doc that banding
-    // matched would verify against an EMPTY shingle set and score 0.
-    // Sets are SORTED once per doc so the per-pair intersect is a
-    // zero-allocation merge scan (SortedIntersectCount) instead of a
-    // per-row hash set — same count bit-for-bit (r15)
+    // shingle ONLY docs that appear in a candidate pair, so the
+    // expensive word_ngrams tokenization runs on candidates, not the
+    // whole corpus. Same shingling (incl. the tiny-doc single-token
+    // fallback) as the candidate generators — otherwise a sub-n-token
+    // doc that banding matched would verify against an EMPTY shingle
+    // set and score 0. Sets are SORTED once per doc so the per-pair
+    // intersect is a zero-allocation merge scan (SortedIntersectCount)
+    // instead of a per-row hash set — same count bit-for-bit (r15)
+    val candidates = candidateRows(docs.select(col(idCol), col(textCol)),
+      pairs, idCol)
     val shingles = shingled(candidates, textCol, idCol, n)
       .select(col(idCol),
         array_sort(array_distinct(col("shingles"))).as("sh"))
@@ -1932,9 +1883,7 @@ object Dedup extends DedupPassages with DedupLines {
       pairs: DataFrame,
       idCol: String,
       atLeast: Option[Double] = None): DataFrame = {
-    val a = shingles.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val b = shingles.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    val joined = pairs.join(a, "id_a").join(b, "id_b")
+    val joined = pairSides(pairs, idCol, "sh", shingles, shingles)
     val scored = atLeast.fold(joined)(t => joined.filter(
         least(size(col("sh_a")), size(col("sh_b"))).cast("double")
           >= lit(t) * greatest(size(col("sh_a")), size(col("sh_b")))))
@@ -1992,8 +1941,8 @@ object Dedup extends DedupPassages with DedupLines {
     val (tables, bits) = lshKnobs(vecs.count(), minCosine,
       numHashTables, bitsPerTable, targetRecall)
     val banded = embeddingBandKeys(df, embCol, idCol, tables, bits, seed)
-    verifyCosine(vecs, bandedSelfJoin(banded, idCol).distinct(), idCol)
-      .filter(col("cosine") >= minCosine)
+    verifyCosine(bandedSelfJoin(banded, idCol).distinct(), vecs, vecs, idCol,
+      minCosine)
   }
 
   private def cleanVecs(df: DataFrame, embCol: String, idCol: String) =
@@ -2004,14 +1953,14 @@ object Dedup extends DedupPassages with DedupLines {
     * twin of [[ngramJaccard]]'s role in the minhash family: two
     * id-equi-joins into the vectors and one codegen'd
     * [[graft.functions.CosineSimilarity]] per candidate, linear in the
-    * candidate count. */
-  private def verifyCosine(
-      vecs: DataFrame, pairs: DataFrame, idCol: String): DataFrame =
-    pairs
-      .join(vecs.select(col(idCol).as("id_a"), col("e").as("ea")), "id_a")
-      .join(vecs.select(col(idCol).as("id_b"), col("e").as("eb")), "id_b")
+    * candidate count; keeps the pairs at `minCosine`. `a` / `b` are the
+    * `(idCol, e)` vectors of the id_a / id_b sides. */
+  private def verifyCosine(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      idCol: String, minCosine: Double): DataFrame =
+    pairSides(pairs, idCol, "e", a, b)
       .select(col("id_a"), col("id_b"),
-        CosineSimilarity(col("ea"), col("eb")).as("cosine"))
+        CosineSimilarity(col("e_a"), col("e_b")).as("cosine"))
+      .filter(col("cosine") >= minCosine)
 
   /** The PRODUCTION embedding pair relation — the
     * [[minhashPairsStarFirst]]/[[simhashVerifiedStarFirst]] recipe on
@@ -2049,10 +1998,8 @@ object Dedup extends DedupPassages with DedupLines {
     val (tables, bits) = lshKnobs(vecs.count(), minCosine,
       numHashTables, bitsPerTable, targetRecall)
     val banded = embeddingBandKeys(df, embCol, idCol, tables, bits, seed)
-    val starVerified = verifyCosine(vecs,
-      minhashStarFromBandKeys(banded, idCol)
-        .select(col("id_a"), col("id_b")), idCol)
-      .filter(col("cosine") >= minCosine)
+    val starVerified = verifyCosine(minhashStarFromBandKeys(banded, idCol)
+        .select(col("id_a"), col("id_b")), vecs, vecs, idCol, minCosine)
     // LINEAGE CUT at the collapse boundary (the minhashSurvivorCandidates
     // rationale): the drop frame re-embeds the banded subtree in the
     // survivor pass; the lazy localCheckpoint compiles it once to a
@@ -2060,9 +2007,8 @@ object Dedup extends DedupPassages with DedupLines {
     // survivor self-join's two sides.
     val drops = linkedIds(starVerified.filter(col("cosine") >= collapseCosine),
       idCol).localCheckpoint(false)
-    val survPairs = verifyCosine(vecs, survivorPairs(banded, drops, idCol),
-        idCol)
-      .filter(col("cosine") >= minCosine)
+    val survPairs = verifyCosine(survivorPairs(banded, drops, idCol), vecs,
+      vecs, idCol, minCosine)
     // a star link between two SURVIVORS (verified below collapseCosine)
     // also surfaces from the survivor self-join — same exact cosine on
     // both paths, so distinct() is the union's dedup
@@ -2213,12 +2159,7 @@ object Dedup extends DedupPassages with DedupLines {
         histBands.getOrElse(
           embeddingBandKeys(histVecs, embCol, idCol, tables, bits, seed)),
         idCol) { pairs =>
-      pairs
-        .join(batchVecs.select(col(idCol).as("id_a"), col("e").as("ea")),
-          "id_a")
-        .join(allVecs.select(col(idCol).as("id_b"), col("e").as("eb")),
-          "id_b")
-        .filter(CosineSimilarity(col("ea"), col("eb")) >= minCosine)
+      verifyCosine(pairs, batchVecs, allVecs, idCol, minCosine)
         .select("id_a", "id_b")
     }
   }

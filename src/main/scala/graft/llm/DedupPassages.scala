@@ -113,15 +113,10 @@ trait DedupPassages { self: Dedup.type =>
       textCol: String = "text",
       idCol: String = "doc_id",
       maxChars: Int = 100): DataFrame = {
-    val candidateIds = pairs
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .distinct()
-    val keyed = docs.select(col(idCol),
-        substring(TextAnalysis.normalize(col(textCol)), 1, maxChars).as("t"))
-      .join(candidateIds, Seq(idCol), "left_semi")
-    val a = keyed.select(col(idCol).as("id_a"), col("t").as("t_a"))
-    val b = keyed.select(col(idCol).as("id_b"), col("t").as("t_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
+    val keyed = candidateRows(docs.select(col(idCol),
+        substring(TextAnalysis.normalize(col(textCol)), 1, maxChars).as("t")),
+      pairs, idCol)
+    pairSides(pairs, idCol, "t", keyed, keyed)
       .withColumn("edit_dist", levenshtein(col("t_a"), col("t_b")))
       .withColumn("similarity",
         when(greatest(length(col("t_a")), length(col("t_b"))) === 0, 1.0)
@@ -176,15 +171,10 @@ trait DedupPassages { self: Dedup.type =>
     val candidates = passagePairs(docs, textCol, idCol, minShared = 1,
         maxDocFreq, avgChunkBits, window)
       .select("id_a", "id_b")
-    val candidateIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .distinct()
-    val grams = strictGrams(
-        docs.join(candidateIds, Seq(idCol), "left_semi"), textCol, idCol, n)
+    val grams = strictGrams(candidateRows(docs, candidates, idCol), textCol,
+        idCol, n)
       .select(col(idCol), array_distinct(col("grams")).as("g"))
-    val a = grams.select(col(idCol).as("id_a"), col("g").as("g_a"))
-    val b = grams.select(col(idCol).as("id_b"), col("g").as("g_b"))
-    candidates.join(a, "id_a").join(b, "id_b")
+    pairSides(candidates, idCol, "g", grams, grams)
       .withColumn("shared_ngrams",
         size(array_intersect(col("g_a"), col("g_b"))))
       .filter(col("shared_ngrams") >= minSharedGrams)

@@ -113,9 +113,6 @@ class PropertySpec extends SparkSpec {
         (rng.nextInt(18).toLong, rng.nextInt(18).toLong))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      val got = graft.llm.Dedup.connectedComponents(
-        edges.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // brute-force union-find with min-label roots
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -128,8 +125,15 @@ class PropertySpec extends SparkSpec {
           parent(math.max(ra, rb)) = lo }
       }
       val expected = parent.keys.map(k => k -> find(k)).toMap
-      assert(got == expected.filterKeys(got.contains).toMap)
-      assert(got.keySet == expected.keySet)
+      // both algorithms over the same graph
+      Seq(graft.llm.Dedup.connectedComponents(edges.toDF("id_a", "id_b")),
+          graft.llm.Dedup.connectedComponentsStar(edges.toDF("id_a", "id_b")))
+        .foreach { labels =>
+          val got =
+            labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got == expected.filterKeys(got.contains).toMap)
+          assert(got.keySet == expected.keySet)
+        }
     }
   }
 

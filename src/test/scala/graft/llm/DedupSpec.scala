@@ -454,9 +454,46 @@ class DedupSpec extends SparkSpec {
     val labels = Dedup.connectedComponents(chain, maxIter = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 21 && labels.values.forall(_ == 0L))
-    // opting out of the fallback keeps the fail-fast contract
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 3, starFallback = false)
+  }
+
+  test("connectedComponents loops leave the session conf alone") {
+    val s = spark
+    import s.implicits._
+    val chain = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val key = "spark.sql.shuffle.partitions"
+    val session = spark.conf.get(key)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    // a second query on the same session reads the conf meanwhile
+    val reader = new Thread(() =>
+      while (running) { seen.add(spark.conf.get(key)); Thread.sleep(1) })
+    reader.start()
+    val (prop, star) = try (
+      Dedup.connectedComponents(chain).collect(),
+      Dedup.connectedComponentsStar(chain).collect())
+    finally { running = false; reader.join() }
+    val expected = (0L until 20L).map(_ -> 0L).toMap
+    assert(prop.map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+    assert(star.map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+    assert(seen.size == 1 && seen.contains(session), seen)
+  }
+
+  test("connectedComponents: reliable-checkpoint mode gives the same labels") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 7L), (10L, 11L), (11L, 4L))
+      .toDF("id_a", "id_b")
+    val dir = java.nio.file.Files.createTempDirectory("cc-checkpoint")
+    def labels(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    try {
+      val ckpt = Some(dir.toString)
+      assert(labels(Dedup.connectedComponents(pairs, checkpointDir = ckpt)) ==
+        labels(Dedup.connectedComponents(pairs)))
+      assert(labels(Dedup.connectedComponentsStar(pairs,
+        checkpointDir = ckpt)) == labels(Dedup.connectedComponentsStar(pairs)))
+    } finally {
+      scala.reflect.io.Directory(dir.toFile).deleteRecursively()
     }
   }
 
